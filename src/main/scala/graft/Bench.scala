@@ -154,33 +154,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("1")) return runForked(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // see Sessions.local: partition count should track shuffle volume;
-    // the env knob is the local stand-in for that cluster-sizing rule
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Spill, don't die: by default SMJ/cartesian buffer all rows of one
-      // join key on-heap (ExternalAppendOnlyUnsafeRowArray stays an
-      // ArrayBuffer until this row threshold), so one hot key at a big sf
-      // is an executor OOM — seen at sf10, stage-1030 smj_findNextJoinRows.
-      // Past the threshold the buffer becomes an UnsafeExternalSorter,
-      // which spills under memory pressure. Same setting in Sessions.local.
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", graft.Tuning.JoinBufferSpillRows.toString)
-      .config("spark.sql.cartesianProductExec.buffer.in.memory.threshold", graft.Tuning.JoinBufferSpillRows.toString)
-      // 238 query executions share this JVM; ContextCleaner reclaims old
-      // broadcasts/shuffles only after their weak refs are GC'd, and a
-      // large heap may not GC for many queries — stale executor state
-      // then inflates later queries (measured at sf10: q71 35 s in-suite
-      // vs 4.3 s solo). Default periodicGC is 30min; tighten it.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_BENCH_ONLY=<name[,name]>: bench a subset (the fork
     // children run exactly one query each)
     // SORTED name order, not Map order: a HashMap's iteration order

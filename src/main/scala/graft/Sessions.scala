@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * makes the same adjustment at src/common/spark_session.py:141), UTC,
   * AQE on. On a real cluster the same builder takes master from
   * spark-submit; nothing here is local-mode-specific except the default.
+  *
+  * The ONE session builder: tests, Bench, Verify and every tool main
+  * build their session here, so a setting added here reaches all of them.
   */
 object Sessions {
   def local(appName: String = "graft",
@@ -41,6 +44,13 @@ object Sessions {
       // (not heap) for pathological ones.
       .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", graft.Tuning.JoinBufferSpillRows.toString)
       .config("spark.sql.cartesianProductExec.buffer.in.memory.threshold", graft.Tuning.JoinBufferSpillRows.toString)
+      // A bench run shares one JVM across 238 query executions;
+      // ContextCleaner reclaims old broadcasts/shuffles only after their
+      // weak refs are GC'd, and a large heap may not GC for many queries —
+      // stale executor state then inflates later queries (measured at
+      // sf10: q71 35 s in-suite vs 4.3 s solo). Default periodicGC is
+      // 30min; tighten it.
+      .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,29 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names to dump (local debugging)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts flavor varies by testdata generation: TIMESTAMP(NANOS)
-      // reads as long (normalized in Tables.events), naive micros reads
-      // directly as TIMESTAMP via the two configs below.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Spill, don't die (parity with Sessions.local/Bench): without the
-      // row threshold, SMJ buffers one join key's rows in an on-heap
-      // ArrayBuffer; at sf10 the census exhausts the heap and even the
-      // spill() call can't allocate (SPILL_OUT_OF_MEMORY, stage 43 —
-      // seen r9 dumping q123 at sf10 through Verify, which was the one
-      // session builder missing these).
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold",
-        graft.Tuning.JoinBufferSpillRows.toString)
-      .config("spark.sql.cartesianProductExec.buffer.in.memory.threshold",
-        graft.Tuning.JoinBufferSpillRows.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-verify", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1758,7 +1758,7 @@ object Dedup {
     * plans with no exchange on g. The bucketBy shuffle is paid once at
     * ingest; q125's twin measured that trade at 1000× consumer-shuffle
     * reduction at sf10 (BENCHMARKS.md "Bucketed index measured"), and
-    * tools.ShingleIndexBench records this family's own A/B. */
+    * BENCHMARKS.md "Bucketed shingle index" records this family's own A/B. */
   def qShingleBucketed(spark: SparkSession, d: String): DataFrame = {
     val (table, (nDocs, nPostings)) = ensureShingleBucketed(spark, d)
     val posting = shinglePostingsBucketed(spark, table)

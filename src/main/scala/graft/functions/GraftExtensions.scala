@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SQL registration of the custom Catalyst expressions, two ways:
   *
   *  - [[Registry.register]] — imperative, for an existing session
-  *    (`SELECT simhash64(...)` from spark.sql afterwards);
+  *    (`SELECT simhash64(...)` from spark.sql afterwards); functions only;
   *  - [[GraftExtensions]] — `SparkSessionExtensions` injection for
   *    `spark.sql.extensions=graft.functions.GraftExtensions`, the
-  *    cluster-wide deployment path (SURVEY §7.4(c) registration point —
-  *    no planner strategies needed yet, functions only).
+  *    cluster-wide deployment path (SURVEY §7.4(c) registration point):
+  *    the functions plus the [[RewriteTokenize]] optimizer rule and the
+  *    [[graft.plans.IntervalJoinStrategy]] planner strategy.
   */
 object Registry {
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(

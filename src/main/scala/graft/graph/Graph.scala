@@ -101,7 +101,7 @@ object Graph {
     * directed from its lower (degree, id) endpoint to the higher, with
     * t's degree carried so wedge generation can order out-neighbors by
     * π without another join. Shared by [[trianglesOriented]] and the
-    * disk-bounded K-pass census (tools.TriangleCensusDump). */
+    * disk-bounded K-pass census (BENCHMARKS.md "Oriented oracle port"). */
   def orientedEdges(edges: DataFrame): DataFrame =
     orientedFromCanonical(canonicalUndirected(edges))
 

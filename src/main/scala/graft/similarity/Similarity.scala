@@ -369,7 +369,7 @@ object Similarity {
     * O(log n) rounds) over only the DUP edges.
     *
     * The `planes` dial must GROW with log₂(corpus), and for two measured
-    * reasons, not one (tools.SemDedupProbe, sf0.1 n=2k → sf1 n=20k):
+    * reasons, not one (BENCHMARKS.md "planes dial", sf0.1 n=2k → sf1 n=20k):
     *  - COST: candidate pairs ~ n²/2^planes. Fixed planes=8 at 10× the
     *    corpus grew candidates 9,155 → 912,731 (100×, exactly
     *    quadratic); planes=12 (+log₂ 10) held them to 77,574 (8.5×,
@@ -454,8 +454,8 @@ object Similarity {
     * treatment (q132's `deriveRareGramCap`) applied to semantic dedup's
     * one scale knob. Candidate pairs grow ~n²/2^planes, so holding them
     * ~linear in n needs planes to rise with log₂(n); this formula
-    * reproduces the MEASURED ladder exactly (tools.SemDedupProbe,
-    * BENCHMARKS "planes dial": 2k → 8, 20k → 12, 200k → 15 — each the
+    * reproduces the MEASURED ladder exactly (BENCHMARKS.md
+    * "planes dial": 2k → 8, 20k → 12, 200k → 15 — each the
     * probed sweet spot at its scale, and the fixed-8 alternative at 20k
     * measured 100× the candidates and a 19,558/20,000 drop drift toward
     * the chain-collapse cliff).

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Sessions
 import graft.similarity.Pq
+import org.apache.spark.sql.GraftBridge
 
 /** Split-phase PQ benchmark: times q122's INGEST (codebook train + corpus
   * encode + codes write) apart from its QUERY (ADC scan over the standing
@@ -98,7 +99,7 @@ object PqBench {
         shortlistPairs = sp
         sec
       }
-      metrics.settle()
+      GraftBridge.drainListenerBus(spark)
       val batchSec = batchTimes.sum / reps
       println(s"""{"metric":"pq_batch_sweep","sf":"$sfDir","n_vectors":$n,""" +
         s""""q":$qn,"max_chunk":$maxChunk,"batch_sec":${ms(batchSec)},""" +

@@ -3,6 +3,7 @@ package graft.tools
 import graft.{Sessions, SparkEntry}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftBridge
 
 /** Ad-hoc probe: run the NAMED registry queries against a testdata dir,
   * once warm + once timed, printing per-query seconds PLUS the task-metric
@@ -19,7 +20,9 @@ object QueryProbe {
 
   /** Sums task metrics across all tasks between resets. Queries run
     * sequentially on the driver thread but task-end events arrive on the
-    * listener bus thread, so counters synchronize on the instance. */
+    * listener bus thread, so counters synchronize on the instance; read
+    * them after `GraftBridge.drainListenerBus`, which waits until every
+    * event of the finished action has been delivered. */
   final class TaskMetricsListener extends SparkListener {
     var shuffleRead, shuffleWrite, spillDisk, spillMem, input, tasks = 0L
     /** (stageId, name-head, wall ms, Σ task cpu ms, Σ task run ms, ntasks) —
@@ -55,19 +58,6 @@ object QueryProbe {
       shuffleRead = 0; shuffleWrite = 0; spillDisk = 0; spillMem = 0
       input = 0; tasks = 0; stages.clear()
     }
-    /** Block until the async listener bus has delivered every task event
-      * (its waitUntilEmpty is private[spark]; polling the task counter
-      * until it stops moving is the public-API equivalent) — call after
-      * driving a job to completion, before reading totals. One
-      * definition for every probe/bench that reads this listener. */
-    def settle(): Unit = {
-      var last = -1L
-      var cur = synchronized(tasks)
-      while (cur != last) {
-        last = cur; Thread.sleep(150)
-        cur = synchronized(tasks)
-      }
-    }
     def line: String = synchronized {
       f"tasks=$tasks shuffle_rd=$shuffleRead shuffle_wr=$shuffleWrite " +
         f"input=$input spill_mem=$spillMem spill_disk=$spillDisk"
@@ -89,7 +79,7 @@ object QueryProbe {
         val t0 = System.nanoTime()
         val cnt = fn(spark, d).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        metrics.settle()
+        GraftBridge.drainListenerBus(spark)
         println(f"PROBE $n rep=$r rows=$cnt sec=$sec%.2f ${metrics.line}")
         if (sys.env.contains("SPARK_GRAFT_PROBE_STAGES"))
           metrics.synchronized(metrics.stages.foreach(println))

@@ -39,14 +39,19 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.logical)
 
+  /** Block until the async listener bus has delivered every queued
+    * event (`waitUntilEmpty` is private[spark]) — call after an action,
+    * before reading what a listener accumulated from it. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Run `action` (typically a DataFrameWriter call) and return the
     * observed metrics named `name` from whichever QueryExecution the
     * action drove. A `df.write...` does NOT execute `df.queryExecution` —
     * the writer wraps the plan in a fresh QE around the insert command —
     * so `observe` counters on an ingest write are only reachable through
     * a QueryExecutionListener; delivery is async on the shared listener
-    * bus, hence the `waitUntilEmpty` flush (private[spark], the reason
-    * this lives in the bridge). */
+    * bus, hence the [[drainListenerBus]] flush. */
   def observedFromAction[T](spark: SparkSession, name: String)
                            (action: => T): (T, Option[Row]) = {
     val found = new java.util.concurrent.atomic.AtomicReference[Row]()
@@ -62,7 +67,7 @@ object GraftBridge {
     spark.listenerManager.register(listener)
     try {
       val r = action
-      spark.sparkContext.listenerBus.waitUntilEmpty()
+      drainListenerBus(spark)
       (r, Option(found.get))
     } finally spark.listenerManager.unregister(listener)
   }

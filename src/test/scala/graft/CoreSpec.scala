@@ -8,6 +8,18 @@ class CoreSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("Sessions.local carries the settings every graft session needs") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    for (op <- Seq("sortMergeJoinExec", "cartesianProductExec"))
+      assert(conf.get(s"spark.sql.$op.buffer.in.memory.threshold") ==
+        Tuning.JoinBufferSpillRows.toString, op)
+    // a SparkContext setting, not a SQL conf: read the context's conf
+    assert(spark.sparkContext.getConf.get("spark.cleaner.periodicGC.interval") == "60s")
+  }
+
   test("every registered query has rows at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
