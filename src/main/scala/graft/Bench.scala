@@ -51,10 +51,10 @@ object Bench {
     *
     * Entry: (ingest line name, registry queries that read the index,
     * ensure fn). The query set scopes the pass under
-    * SPARK_GRAFT_BENCH_ONLY / fork mode — a child benching one query
-    * builds only that query's indexes. Short ids x1…x7 keep the compact
-    * JSON line's one-prefix-per-entry convention collision-free. */
-  private val standingIngests
+    * SPARK_GRAFT_BENCH_ONLY — a run benching one query builds only that
+    * query's indexes. Short ids x1…x7 keep the compact JSON line's
+    * one-prefix-per-entry convention collision-free. */
+  private[graft] val standingIngests
       : Seq[(String, Set[String], (SparkSession, String) => String)] = Seq(
     ("x1_ingest_gram", Set("q125_gram_index"),
       (s, d) => { val (_, c) = graft.dedup.Dedup.ensureGramIndex(s, d)
@@ -87,76 +87,14 @@ object Bench {
           .map(_._2.trim.split(" ")(0)).getOrElse("?")
         s"planes=$planes n=$n kept=$kept" }))
 
-  /** Per-query JVM isolation (`SPARK_GRAFT_BENCH_FORK=1`): run every
-    * registry query in a FRESH child JVM and aggregate the children's
-    * JSON. In-suite numbers share one JVM across 242 executions, and
-    * ContextCleaner reclaims old broadcast/shuffle state only after GC —
-    * at sf≥1 that inflates late queries up to 8× vs solo (q71 35 s
-    * in-suite vs 4.3 s solo at sf10, BENCHMARKS.md). Forked numbers
-    * reproduce solo QueryProbe within noise, so regressions at big sf are
-    * attributable from the artifact alone. The default stays in-suite:
-    * at sf0.1 the distortion is ≤ noise and one JVM is ~10× cheaper than
-    * 121 session startups. */
-  private def runForked(sfDir: String): Unit = {
-    val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    // SPARK_GRAFT_BENCH_ONLY narrows the forked sweep the same way it
-    // narrows the in-suite pass (each child still gets exactly one name)
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(ns) =>
-        SparkEntry.queries.keys.toSeq.filter(ns.split(",").toSet).sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
-    val results = names.map { name =>
-      val cmd = (Seq(javaBin) ++ opens ++ Seq(
-        s"-Xmx${sys.env.getOrElse("SPARK_GRAFT_FORK_MEM", "8g")}",
-        "-Dspark.ui.enabled=false",
-        "-cp", System.getProperty("java.class.path"), "graft.Bench"))
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment.put("SPARK_GRAFT_BENCH_ONLY", name)
-      pb.environment.remove("SPARK_GRAFT_BENCH_FORK")
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      System.err.println(s"BENCH_FORK $name")
-      val p = pb.start()
-      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-      p.waitFor()
-      // child emits {"..."queries":{"<name>":sec}...}; pull the one number
-      val pat = ("\"" + java.util.regex.Pattern.quote(name) + "\":([0-9.]+)").r
-      val sec = pat.findFirstMatchIn(out).map(_.group(1).toDouble).getOrElse {
-        System.err.println(s"BENCH_FORK_FAIL $name (exit=${p.exitValue})"); -1.0
-      }
-      // propagate the child's own `failed` entries (its ingest pass —
-      // a dead ingest must reach the parent artifact's failed field, or
-      // fork mode silently reintroduces the quiet-red-gate class the
-      // ingest split exists to kill; r12 review find). xN timings are
-      // intentionally NOT aggregated: each child rebuilds its own
-      // indexes as per-JVM setup, so summing would overstate the
-      // once-per-corpus cost the in-suite xN lines price.
-      val childFailed = "\"failed\":\\[([^\\]]*)\\]".r
-        .findFirstMatchIn(out).map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-      (name, sec, childFailed)
-    }
-    // A dead child records -1.0; keep it OUT of the headline total (a
-    // negative sentinel summed in silently shrinks the number the judge
-    // reads) and name it in an explicit "failed" field instead.
-    val (ok, bad) = results.partition(_._2 >= 0)
-    val failed = (bad.map(_._1) ++ results.flatMap(_._3)).distinct
-    emit(ok.map(r => r._1 -> r._2).toMap, sfDir, failed)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("1")) return runForked(sfDir)
+    // Budgets reads its table when first touched: touch it now, so a
+    // missing or malformed table fails before the suite runs.
+    System.err.println(
+      s"BENCH_BUDGETS ${Budgets.TablePath} ${Budgets.Typicals.size} lines")
     val spark = Sessions.local("graft-bench", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // SPARK_GRAFT_BENCH_ONLY=<name[,name]>: bench a subset (the fork
-    // children run exactly one query each)
+    // SPARK_GRAFT_BENCH_ONLY=<name[,name]>: bench a subset
     // SORTED name order, not Map order: a HashMap's iteration order
     // reshuffles whenever the key SET changes, so adding one query used
     // to re-deal every query's in-suite neighborhood — r11 measured q14
@@ -217,33 +155,20 @@ object Bench {
     // timed pass then measures steady-state query compute, which is what a
     // long-lived cluster session sees. Progress goes to stderr so a JVM
     // death (OOM → SparkUncaughtExceptionHandler exits) names its query.
-    // SPARK_GRAFT_BENCH_NOWARM=1 skips it — for A/B sweeps of a config
-    // knob at big sf, where both arms are equally cold and a second full
-    // pass doubles the sweep's wall cost for no comparative signal.
     // Failures print (r11 verdict: the silent catch discarded the only
     // evidence when the driver box's warmup died mid-pass) but don't
     // abort — the timed pass will surface the same failure as BENCH_FAIL.
-    if (!sys.env.get("SPARK_GRAFT_BENCH_NOWARM").contains("1"))
-      queries.foreach { case (name, fn) =>
-        System.err.println(s"BENCH_WARM $name")
-        try fn(spark, sfDir).count() catch {
-          case e: Throwable => System.err.println(s"BENCH_WARM_FAIL $name: $e")
-        }
-        sweepLeakedBlocks()
+    queries.foreach { case (name, fn) =>
+      System.err.println(s"BENCH_WARM $name")
+      try fn(spark, sfDir).count() catch {
+        case e: Throwable => System.err.println(s"BENCH_WARM_FAIL $name: $e")
       }
+      sweepLeakedBlocks()
+    }
     // One explicit GC between passes: the timed pass starts from a clean
     // old gen instead of inheriting the warmup's garbage.
     System.gc()
     val observedOut = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_BENCH_GC_BEFORE=<name[,name]>: explicit System.gc()
-    // immediately before the named queries' timed runs — the r12
-    // experiment knob for the in-suite multiplier on the heavy-shuffle
-    // lines (q123/q124 read 2-3.4x their solo time late in a 134-query
-    // session; the hypothesis is accumulated old-gen state, and a
-    // pre-query full GC isolates it). Diagnostic only — not set by the
-    // driver; results recorded in BENCHMARKS.md.
-    val gcBefore = sys.env.get("SPARK_GRAFT_BENCH_GC_BEFORE")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
     // One timed execution of `name` — shared by the timed pass and the
     // solo-retry pass so both readings time the identical action
     // (collect for observed queries, count otherwise). stdout stays a
@@ -284,7 +209,6 @@ object Bench {
     }
     val results = queries.map { case (name, fn) =>
       System.err.println(s"BENCH_RUN $name")
-      if (gcBefore(name)) System.gc()
       val r = name -> runTimed(name, fn, harvest = true)
       sweepLeakedBlocks()
       r
@@ -296,76 +220,71 @@ object Bench {
     // shuffle volume (r12: q124 44.9 s in-suite vs 6.1-7.6 s solo), and
     // check_bench's whole-suite box factor cannot catch a window that
     // degrades MID-RUN. So Bench itself adjudicates: compute the exact
-    // budget model the gate uses (graft.Budgets == check_bench.py,
-    // lockstep pinned by BudgetSyncSpec), and re-run each over-budget
-    // QUERY line once, solo, at the end of the suite — quiet-tail timing
-    // with a fresh GC, the same action, the same JVM warmth. Both
-    // readings ship in the artifact (`retry` field); check_bench passes
+    // budget model the gate uses (graft.Budgets reads the same
+    // tools/bench_budgets.txt as check_bench.py), and re-run each
+    // over-budget QUERY line once, solo, at the end of the suite —
+    // quiet-tail timing with a fresh GC, the same action, the same JVM
+    // warmth. Both readings ship in the artifact (`retry` field); check_bench passes
     // the line as NOISY when the retry is within budget and keeps FAIL
     // when it is not (a real plan regression is slow twice). Ingest
     // lines retry too since r14, by REBUILDING into a fresh scratch
     // generation (a same-root re-run would measure the validity-marker
     // reuse no-op, not the build) — see the ingestRetries block below.
-    val retry =
-      if (sys.env.get("SPARK_GRAFT_BENCH_NORETRY").contains("1")) Nil
-      else {
-        val box = Budgets.boxFactor(ingestResults ++ results)
-        val qmap = queries.toMap
-        val queryRetries = results
-          .filter { case (n, sec) => sec > Budgets.budget(n, box) }
-          .map { case (name, sec) =>
-            System.err.println(
-              f"BENCH_RETRY $name (in-suite $sec%.2fs > budget " +
-                f"${Budgets.budget(name, box)}%.2fs at box $box%.2f)")
-            System.gc()
-            val r = name -> runTimed(name, qmap(name), harvest = false)
-            sweepLeakedBlocks()
-            r
-          }
-        // INGEST-line retry (r13 verdict item #8): xN lines build
-        // persistent standing state, so a same-root re-run would time
-        // the validity-marker reuse no-op. Bump the Scratch GENERATION
-        // once — every subsequent root/table resolves fresh — and
-        // rebuild, which measures exactly what the in-suite line
-        // measured (a cold build). Runs AFTER the query retries so
-        // those still serve from the originally built indexes. The
-        // fresh roots join the same shutdown-hook cleanup.
-        val ingestOver = ingestResults
-          .filter { case (n, sec) => sec > Budgets.budget(n, box) }
-        val ingestRetries = if (ingestOver.isEmpty) Nil else {
-          graft.ops.Scratch.bumpGeneration()
-          val ifns = standingIngests.map(t => (t._1, t._3)).toMap
-          ingestOver.flatMap { case (name, sec) =>
-            System.err.println(
-              f"BENCH_RETRY $name (ingest, fresh scratch generation; " +
-                f"in-suite $sec%.2fs > budget " +
-                f"${Budgets.budget(name, box)}%.2fs at box $box%.2f)")
-            System.gc()
-            val t0 = System.nanoTime()
-            try {
-              ifns(name)(spark, sfDir)
-              val r = name -> (System.nanoTime() - t0) / 1e9
-              sweepLeakedBlocks()
-              Some(r)
-            } catch {
-              case e: Throwable =>
-                // LOUD, and no retry reading ships: a crashed rebuild's
-                // time-to-throw would otherwise adjudicate the line as
-                // NOISY (a fast failure is always "within budget") —
-                // the quiet-red-gate class the in-suite ingest pass's
-                // `failed` field exists to kill. Recording the name in
-                // `failed` makes check_bench exit 1 regardless.
-                System.err.println(s"BENCH_RETRY_FAIL $name: $e")
-                ingestFailed += name
-                None
-            }
-          }
-        }
-        queryRetries ++ ingestRetries
+    val box = Budgets.boxFactor(ingestResults ++ results)
+    val qmap = queries.toMap
+    val queryRetries = results
+      .filter { case (n, sec) => sec > Budgets.budget(n, box) }
+      .map { case (name, sec) =>
+        System.err.println(
+          f"BENCH_RETRY $name (in-suite $sec%.2fs > budget " +
+            f"${Budgets.budget(name, box)}%.2fs at box $box%.2f)")
+        System.gc()
+        val r = name -> runTimed(name, qmap(name), harvest = false)
+        sweepLeakedBlocks()
+        r
       }
+    // INGEST-line retry (r13 verdict item #8): xN lines build
+    // persistent standing state, so a same-root re-run would time
+    // the validity-marker reuse no-op. Bump the Scratch GENERATION
+    // once — every subsequent root/table resolves fresh — and
+    // rebuild, which measures exactly what the in-suite line
+    // measured (a cold build). Runs AFTER the query retries so
+    // those still serve from the originally built indexes. The
+    // fresh roots join the same shutdown-hook cleanup.
+    val ingestOver = ingestResults
+      .filter { case (n, sec) => sec > Budgets.budget(n, box) }
+    val ingestRetries = if (ingestOver.isEmpty) Nil else {
+      graft.ops.Scratch.bumpGeneration()
+      val ifns = standingIngests.map(t => (t._1, t._3)).toMap
+      ingestOver.flatMap { case (name, sec) =>
+        System.err.println(
+          f"BENCH_RETRY $name (ingest, fresh scratch generation; " +
+            f"in-suite $sec%.2fs > budget " +
+            f"${Budgets.budget(name, box)}%.2fs at box $box%.2f)")
+        System.gc()
+        val t0 = System.nanoTime()
+        try {
+          ifns(name)(spark, sfDir)
+          val r = name -> (System.nanoTime() - t0) / 1e9
+          sweepLeakedBlocks()
+          Some(r)
+        } catch {
+          case e: Throwable =>
+            // LOUD, and no retry reading ships: a crashed rebuild's
+            // time-to-throw would otherwise adjudicate the line as
+            // NOISY (a fast failure is always "within budget") —
+            // the quiet-red-gate class the in-suite ingest pass's
+            // `failed` field exists to kill. Recording the name in
+            // `failed` makes check_bench exit 1 regardless.
+            System.err.println(s"BENCH_RETRY_FAIL $name: $e")
+            ingestFailed += name
+            None
+        }
+      }
+    }
     emit((ingestResults ++ results).toMap, sfDir,
       failed = ingestFailed.toSeq, observed = observedOut.toSeq,
-      retry = retry)
+      retry = queryRetries ++ ingestRetries)
     spark.stop()
   }
 

@@ -3,13 +3,12 @@ package graft
 /** The bench budget model, shared between [[Bench]]'s solo-retry
   * adjudication and `tools/check_bench.py`'s gate (r12 verdict task #1).
   *
-  * WHY TWO COPIES: the gate is a standalone Python script the driver runs
-  * against a raw stdout capture (no JVM), while Bench needs the same
-  * budgets IN-PROCESS to decide which over-budget lines to re-run solo
-  * before the JVM exits. The tables are kept in lockstep by
-  * BudgetSyncSpec, which parses check_bench.py's TYPICAL dict and the
-  * three constants and asserts equality — an edit to either side fails
-  * the build until the other follows.
+  * ONE TABLE: the numbers live in `tools/bench_budgets.txt`, which both
+  * sides read — the gate is a standalone Python script run against a raw
+  * stdout capture (no JVM), while Bench needs the same budgets IN-PROCESS
+  * to decide which over-budget lines to re-run solo before the JVM exits.
+  * The path is relative to the working directory, the repo root under
+  * both sbt and `tools/run_main.sh`.
   *
   * THE MODEL (identical math to check_bench.py): per-query budget =
   * max(FloorSec, typical x Headroom) x box, where box is the clamped
@@ -17,72 +16,47 @@ package graft
   * slow box moves all budgets together; a single regressed query still
   * sticks out against the suite median. */
 object Budgets {
-  val Typical: Map[String, Double] = Map(
-    "q01_pricing_summary" -> 1.6,
-    "q07_selfjoin_2hop" -> 2.4,
-    "q103_simjoin_prefix" -> 2.1,
-    "q108_bpe_train" -> 3.0,
-    "q112_bpe_encode" -> 3.0,
-    "q39_media_features" -> 1.8,
-    "q69_approx_quantiles" -> 2.0,
-    "q31_ngram_jaccard" -> 1.8,
-    "q73_dedup_clusters" -> 4.5,
-    "q132_simjoin_rarecap" -> 1.5,
-    "q133_semdedup" -> 4.5,
-    "q135_semdedup_kmeans" -> 7.0,
-    "q81_edit_distance" -> 2.2,
-    "q123_triangles" -> 10.0,
-    "q124_triangles_sampled" -> 10.5,
-    "q89_pagerank" -> 1.5,
-    "q104_pq_ann" -> 3.5,
-    "q126_pq_batch" -> 1.5,
-    "q122_pq_scan" -> 1.0,
-    "x1_ingest_gram" -> 5.5,
-    "x2_ingest_shingle" -> 2.1,
-    "x3_ingest_shingle_bkt" -> 8.5,
-    "x4_ingest_pq" -> 8.2,
-    "x5_ingest_ivfpq" -> 5.4,
-    "x6_ingest_ivfpq_res" -> 5.8,
-    "x7_ingest_semdedup" -> 3.3,
-    "q101_fasta_roundtrip" -> 1.0,
-    "q44_partition_pruning" -> 1.5,
-    "q114_bm25_rerank" -> 1.2,
-    "q66_unigram_lm" -> 0.7,
-    "q96_dataset_build" -> 1.0,
-    "q71_heavy_hitters" -> 1.0,
-    "q56_curation" -> 0.7,
-    "q59_minhash_verify" -> 3.2,
-    "q52_percentiles" -> 1.5,
-    "q120_percentiles_buckets" -> 1.4,
-    "q98_global_curriculum" -> 2.0,
-    "q107_winsorized" -> 1.6,
-    "q121_winsorized_buckets" -> 1.6,
-    "q109_bigram_lm" -> 1.8,
-    "q110_skew_report" -> 1.5,
-    "q93_ntile_curriculum" -> 1.5,
-    "q87_dup_coverage" -> 1.3,
-    "q125_gram_index" -> 1.8,
-    "q127_shingle_index" -> 2.8,
-    "q128_shingle_bucketed" -> 3.3,
-    "q131_ivf_pq_residual" -> 2.0,
-    "q129_ivf_pq" -> 2.0,
-    "q130_triangles_budget" -> 4.0,
-    "q68_boilerplate" -> 1.2,
-    "q82_regional_revenue" -> 1.2,
-    "q62_contamination" -> 1.2,
-    "q119_decontaminate" -> 1.3,
-    "q29_tf_idf" -> 1.0,
-    "q46_ivf_ann" -> 1.0,
-    "q102_bm25" -> 1.1,
-    "q79_cohorts" -> 0.9,
-    "q48_topn_per_group" -> 0.9,
-    "q51_inverted_index" -> 0.7)
+  val TablePath = "tools/bench_budgets.txt"
 
-  val DefaultTypical = 0.5
-  val Headroom = 2.5
-  val FloorSec = 1.5
+  /** The model constants; every other name in the table is a per-line
+    * typical. */
+  private val Constants = Seq("DEFAULT_TYPICAL", "HEADROOM", "FLOOR_SEC")
 
-  def typical(name: String): Double = Typical.getOrElse(name, DefaultTypical)
+  private val Entry = """([A-Za-z0-9_]+)\s+([0-9]+(?:\.[0-9]+)?)""".r
+
+  /** Parse the budget table (`name seconds` per line, `#` comments) into
+    * name -> seconds, in check_bench.py's `load_budgets` grammar. A
+    * malformed or repeated line throws, naming `source`, the line number
+    * and the line. */
+  def parse(lines: Seq[String], source: String): Map[String, Double] = {
+    val table = lines.zipWithIndex.foldLeft(Map.empty[String, Double]) {
+      case (acc, (line, i)) =>
+        line.takeWhile(_ != '#').trim match {
+          case "" => acc
+          case Entry(name, sec) if !acc.contains(name) =>
+            acc + (name -> sec.toDouble)
+          case _ => throw new IllegalArgumentException(
+            s"$source:${i + 1}: malformed budget line '$line' " +
+              "(want `name seconds`, each name once)")
+        }
+    }
+    for (c <- Constants if !table.contains(c))
+      throw new IllegalArgumentException(s"$source: missing $c")
+    table
+  }
+
+  private val table: Map[String, Double] = {
+    val src = scala.io.Source.fromFile(TablePath, "UTF-8")
+    try parse(src.getLines().toSeq, TablePath) finally src.close()
+  }
+
+  /** Per-line typical seconds: a registry query or `xN_ingest_*` line. */
+  val Typicals: Map[String, Double] = table -- Constants
+  val DefaultTypical: Double = table("DEFAULT_TYPICAL")
+  val Headroom: Double = table("HEADROOM")
+  val FloorSec: Double = table("FLOOR_SEC")
+
+  def typical(name: String): Double = Typicals.getOrElse(name, DefaultTypical)
 
   /** Clamped median of observed/typical — check_bench.py's box factor,
     * bit-for-bit: upper median (ratios(n/2) on the sorted seq), clamped

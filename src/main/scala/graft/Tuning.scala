@@ -5,19 +5,15 @@ package graft
   * measured" pointer on each constant; the full table lives in SCALING.md
   * §"Tuning constants"), and every one of them is the kind of number that
   * needs RETUNING when the hardware changes — a 100× cluster re-derives
-  * them from its own probes, which should be an env override
-  * (`GRAFT_<NAME>`), never a five-file source edit.
+  * them from its own probes. They are plain constants: nothing in the
+  * repo runs with other values, and retuning is a one-file edit here,
+  * never a five-file source edit.
   *
   * The constants stay REFERENCED from their algorithm's scaladoc (the
   * measurement story reads best next to the dispatch it drives); this
   * object is the single point of truth for the values.
   */
 object Tuning {
-  private def envLong(name: String, dflt: Long): Long =
-    sys.env.get(name).map(_.toLong).getOrElse(dflt)
-  private def envDouble(name: String, dflt: Double): Double =
-    sys.env.get(name).map(_.toDouble).getOrElse(dflt)
-
   /** Corpus size (vectors) above which PQ training-sample collection and
     * the encode scan repartition to core count instead of inheriting file
     * parallelism. Measured fork points (BENCHMARKS.md round-7 "PQ fan-out
@@ -25,8 +21,7 @@ object Tuning {
     * loses — repartition overhead beats the extra cores), 200k +1.7×
     * (wins); 128k sits between the measured arms. Used by
     * [[graft.similarity.Pq]]. */
-  val PqFanoutGateVectors: Long =
-    envLong("GRAFT_PQ_FANOUT_GATE_VECTORS", 128L * 1024)
+  val PqFanoutGateVectors: Long = 128L * 1024
 
   /** Largest per-group row count the window-rank (single-task-per-group
     * sort) exact-percentile form may handle before bucket selection takes
@@ -34,8 +29,7 @@ object Tuning {
     * sort wins at 0.3M, loses 3× at 3M, 5× at 30M — BENCHMARKS.md round-7
     * percentile table); 512k sits just under it and is also a comfortable
     * single-task sort memory-wise. Used by [[graft.ops.Percentiles]]. */
-  val SortPathMaxGroupRows: Long =
-    envLong("GRAFT_SORT_PATH_MAX_GROUP_ROWS", 512L * 1024)
+  val SortPathMaxGroupRows: Long = 512L * 1024
 
   /** Largest pair-rows-per-posting ratio (Σ df·(df−1)/2 over Σ df) at
     * which the posting-count similarity-join regime is still preferred
@@ -44,8 +38,7 @@ object Tuning {
     * posting-count wins 1.5–3× at every probed τ; one planted hot gram
     * pushes the ratio to 51.5 where prefix wins 2.9× at 5k docs and
     * diverges df² vs linear beyond. Used by [[graft.dedup.Dedup]]. */
-  val PostingMaxPairRowsPerPosting: Double =
-    envDouble("GRAFT_POSTING_MAX_PAIR_ROWS_PER_POSTING", 16.0)
+  val PostingMaxPairRowsPerPosting: Double = 16.0
 
   /** Target bytes per FASTA output file; write fan-out = max(cores,
     * estimated bytes / this). The round-7 sf10 sweep caught the constant
@@ -54,8 +47,7 @@ object Tuning {
     * parquet-side maxPartitionBytes convention — big enough that file
     * count tracks volume, small enough that one file is one task's write.
     * Used by [[graft.sources.Fasta.write]]. */
-  val FastaWriteTargetBytes: Long =
-    envLong("GRAFT_FASTA_WRITE_TARGET_BYTES", 64L << 20)
+  val FastaWriteTargetBytes: Long = 64L << 20
 
   /** Largest query-batch size adcTopKBatch evaluates in ONE plan before
     * chunking. HISTORY: through r11 the batched projection computed Q
@@ -81,8 +73,7 @@ object Tuning {
     * equal at toy sf but pays ceil(Q/chunk)−1 extra FULL corpus scans
     * at real scale). BENCHMARKS r13 has the sweep table.
     * Used by [[graft.similarity.Pq.adcTopKBatch]]. */
-  val AdcBatchMaxQ: Int =
-    envLong("GRAFT_ADC_BATCH_MAX_Q", 2048L).toInt
+  val AdcBatchMaxQ: Int = 2048
 
   /** The IVF-PQ batch path's chunk ceiling ([[graft.similarity.IvfPq
     * .ivfPqTopKBatch]]) — SEPARATE from [[AdcBatchMaxQ]] because its
@@ -92,8 +83,7 @@ object Tuning {
     * partition-pruned index, scanned volume — not plan width — is the
     * 10¹¹-vector cost, so chunks stay small; the r12 explode-first
     * scorer removed the codegen reason to chunk, not the pruning one. */
-  val IvfPqBatchMaxQ: Int =
-    envLong("GRAFT_IVFPQ_BATCH_MAX_Q", 32L).toInt
+  val IvfPqBatchMaxQ: Int = 32
 
   /** Appended-mass fraction past which an IVF-PQ index should retrain
     * (the model-drift contract, r12 verdict task #7). The PQ codebooks
@@ -104,10 +94,8 @@ object Tuning {
     * operational threshold (Jégou et al. §V; FAISS practice; COVERAGE.md
     * drift note). [[graft.similarity.IvfPq.ivfPqAppend]] warns on stderr
     * at the crossing; [[graft.similarity.IvfPq.ivfPqDrift]] exposes the
-    * fraction programmatically. Env knob: the fraction × 100 (percent),
-    * because envLong is the established integer-only surface here. */
-  val IvfPqRetrainFraction: Double =
-    envLong("GRAFT_IVFPQ_RETRAIN_PCT", 25L) / 100.0
+    * fraction programmatically. */
+  val IvfPqRetrainFraction: Double = 0.25
 
   /** Corpus size (vectors) at or above which the similarity family's
     * signature/assignment map work fans out to core count when the
@@ -119,8 +107,7 @@ object Tuning {
     * sf0.1 (2k vectors) it LOSES ~0.3–1 s (the ~250 extra tasks cost
     * more than the ~0.1 s of spread CPU). 10k sits between the
     * measured arms, the [[PqFanoutGateVectors]] discipline. */
-  val SimFanoutGateRows: Long =
-    envLong("GRAFT_SIM_FANOUT_GATE_ROWS", 10L * 1024)
+  val SimFanoutGateRows: Long = 10L * 1024
 
   /** Cap on the triangle census's wedge-prefilter Bloom sketch
     * ([[graft.graph.Graph.trianglesOriented]], r13; broadcast transport
@@ -137,8 +124,7 @@ object Tuning {
     * wrong row). Measured at sf0.1: 41.1M wedges → ~0.3% close.
     * Executors with more headroom can raise this to hold 1% on
     * billion-edge graphs (~1.2 GB). */
-  val TriangleBloomMaxBits: Long =
-    envLong("GRAFT_TRIANGLE_BLOOM_MAX_BITS", 1L << 31)
+  val TriangleBloomMaxBits: Long = 1L << 31
 
   /** Edge count up to which the triangle census lets the planner
     * BROADCAST census-join sides (the degree table, the closing edge
@@ -155,8 +141,7 @@ object Tuning {
     * target) enjoys AT ANY CORPUS SIZE by construction; past the gate,
     * sort-merge, the shape the full q123/q124 censuses always planned
     * before the estimate got small. */
-  val TriangleBroadcastMaxEdges: Long =
-    envLong("GRAFT_TRIANGLE_BCAST_MAX_EDGES", 1L << 19)
+  val TriangleBroadcastMaxEdges: Long = 1L << 19
 
   /** Row count past which SMJ/cartesian per-key match buffers switch from
     * an on-heap ArrayBuffer to a spillable UnsafeExternalSorter
@@ -167,6 +152,5 @@ object Tuning {
     * MB for the widest buffered rows here: negligible for normal keys,
     * disk instead of heap for pathological ones. Used by
     * [[graft.Sessions]] and [[graft.Bench]]. */
-  val JoinBufferSpillRows: Long =
-    envLong("GRAFT_JOIN_BUFFER_SPILL_ROWS", 65536L)
+  val JoinBufferSpillRows: Long = 65536L
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.GraftBridge
 /** Ad-hoc probe: run the NAMED registry queries against a testdata dir,
   * once warm + once timed, printing per-query seconds PLUS the task-metric
   * totals that actually pin a query's scale behavior — shuffle read/write
-  * bytes, spill, and input bytes. Wall time on a shared box swings ±2.5×
+  * bytes, spill, and input bytes — and one wall/cpu/gc/tasks line per
+  * stage. Wall time on a shared box swings ±2.5×
   * (BENCHMARKS.md), but shuffle BYTES are deterministic for a fixed plan
   * and dataset, so "does work grow linearly in sf?" is answered here, not
   * by the clock. The rig for isolating one query's regression or scaling
@@ -81,8 +82,7 @@ object QueryProbe {
         val sec = (System.nanoTime() - t0) / 1e9
         GraftBridge.drainListenerBus(spark)
         println(f"PROBE $n rep=$r rows=$cnt sec=$sec%.2f ${metrics.line}")
-        if (sys.env.contains("SPARK_GRAFT_PROBE_STAGES"))
-          metrics.synchronized(metrics.stages.foreach(println))
+        metrics.synchronized(metrics.stages.foreach(println))
       }
     }
     spark.stop()

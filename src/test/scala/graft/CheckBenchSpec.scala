@@ -4,14 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench gate's two halves, pinned together (r12 verdict task #1).
   *
-  * 1. BUDGET SYNC — [[Budgets]] exists because Bench must decide IN-
-  *    PROCESS which over-budget lines to solo-retry before its JVM
+  * 1. ONE BUDGET TABLE — [[Budgets]] exists because Bench must decide
+  *    IN-PROCESS which over-budget lines to solo-retry before its JVM
   *    exits, while the gate (`tools/check_bench.py`) is a standalone
-  *    script the driver runs on a stdout capture. Two copies of one
-  *    model only work if they cannot drift: this spec parses the Python
-  *    source's TYPICAL dict and constants and asserts bit-equality with
-  *    the Scala table, so an edit to either side fails the build until
-  *    the other follows.
+  *    script run on a stdout capture. Both read
+  *    `tools/bench_budgets.txt`; this spec checks that every name in it
+  *    is a line Bench can emit (a misspelled name would silently fall
+  *    back to DEFAULT_TYPICAL) and that both parsers reject a malformed
+  *    line by name.
   *
   * 2. ADJUDICATION — synthetic artifacts drive the real script end to
   *    end (python3 is on this box): an inflated line whose solo retry is
@@ -22,29 +22,41 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CheckBenchSpec extends AnyFunSuite {
 
-  private val pySource =
-    scala.io.Source.fromFile("tools/check_bench.py", "UTF-8").mkString
-
-  test("Budgets.Typical is in lockstep with check_bench.py's TYPICAL") {
-    val body = pySource.split("TYPICAL = \\{")(1).split("\n\\}")(0)
-    val pairs = """"([a-z0-9_]+)":\s*([0-9.]+)""".r
-      .findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    assert(pairs == Budgets.Typical,
-      s"drift: onlyPython=${pairs.keySet -- Budgets.Typical.keySet} " +
-        s"onlyScala=${Budgets.Typical.keySet -- pairs.keySet} " +
-        s"valueDiffs=${pairs.collect { case (k, v)
-          if Budgets.Typical.get(k).exists(_ != v) =>
-            s"$k py=$v scala=${Budgets.Typical(k)}" }}")
+  private def run(cmd: String*): (Int, String) = {
+    val out = new StringBuilder
+    val exit = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => { out ++= l; out += '\n' }))
+    (exit, out.toString)
   }
 
-  test("Budgets constants are in lockstep with check_bench.py's") {
-    def const(name: String): Double =
-      (name + """\s*=\s*([0-9.]+)""").r.findFirstMatchIn(pySource)
-        .map(_.group(1).toDouble)
-        .getOrElse(fail(s"constant $name not found in check_bench.py"))
-    assert(const("DEFAULT_TYPICAL") == Budgets.DefaultTypical)
-    assert(const("HEADROOM") == Budgets.Headroom)
-    assert(const("FLOOR_SEC") == Budgets.FloorSec)
+  test("budget table: every name is a registry query or a Bench ingest line") {
+    val lines = SparkEntry.queries.keySet ++ Bench.standingIngests.map(_._1)
+    val unknown = Budgets.Typicals.keySet -- lines
+    assert(unknown.isEmpty, s"budget names no bench line carries: $unknown")
+    assert(Budgets.Typicals.contains("q01_pricing_summary"))
+  }
+
+  test("budget table: both parsers reject a malformed line and name it") {
+    val good = Seq("# model", "DEFAULT_TYPICAL 0.5", "HEADROOM 2.5",
+      "FLOOR_SEC 1.5", "q01_pricing_summary 1.6  # flagship")
+    assert(Budgets.parse(good, "t")("q01_pricing_summary") == 1.6)
+    for (bad <- Seq("q07_selfjoin_2hop 2,4", "q07_selfjoin_2hop",
+      "q07_selfjoin_2hop 2.4 x", "q01_pricing_summary 1.6")) {
+      val e = intercept[IllegalArgumentException](
+        Budgets.parse(good :+ bad, "t.txt"))
+      assert(e.getMessage.contains(s"t.txt:6") &&
+        e.getMessage.contains(bad), e.getMessage)
+      val tmp = java.io.File.createTempFile("budgets", ".txt")
+      try {
+        java.nio.file.Files.write(tmp.toPath,
+          (good :+ bad).mkString("", "\n", "\n").getBytes("UTF-8"))
+        val (exit, out) = run("python3", "-c",
+          "import sys; sys.path.insert(0, 'tools'); import check_bench; " +
+            "check_bench.load_budgets(sys.argv[1])", tmp.getPath)
+        assert(exit != 0, out)
+        assert(out.contains(s"${tmp.getPath}:6") && out.contains(bad), out)
+      } finally { tmp.delete(); () }
+    }
   }
 
   test("boxFactor mirrors the Python median (upper median, clamped)") {
@@ -81,11 +93,7 @@ class CheckBenchSpec extends AnyFunSuite {
     val tmp = java.io.File.createTempFile("bench", ".json")
     try {
       java.nio.file.Files.write(tmp.toPath, artifactJson.getBytes("UTF-8"))
-      val out = new StringBuilder
-      val exit = scala.sys.process.Process(
-        Seq("python3", "tools/check_bench.py", tmp.getPath))
-        .!(scala.sys.process.ProcessLogger(l => { out ++= l; out += '\n' }))
-      (exit, out.toString)
+      run("python3", "tools/check_bench.py", tmp.getPath)
     } finally { tmp.delete(); () }
   }
 

@@ -22,9 +22,9 @@ A line whose retry is within budget prints NOISY (mid-run noisy-neighbor
 window — the shared host has multi-hour ones) and does not fail the gate;
 its retry reading also replaces the in-suite one in the total check. A
 retry still over budget fails loudly: a real regression is slow twice.
-The budget model here is mirrored in src/main/scala/graft/Budgets.scala
-(Bench needs it in-process to pick retry lines); BudgetSyncSpec parses
-this file and fails the build if the two tables drift.
+The budgets are read from tools/bench_budgets.txt, the one copy of the
+table: src/main/scala/graft/Budgets.scala reads the same file, because
+Bench needs the model in-process to pick its retry lines.
 
 Calibration: budgets derive from per-query TYPICAL times (measured sf0.1
 local[32] steady state) scaled by a BOX FACTOR computed at run time — the
@@ -35,184 +35,43 @@ suite median (no lost sensitivity — the failure mode of hard-coding
 doubled constants, which left ~2.5x headroom on a fast box).
 """
 import json
+import os
 import re
 import sys
 
-# Per-query typical seconds (sf0.1 steady state, reference box = the round-5
-# VM). Queries absent from this table use DEFAULT_TYPICAL. Regenerate by
-# pasting a quiet-box bench run: the VALUES matter only relatively — the box
-# factor rescales the whole table to the current machine.
-TYPICAL = {
-    "q01_pricing_summary": 1.6,   # r8: the flagship runs collect()+observe,
-                                  # which executes the REAL query — count()
-                                  # let Catalyst prune all seven decimal
-                                  # aggregates out of the timed plan (see
-                                  # BENCHMARKS "What count() actually
-                                  # times"); 0.5 was the pruned number
-    "q07_selfjoin_2hop": 2.4,     # slowest core query; see BENCHMARKS.md
-    "q103_simjoin_prefix": 2.1,   # df window + prefix join + verify join
-    "q108_bpe_train": 3.0,        # 8 driver-coordinated batched rounds:
-                                  # stage-latency bound, not data bound
-    "q112_bpe_encode": 3.0,       # q108's rounds plus the vocab-scale
-                                  # encode (r6: was 4.5 when the encode ran
-                                  # per occurrence; now aggregate-first)
-    "q39_media_features": 1.8,    # real PNG+WAV+GIF decode of every payload
-    "q69_approx_quantiles": 2.0,  # sketch + exact + rank-audit join
-    # r6: q31/q73/q81 run the lossless similarity join at tau=1/20; late
-    # r6 switched its low-tau verify from array-shipping to the
-    # posting-count plan (BENCHMARKS.md "second decade"), roughly halving
-    # their sf0.1 times again (measured 1.6/3.9/1.9 at cpus=8).
-    "q31_ngram_jaccard": 1.8,
-    "q73_dedup_clusters": 4.5,    # pair join + star-CC rounds
-    "q132_simjoin_rarecap": 1.5,  # standing-index read + rare-gram join
-                                  # (solo r11: steady 1.54-1.56s warm,
-                                  # 9.2 MB shuffle, volume-deterministic)
-    "q133_semdedup": 4.5,         # q73's cost class over embeddings:
-                                  # signature buckets + integer-exact
-                                  # threshold edges + star-CC rounds
-                                  # (solo r11: 4.4-4.7s warm, 374 KB
-                                  # shuffle - stage-latency bound)
-    "q135_semdedup_kmeans": 7.0,  # q133's pipeline with a TRAINED
-                                  # k-means bucket key: +3 training
-                                  # iterations (posexplode+groupBy+collect
-                                  # each) before the pair join + CC —
-                                  # stage-latency bound at toy sf (solo
-                                  # steady 7.3-9.4s warm, ~1 MB shuffle)
-    "q81_edit_distance": 2.2,
-    "q123_triangles": 10.0,       # exact triangle census of the dense
-                                  # co-order graph (degree-oriented plan;
-                                  # 412 MB wedge shuffle is the workload).
-                                  # Solo steady 5.5-6.4 at cpus=8; the
-                                  # IN-SUITE number this table calibrates
-                                  # against runs ~2x that (measured 12.7
-                                  # at box 0.76) — heaviest query in the
-                                  # suite, pays the accumulation tax
-    "q124_triangles_sampled": 10.5,  # r11: FUSED — one exact census pass
-                                  # computes both counts (a sampled
-                                  # triangle is an exact triangle whose 3
-                                  # edges pass the md5 coin), deleting the
-                                  # second census and its sparsified wedge
-                                  # stream; budget now tracks q123 plus a
-                                  # hair (solo steady 6.5-7.2 vs q123's
-                                  # 5.5-6.4). The sampled-only production
-                                  # path is q130 / BENCHMARKS.md "DOULION"
-    "q89_pagerank": 1.5,          # 10 chained iterations, stage-latency
-    "q104_pq_ann": 3.5,           # k-means jobs + 256-kernel encode
-                                  # (codegen compile dominates at toy SF).
-                                  # r9 adjudication of the r8 breach
-                                  # (5.21s vs 5.2s budget): solo QueryProbe
-                                  # 5 reps steady 2.2-2.7s with BYTE-
-                                  # IDENTICAL volume (shuffle 50KB, zero
-                                  # spill) — in-suite accumulation/jitter,
-                                  # the q92 class; 3.0 left zero margin
-    "q126_pq_batch": 1.5,         # r12: the SERVING path only — Bench's
-                                  # separately-timed ingest pass
-                                  # (x4_ingest_pq) always builds the
-                                  # standing codes before warmup, so the
-                                  # first-touch regime that made r10/r11
-                                  # gates red cannot land here anymore
-                                  # (measured 1.12 at box 0.79)
-    "q122_pq_scan": 1.0,          # r12: serving only, like q126
-                                  # (measured 0.51 at box 0.79)
-    # Bench's separately-timed standing-index INGEST lines (r12): each
-    # fresh Bench JVM force-builds every standing index before warmup, on
-    # these named lines — deterministic first-touch accounting (the r11
-    # verdict's task #1; two consecutive rounds were red because ingest
-    # landed on whichever query touched an index first). Ingest is always
-    # cold (per-app scratch roots), so these typicals describe the full
-    # build: tokenize/train/encode + write. Calibrated on the clean r12
-    # cpus=32 run at box 0.79.
-    "x1_ingest_gram": 5.5,        # 8-gram postings + df sidecar write
-    "x2_ingest_shingle": 2.1,     # 3-gram-hash sets, single sink
-    "x3_ingest_shingle_bkt": 8.5, # bucketBy(32, g) CTAS + sets sidecar
-    "x4_ingest_pq": 8.2,          # PQ codebook training + corpus encode
-    "x5_ingest_ivfpq": 5.4,       # + IVF centroids, partitioned write
-    "x6_ingest_ivfpq_res": 5.8,   # residual mode (same stages)
-    "x7_ingest_semdedup": 3.3,    # signatures + direct verdicts + base
-    "q101_fasta_roundtrip": 1.0,  # write-bound: renders + rewrites corpus
-    "q44_partition_pruning": 1.5, # write-bound by design
-    "q114_bm25_rerank": 1.2,      # BM25 shortlist + pruned LM stage
-    "q66_unigram_lm": 0.7,        # measured steady state 0.7-1.2s (tf
-                                  # exchange reuse); 2.2s one-off was GC
-    "q96_dataset_build": 1.0,     # r9: recalibrated under the r8
-                                  # collect()+observe action (r8 in-suite
-                                  # 1.01 at box 0.69; solo 0.75-0.84)
-    "q71_heavy_hitters": 1.0,     # probed steady state 1.0-1.3s at cpus=32
-    "q56_curation": 0.7,
-    # r5: q59 became the recall contract — it runs the FULL lossless
-    # similarity join (tau=1/20 -> posting-count plan since late r6) as
-    # its in-plan exact side, plus the LSH+verify pipeline it always ran
-    "q59_minhash_verify": 3.2,
-    "q52_percentiles": 1.5,       # sort-based exact percentile
-    "q120_percentiles_buckets": 1.4,  # two-pass bucket selection (q52's
-                                  # scale-path twin; group-size-free)
-    "q98_global_curriculum": 2.0, # two exact-percentile window families
-    "q107_winsorized": 1.6,       # nearest-rank thresholds + clipped agg
-    "q121_winsorized_buckets": 1.6,  # same stats, bucket-selection
-                                  # thresholds (q107's scale-path twin)
-    "q109_bigram_lm": 1.8,        # bigram explode + three count joins
-    "q110_skew_report": 1.5,      # bucket-selection percentiles over the
-                                  # key table (r5: replaced the global
-                                  # rank window — more stages, no
-                                  # single-task sort)
-    "q93_ntile_curriculum": 1.5,  # per-lang quartile windows
-    "q87_dup_coverage": 1.3,      # 8-gram explode + df join
-    "q125_gram_index": 1.8,       # serving only since r12 (ingest on
-                                  # x1's line): answers q87+q62 from the
-                                  # standing postings
-    "q127_shingle_index": 2.8,    # answers q31's tau=1/20 top-20 AND
-                                  # q103's tau=1/2 join from the standing
-                                  # index (serving only; ingest on x2's
-                                  # line since r12)
-    "q128_shingle_bucketed": 3.3, # q127's consumers from the BUCKETED
-                                  # index (32-bucket scan trades AQE
-                                  # coalescing for exchange-free g joins
-                                  # — slightly slower than q127 at toy
-                                  # sf, 1.5x faster at sf1/sf10;
-                                  # measured 3.32 at box 0.87)
-    "q131_ivf_pq_residual": 2.0,  # r11: the residual (classic IVFADC)
-                                  # twin of q129, served through the
-                                  # residual BATCH plan; ingest on x6's
-                                  # line since r12. Solo probed steady
-                                  # 4.3-5.4s with tiny volume (45KB
-                                  # shuffle) — fixed stage latency, not
-                                  # data
-    "q129_ivf_pq": 2.0,           # composed IVF-PQ: the batched
-                                  # union-of-probes scan + the batch-mean
-                                  # recall contract's one exact corpus
-                                  # scan (ingest on x5's line since r12)
-    "q130_triangles_budget": 4.0, # budget-adaptive DOULION: co-order
-                                  # edge build + localCheckpoint + edge
-                                  # count probe + the sampled census at
-                                  # the derived fraction (112/1024 at
-                                  # sf0.1 — wedge stream ~p^2 of q123's)
-    "q68_boilerplate": 1.2,       # gram expansion + per-lang window top-k
-    "q82_regional_revenue": 1.2,  # six-table broadcast chain (r9: +0.1
-                                  # for the collect()+observe action —
-                                  # r8 in-suite 1.13 at box 0.69)
-    "q62_contamination": 1.2,
-    "q119_decontaminate": 1.3,    # q62's gram workload + the kept/dropped
-                                  # rollup — budget with q62, not DEFAULT
-    "q29_tf_idf": 1.0,
-    "q46_ivf_ann": 1.0,           # k-means training jobs
-    "q102_bm25": 1.1,
-    "q79_cohorts": 0.9,
-    "q48_topn_per_group": 0.9,
-    "q51_inverted_index": 0.7,  # r11: retired the r10 gate trip (1.33s vs
-                                # 1.32s floor-band budget) — solo probe
-                                # steady 0.49-0.73s with byte-identical
-                                # 1.8KB shuffle, zero spill (BENCHMARKS.md
-                                # variance); 0.7 keeps the budget off the
-                                # exact floor for a query whose solo tail
-                                # reaches 0.73s
-}
-DEFAULT_TYPICAL = 0.5   # every other query is sub-0.5s typical
-HEADROOM = 2.5          # per-query: beyond this x typical (box-adjusted)
-                        # it's a plan regression, not noise (measured
-                        # run-to-run noise is +/-25%, spikes to 2x on a
-                        # loaded box — BENCHMARKS.md "Run-to-run variance")
-FLOOR_SEC = 1.5         # never fail a query under this (box-adjusted):
-                        # scheduling jitter dominates sub-second queries
+# The model constants; every other name in the table is a per-line typical.
+CONSTANTS = ("DEFAULT_TYPICAL", "HEADROOM", "FLOOR_SEC")
+BUDGETS_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "bench_budgets.txt")
+_ENTRY = re.compile(r"([A-Za-z0-9_]+)\s+([0-9]+(?:\.[0-9]+)?)")
+
+
+def load_budgets(path):
+    """Parse the budget table into {name: seconds}. A malformed or repeated
+    line raises ValueError naming the file, the line number and the line."""
+    table = {}
+    with open(path, encoding="utf-8") as f:
+        for n, line in enumerate(f, 1):
+            entry = line.split("#", 1)[0].strip()
+            if not entry:
+                continue
+            m = _ENTRY.fullmatch(entry)
+            if m is None or m.group(1) in table:
+                raise ValueError(f"{path}:{n}: malformed budget line "
+                                 f"{line.rstrip()!r} (want `name seconds`, "
+                                 f"each name once)")
+            table[m.group(1)] = float(m.group(2))
+    for const in CONSTANTS:
+        if const not in table:
+            raise ValueError(f"{path}: missing {const}")
+    return table
+
+
+_BUDGETS = load_budgets(BUDGETS_FILE)
+TYPICAL = {k: v for k, v in _BUDGETS.items() if k not in CONSTANTS}
+DEFAULT_TYPICAL = _BUDGETS["DEFAULT_TYPICAL"]
+HEADROOM = _BUDGETS["HEADROOM"]
+FLOOR_SEC = _BUDGETS["FLOOR_SEC"]
 TOTAL_HEADROOM = 1.6    # suite total: tighter than per-query (noise
                         # averages out across ~114 queries)
 
