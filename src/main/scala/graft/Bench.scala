@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
 
   /** Flagship queries carry `ops.Observed` counters through the bench:
@@ -207,12 +209,20 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
+    // Janino compiles over the timed pass: a warm pass over plans the
+    // warmup already ran should compile (nearly) nothing, so a count that
+    // grows names a cache miss or per-call data inlined into generated
+    // source.
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val results = queries.map { case (name, fn) =>
       System.err.println(s"BENCH_RUN $name")
       val r = name -> runTimed(name, fn, harvest = true)
       sweepLeakedBlocks()
       r
     }
+    val codegen = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+      (CodeGenerator.compileTime - compileNs0) / 1000000L)
     // SOLO-RETRY adjudication (r12 verdict task #1). Three consecutive
     // rounds shipped a red gate on a line that probed fine solo — the
     // shared host has multi-hour noisy-neighbor windows where one query's
@@ -284,7 +294,7 @@ object Bench {
     }
     emit((ingestResults ++ results).toMap, sfDir,
       failed = ingestFailed.toSeq, observed = observedOut.toSeq,
-      retry = queryRetries ++ ingestRetries)
+      retry = queryRetries ++ ingestRetries, codegen = codegen)
     spark.stop()
   }
 
@@ -332,7 +342,8 @@ object Bench {
   private def emit(results: Map[String, Double], sfDir: String,
                    failed: Seq[String] = Nil,
                    observed: Seq[(String, String)] = Nil,
-                   retry: Seq[(String, Double)] = Nil): Unit = {
+                   retry: Seq[(String, Double)] = Nil,
+                   codegen: (Long, Long)): Unit = {
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
     val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
@@ -354,8 +365,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val meta = s""""n_queries":${results.size},"n_failed":${failed.size},""" +
       s""""unit":"sec","metric":"total","value":${ms(total)}"""
+    // the timed pass's compile count and time, verbose line only
+    val codegenJson =
+      s"""{"compiles":${codegen._1},"compile_ms":${codegen._2}}"""
     println(s"""{"queries":$qs,"failed":$failedJson,"observed":$obsJson,""" +
-      s""""retry":$retryVerbose,"sf":"$sfDir",$meta}""")
+      s""""retry":$retryVerbose,"codegen":$codegenJson,"sf":"$sfDir",$meta}""")
     val qms = results.toSeq.sortBy(_._2).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + math.rint(v * 1000).toLong
     }.mkString("{", ",", "}")

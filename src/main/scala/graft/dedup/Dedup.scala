@@ -1288,7 +1288,9 @@ object Dedup {
       // the SESSION conf, not the writer option (measured — a static
       // overwrite wipes every other batch), and mutating the shared
       // session would leak overwrite semantics to concurrent writers.
-      // Catalog entries live in shared state, so the clone sees `table`.
+      // Catalog entries live in shared state, so the clone sees `table`,
+      // and the executor classloader is shared too (artifact isolation
+      // is off in Sessions.local), so the insert reuses compiled classes.
       val scoped = org.apache.spark.sql.GraftBridge
         .cloneSession(spark)
       scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -385,7 +385,9 @@ object exprs {
     * raises could restore each other's values out of order. The clone
     * (same SparkContext, independent SQLConf copy) holds the raise for
     * exactly this action; the frame is re-rooted onto it over the same
-    * logical plan, so the work (and any cached fragment) is unchanged. */
+    * logical plan, so the work (and any cached fragment) is unchanged.
+    * The clone shares the executor classloader (artifact isolation is
+    * off in `Sessions.local`), so its tasks reuse compiled classes. */
   def bloomSketchBytes(src: org.apache.spark.sql.DataFrame,
                        value: Column, expectedItems: Long,
                        numBits: Long): Array[Byte] = {

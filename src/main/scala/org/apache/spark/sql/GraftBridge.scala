@@ -26,7 +26,11 @@ object GraftBridge {
     * to actions run through it — concurrent queries on the original
     * session never plan against the raised values, and two overlapping
     * scoped raises cannot restore each other's confs out of order (the
-    * failure mode of set-then-restore on the shared session). */
+    * failure mode of set-then-restore on the shared session). The clone
+    * also shares the executor classloader: `graft.Sessions.local` turns
+    * artifact isolation off, so a clone's tasks hit the codegen cache the
+    * parent filled instead of recompiling every class under a fresh
+    * per-session classloader (CoreSpec pins 0 new compiles). */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 

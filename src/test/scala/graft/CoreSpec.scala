@@ -18,6 +18,46 @@ class CoreSpec extends SparkSpec {
         Tuning.JoinBufferSpillRows.toString, op)
     // a SparkContext setting, not a SQL conf: read the context's conf
     assert(spark.sparkContext.getConf.get("spark.cleaner.periodicGC.interval") == "60s")
+    // the codegen cache's size, and clones sharing its classloader key
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4000")
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
+  }
+
+  test("a warm plan compiles no new class: rerun, session clone, second stream") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.{DataFrame, GraftBridge}
+    import org.apache.spark.sql.functions.{col, sum}
+    def compiles(body: => Unit): Long = {
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+    }
+    // a window, a filter and a sort: several generated classes
+    def query(): DataFrame = Core.q16WindowRank(spark, sf)
+    query().collect()
+    assert(compiles(query().collect()) == 0, "same query, run again")
+    assert(compiles(GraftBridge.withSession(query(),
+      GraftBridge.cloneSession(spark)).collect()) == 0,
+      "same query re-rooted onto a session clone")
+
+    // every streaming query runs its batches on a clone of the session
+    val in = java.nio.file.Files.createTempDirectory("graft-codegen-src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-codegen-ckpt").toString
+    spark.range(200).select(col("id"), (col("id") % 7).as("k"))
+      .write.mode("overwrite").parquet(in)
+    def stream(name: String): Unit = {
+      val q = spark.readStream.schema("id LONG, k LONG").parquet(in)
+        .writeStream
+        .option("checkpointLocation", s"$ckpt/$name")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.groupBy("k").agg(sum("id")).collect(); () }
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    stream("first")
+    assert(compiles(stream("second")) == 0,
+      "second stream over the same source and batch plan")
   }
 
   test("every registered query has rows at sf0.001") {
