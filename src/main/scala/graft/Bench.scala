@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
 
@@ -153,6 +154,39 @@ object Bench {
           name -> (System.nanoTime() - t0) / 1e9
       }
     }
+    val observedOut = scala.collection.mutable.LinkedHashMap[String, String]()
+    // One execution of `name`: the ONE action path, shared by the warmup,
+    // the timed pass and the solo-retry pass, so all three run the
+    // identical plan (collect for observed queries, count otherwise) and
+    // the warmup fills the codegen cache with the classes the timed pass
+    // uses. Throws on failure; the callers log it.
+    def runAction(name: String, fn: (SparkSession, String) => DataFrame,
+                  harvest: Boolean): Unit = {
+      val wrapped = observes.get(name).map(w => w(fn(spark, sfDir)))
+        .orElse(if (observedInPlan(name)) Some(fn(spark, sfDir)) else None)
+      wrapped match {
+        case Some(df) =>
+          df.collect()
+          // harvest EVERY named observation in the executed plan (the
+          // "obs" wrapper and any in-plan nodes), merged flat; a field
+          // name shared by several observations (q129's four per-query
+          // probe scans each count scanned_rows) is qualified by its
+          // observation name so the JSON object has no duplicate keys
+          val fields = df.queryExecution.observedMetrics.toSeq
+            .sortBy(_._1)
+            .flatMap { case (nm, row) =>
+              row.schema.fieldNames.zip(row.toSeq)
+                .map { case (f, v) => (nm, f, v) } }
+          val dup = fields.groupBy(_._2).collect {
+            case (f, vs) if vs.size > 1 => f }.toSet
+          if (harvest && fields.nonEmpty)
+            observedOut(name) = fields
+              .map { case (nm, f, v) =>
+                "\"" + (if (dup(f)) s"${nm}_$f" else f) + "\":" + jsonValue(v) }
+              .mkString("{", ",", "}")
+        case None => fn(spark, sfDir).count()
+      }
+    }
     // Warmup pass: JIT + codegen compilation + parquet footer caches. The
     // timed pass then measures steady-state query compute, which is what a
     // long-lived cluster session sees. Progress goes to stderr so a JVM
@@ -162,7 +196,7 @@ object Bench {
     // abort — the timed pass will surface the same failure as BENCH_FAIL.
     queries.foreach { case (name, fn) =>
       System.err.println(s"BENCH_WARM $name")
-      try fn(spark, sfDir).count() catch {
+      try runAction(name, fn, harvest = false) catch {
         case e: Throwable => System.err.println(s"BENCH_WARM_FAIL $name: $e")
       }
       sweepLeakedBlocks()
@@ -170,41 +204,14 @@ object Bench {
     // One explicit GC between passes: the timed pass starts from a clean
     // old gen instead of inheriting the warmup's garbage.
     System.gc()
-    val observedOut = scala.collection.mutable.LinkedHashMap[String, String]()
-    // One timed execution of `name` — shared by the timed pass and the
-    // solo-retry pass so both readings time the identical action
-    // (collect for observed queries, count otherwise). stdout stays a
-    // single JSON line; failures go to stderr so a broken query is
-    // visible instead of silently benching as wall-clock-to-throw.
+    // One timed execution of `name`, for the timed pass and the solo
+    // retry. stdout stays a single JSON line; failures go to stderr so a
+    // broken query is visible instead of silently benching as
+    // wall-clock-to-throw.
     def runTimed(name: String, fn: (SparkSession, String) => DataFrame,
                  harvest: Boolean): Double = {
       val t0 = System.nanoTime()
-      try {
-        val wrapped = observes.get(name).map(w => w(fn(spark, sfDir)))
-          .orElse(if (observedInPlan(name)) Some(fn(spark, sfDir)) else None)
-        wrapped match {
-          case Some(df) =>
-            df.collect()
-            // harvest EVERY named observation in the executed plan (the
-            // "obs" wrapper and any in-plan nodes), merged flat; a field
-            // name shared by several observations (q129's four per-query
-            // probe scans each count scanned_rows) is qualified by its
-            // observation name so the JSON object has no duplicate keys
-            val fields = df.queryExecution.observedMetrics.toSeq
-              .sortBy(_._1)
-              .flatMap { case (nm, row) =>
-                row.schema.fieldNames.zip(row.toSeq)
-                  .map { case (f, v) => (nm, f, v) } }
-            val dup = fields.groupBy(_._2).collect {
-              case (f, vs) if vs.size > 1 => f }.toSet
-            if (harvest && fields.nonEmpty)
-              observedOut(name) = fields
-                .map { case (nm, f, v) =>
-                  "\"" + (if (dup(f)) s"${nm}_$f" else f) + "\":" + jsonValue(v) }
-                .mkString("{", ",", "}")
-          case None => fn(spark, sfDir).count()
-        }
-      } catch {
+      try runAction(name, fn, harvest) catch {
         case e: Throwable => System.err.println(s"BENCH_FAIL $name: $e")
       }
       (System.nanoTime() - t0) / 1e9
@@ -215,6 +222,17 @@ object Bench {
     // source.
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compileNs0 = CodeGenerator.compileTime
+    // Spark jobs started over the timed pass: the driver round trips it
+    // paid. The bus is drained first so no warmup event is counted, and
+    // again after so every timed-pass event is.
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val jobCounter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(jobCounter)
     val results = queries.map { case (name, fn) =>
       System.err.println(s"BENCH_RUN $name")
       val r = name -> runTimed(name, fn, harvest = true)
@@ -223,6 +241,8 @@ object Bench {
     }
     val codegen = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
       (CodeGenerator.compileTime - compileNs0) / 1000000L)
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.removeSparkListener(jobCounter)
     // SOLO-RETRY adjudication (r12 verdict task #1). Three consecutive
     // rounds shipped a red gate on a line that probed fine solo — the
     // shared host has multi-hour noisy-neighbor windows where one query's
@@ -294,7 +314,8 @@ object Bench {
     }
     emit((ingestResults ++ results).toMap, sfDir,
       failed = ingestFailed.toSeq, observed = observedOut.toSeq,
-      retry = queryRetries ++ ingestRetries, codegen = codegen)
+      retry = queryRetries ++ ingestRetries, codegen = codegen,
+      jobs = jobs.get)
     spark.stop()
   }
 
@@ -343,7 +364,7 @@ object Bench {
                    failed: Seq[String] = Nil,
                    observed: Seq[(String, String)] = Nil,
                    retry: Seq[(String, Double)] = Nil,
-                   codegen: (Long, Long)): Unit = {
+                   codegen: (Long, Long), jobs: Long): Unit = {
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
     val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
@@ -365,11 +386,13 @@ object Bench {
     }.mkString("{", ",", "}")
     val meta = s""""n_queries":${results.size},"n_failed":${failed.size},""" +
       s""""unit":"sec","metric":"total","value":${ms(total)}"""
-    // the timed pass's compile count and time, verbose line only
+    // the timed pass's compile count and time and its job count, verbose
+    // line only
     val codegenJson =
       s"""{"compiles":${codegen._1},"compile_ms":${codegen._2}}"""
     println(s"""{"queries":$qs,"failed":$failedJson,"observed":$obsJson,""" +
-      s""""retry":$retryVerbose,"codegen":$codegenJson,"sf":"$sfDir",$meta}""")
+      s""""retry":$retryVerbose,"codegen":$codegenJson,"jobs":$jobs,""" +
+      s""""sf":"$sfDir",$meta}""")
     val qms = results.toSeq.sortBy(_._2).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + math.rint(v * 1000).toLong
     }.mkString("{", ",", "}")

@@ -5,6 +5,7 @@ import graft.text.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructType}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH (shingle → minhash → band → bucket join), SimHash
@@ -496,10 +497,18 @@ object Dedup {
     (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
   }
 
+  /** The standing shingle table's schema as [[shingleSets]] writes it
+    * and parquet reads it back (every field nullable). Scans read with it,
+    * so they run no footer-inference job; DedupSpec pins it against the
+    * inferred schema after an ingest and after an append. */
+  val ShingleIndexSchema: StructType = new StructType()
+    .add("doc_id", LongType).add("hs", ArrayType(LongType)).add("n", IntegerType)
+
   /** SCAN half: the standing shingle table (doc_id, hs, n) — flat ingest
     * layout or [[shingleIndexAppend]] batch subdirectories. */
   def shingleIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root)
+    spark.read.schema(ShingleIndexSchema)
+      .option("recursiveFileLookup", "true").parquet(root)
 
   /** Incremental maintenance of the standing shingle index: one batch's
     * (doc_id, hs, n) rows land in their own `batch_<id>` subdirectory,
@@ -1189,12 +1198,19 @@ object Dedup {
     (m.getLong(0), m.getLong(1))
   }
 
+  /** The standing postings table's schema as [[gramPostings]] writes it
+    * and parquet reads it back (every field nullable); scans read with it
+    * and run no footer-inference job (DedupSpec pins it). */
+  val GramIndexSchema: StructType = new StructType()
+    .add("doc_id", LongType).add("source", StringType).add("g", LongType)
+
   /** SCAN half: the standing postings table — the flat [[gramIndexIngest]]
     * layout, the per-batch [[gramIndexAppend]] subdirectories, or a mix
     * (recursive lookup reads both; batch dirs are plain subdirectories,
     * not hive partitions, so the schema never grows a phantom column). */
   def gramIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root)
+    spark.read.schema(GramIndexSchema)
+      .option("recursiveFileLookup", "true").parquet(root)
 
   /** BUCKETED ingest — the exchange-free cluster form the plain-parquet
     * scaladoc promised: postings saved as a bucketed+sorted table on `g`,
@@ -1360,6 +1376,12 @@ object Dedup {
   def gramDfState(postings: DataFrame): DataFrame =
     postings.groupBy("g").agg(count(lit(1)).as("df_part"))
 
+  /** The `<root>_df` sidecar's schema as [[gramDfState]] and
+    * [[gramIndexCompact]] write it and parquet reads it back; read with
+    * it by [[gramIndexDf]] (DedupSpec pins it). */
+  val GramDfSchema: StructType = new StructType()
+    .add("g", LongType).add("df_part", LongType)
+
   /** Incremental index maintenance: append one batch's postings to the
     * standing index PARTITION-WISE (the batch's postings never shuffle)
     * and its df partial state to the `<root>_df` sidecar (aggregating
@@ -1458,7 +1480,8 @@ object Dedup {
     * equals `gramPostings(allDocs).groupBy(g).count()` exactly, without
     * touching the postings (or the text) of any prior batch. */
   def gramIndexDf(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root + "_df")
+    spark.read.schema(GramDfSchema)
+      .option("recursiveFileLookup", "true").parquet(root + "_df")
       .groupBy("g").agg(sum(col("df_part")).as("df"))
 
   /** Sidecar COMPACTION: without it, [[gramIndexAppend]] accretes one df

@@ -182,6 +182,14 @@ object IndexFs {
     ()
   }
 
+  /** (qualified path, length, mtime) of `p` itself: one `getFileStatus`,
+    * no listing. Throws `FileNotFoundException` when `p` is missing. */
+  def stat(p: String): (String, Long, Long) = {
+    val (fs, path) = fsOf(p)
+    val st = fs.getFileStatus(path)
+    (fs.makeQualified(st.getPath).toString, st.getLen, st.getModificationTime)
+  }
+
   /** Recursive (path, length, mtime) stats under `p`, name-ordered — the
     * [[Standing.fingerprint]] walk. A missing path yields one (p, 0, 0)
     * row, matching the local predecessor's behavior for absent inputs. */

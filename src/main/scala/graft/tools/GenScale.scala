@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Sessions, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +66,7 @@ object GenScale {
   def scale(spark: org.apache.spark.sql.SparkSession, src: String, out: String,
             factor: Int, plantHeavy: Boolean = false): Seq[(String, Long)] = {
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables.load(spark, src, t)
     def write(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$out/$t.parquet")
 
@@ -158,6 +158,6 @@ object GenScale {
 
     Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-      .map(t => t -> spark.read.parquet(s"$out/$t.parquet").count())
+      .map(t => t -> Tables.load(spark, out, t).count())
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Sessions, Tables}
 import graft.streaming.Streams
 
 import org.apache.spark.sql.functions._
@@ -172,7 +172,7 @@ object StreamBench {
     // ---- pipeline 2: per-host admission cap (one long state per host)
     val out2 = s"$work/out_cap"; val ckpt2 = s"$work/ckpt_cap"
     val cap = 100
-    val allRows = spark.read.parquet(s"$sfDir/documents.parquet")
+    val allRows = Tables.documents(spark, sfDir)
     val capExpect = allRows.groupBy("source").count()
       .agg(sum(least(col("count"), lit(cap.toLong)))).head.getLong(0)
     val nHosts = allRows.select("source").distinct().count()

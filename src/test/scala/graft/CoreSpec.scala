@@ -60,6 +60,39 @@ class CoreSpec extends SparkSpec {
       "second stream over the same source and batch plan")
   }
 
+  test("a repeat harness-table load runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftBridge
+    Tables.orders(spark, sf) // the first load in this JVM infers, at most
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(counter)
+    val again = try {
+      val df = Tables.orders(spark, sf)
+      GraftBridge.drainListenerBus(spark)
+      df
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get == 0, "a repeat load must not re-read the footer")
+    assert(again.schema == spark.read.parquet(s"$sf/orders.parquet").schema)
+  }
+
+  test("a rewritten table is re-inferred") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    spark.range(3).write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id"))
+    spark.range(3).select(col("id"), (col("id") * 2).as("twice"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val reread = Tables.load(spark, dir, "t")
+    assert(reread.columns.toSeq == Seq("id", "twice"))
+    assert(reread.orderBy("id").collect().map(_.getLong(1)).toSeq == Seq(0L, 2L, 4L))
+  }
+
   test("every registered query has rows at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()

@@ -754,6 +754,30 @@ class DedupSpec extends SparkSpec {
     assert(b1 == s1)
   }
 
+  test("declared index schemas equal the inferred ones after an ingest " +
+       "and after an append") {
+    val docs = Tables.documents(spark, sf)
+    val base = java.nio.file.Files
+      .createTempDirectory("index_schema_spec").toString
+    def inferred(root: String) =
+      spark.read.option("recursiveFileLookup", "true").parquet(root).schema
+    val half = docs.filter(abs(xxhash64(col("doc_id"))) % 2 === 0)
+    Dedup.gramIndexIngest(docs, s"$base/gram_ingest")
+    Dedup.gramIndexAppend(half, s"$base/gram_append")
+    Dedup.shingleIndexIngest(docs, s"$base/shingle_ingest")
+    Dedup.shingleIndexAppend(half, s"$base/shingle_append")
+    for (root <- Seq("gram_ingest", "gram_append"))
+      assert(Dedup.GramIndexSchema == inferred(s"$base/$root"), root)
+    assert(Dedup.GramDfSchema == inferred(s"$base/gram_append_df"))
+    for (root <- Seq("shingle_ingest", "shingle_append"))
+      assert(Dedup.ShingleIndexSchema == inferred(s"$base/$root"), root)
+    // the compacted sidecar is written by a different plan
+    Dedup.gramIndexAppend(docs.except(half), s"$base/gram_append")
+    Dedup.gramIndexCompact(spark, s"$base/gram_append")
+    assert(Dedup.GramDfSchema == inferred(s"$base/gram_append_df"),
+      "after compaction")
+  }
+
   test("shingle index append: batch appends == one-shot ingest; replay of " +
        "a committed batch is a no-op") {
     val docs = Tables.documents(spark, sf)
