@@ -486,14 +486,10 @@ object Dedup {
       count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
     // a write executes its own QE, not obs.queryExecution — harvest the
     // counters through the listener bridge (GraftBridge scaladoc)
-    val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
+    val m = org.apache.spark.sql.GraftBridge.observedFromAction(
       docs.sparkSession, "shingle_ingest") {
       obs.write.mode("overwrite").parquet(root)
     }
-    val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
     (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
   }
 
@@ -520,10 +516,11 @@ object Dedup {
     * of it) are unchanged. */
   def shingleIndexAppend(newDocs: DataFrame, root: String,
                          batchId: Long = -1L): Unit = {
-    val id = if (batchId >= 0) batchId else claimBatchId(root)
-    val dir = s"$root/batch_$id"
-    if (graft.ops.IndexFs.exists(s"$dir/_SUCCESS")) return // committed: no-op
-    shingleSets(newDocs).write.mode("overwrite").parquet(dir)
+    val id = if (batchId >= 0) batchId
+      else graft.ops.Standing.claimBatchId(root)
+    if (graft.ops.Standing.committed(root, id)) return // committed: no-op
+    shingleSets(newDocs).write.mode("overwrite")
+      .parquet(graft.ops.Standing.batchDir(root, id))
   }
 
   /** BUCKETED ingest of the standing shingle index — the q125 bucketBy
@@ -540,111 +537,167 @@ object Dedup {
     * from the write itself (zero extra pass, ops.Observed). */
   def shingleIndexIngestBucketed(docs: DataFrame, table: String,
                                  buckets: Int = 32): (Long, Long) = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val setsPath = root + "_sets"
-    graft.ops.Scratch.track(setsPath)
-    resetBucketedTable(docs.sparkSession, table)
-    graft.ops.IndexFs.delete(setsPath)
+    val spark = docs.sparkSession
+    val setsRoot = shingleSetsRoot(table)
+    // a fresh build: drop the catalog entry and wipe the table, its meta
+    // sibling (claims, manifest) and the sidecar (compaction mark), so
+    // ingest means "rebuild from this corpus", never "append to whatever
+    // was there"
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    graft.ops.IndexFs.delete(graft.ops.Scale.bucketPath(table))
+    graft.ops.IndexFs.delete(bucketedMeta(table))
+    graft.ops.IndexFs.delete(setsRoot)
     val sets = shingleSets(docs).persist()
     try {
       val obs = sets.observe("shingle_ingest",
         count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
-      val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
-        docs.sparkSession, "shingle_ingest") {
-        // batch_0 subdirectory: ingest == first append, so the sidecar
-        // layout is uniform under later appends/compaction
-        obs.write.mode("overwrite").parquet(s"$setsPath/batch_0")
+      val m = org.apache.spark.sql.GraftBridge.observedFromAction(
+        spark, "shingle_ingest") {
+        // batch 0: ingest == first append, so the sidecar layout is
+        // uniform under later appends/compaction
+        obs.write.mode("overwrite")
+          .parquet(graft.ops.Standing.batchDir(setsRoot, 0L))
       }
       writeBucketedBatch(shinglePostings(sets), table, 0L, buckets)
-      val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
       (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
     } finally { sets.unpersist(); () }
   }
 
-  /** The bucketed POSTING half (metastore table, bucket-aware scan; the
-    * `batch` maintenance column dropped — see [[gramIndexBucketed]]). */
+  /** The bucketed POSTING half (metastore table, bucket-aware scan). The
+    * `batch` partition column is maintenance metadata (the exactly-once
+    * append/compaction bookkeeping), not index content — dropped here so
+    * consumers see the posting schema. */
   def shinglePostingsBucketed(spark: SparkSession, table: String): DataFrame =
     spark.table(table).drop("batch")
 
-  /** Incremental maintenance of the BUCKETED shingle index — the
-    * [[gramIndexAppendBucketed]] twin, EXACTLY-ONCE per batch since r11:
-    * one batch's postings land as their own `batch=<id>` partition of
-    * the bucketed table (dynamic partition overwrite — a replay rewrites
-    * only itself) and its (doc_id, hs, n) rows in their own
-    * `batch_<id>` sidecar subdirectory (per-batch overwrite, the plain
-    * index's mechanism). Both writes are idempotent, the manifest marker
-    * commits last, and the sidecar write goes FIRST — so every crash
-    * point is repaired by replaying the batch. Consumers stay
-    * exchange-free on g (same bucket spec; DedupSpec pins it). */
+  /** Incremental maintenance of the BUCKETED shingle index, EXACTLY-ONCE
+    * per batch: one batch's postings land as their own `batch=<id>`
+    * partition of the bucketed table (dynamic partition overwrite — a
+    * replay rewrites only itself) and its (doc_id, hs, n) rows in their
+    * own sidecar batch dir (per-batch overwrite, the plain index's
+    * mechanism). Both writes are idempotent, the manifest commit goes
+    * last, and the sidecar write goes FIRST — so every crash point is
+    * repaired by replaying the batch. Auto ids are claimed in the meta
+    * sibling (ops.Standing). Appending to a missing table bootstraps it.
+    * Consumers stay exchange-free on g: each bucket id spans files across
+    * partitions and Spark's bucketed scan still reports
+    * HashPartitioning(g, buckets) (DedupSpec pins it). */
   def shingleIndexAppendBucketed(newDocs: DataFrame, table: String,
                                  buckets: Int = 32,
                                  batchId: Long = -1L): Unit = {
-    val setsRoot = graft.ops.Scale.bucketPath(table) + "_sets"
-    graft.ops.Scratch.track(setsRoot)
+    val setsRoot = shingleSetsRoot(table)
     val meta = bucketedMeta(table)
     val id = if (batchId >= 0) batchId
-      else claimId(meta, bucketedBatchIds(table) :+ compactedThrough(meta))
-    if (id <= compactedThrough(meta)) return // absorbed: replay no-op
-    val setsDone = graft.ops.IndexFs.exists(s"$setsRoot/batch_$id/_SUCCESS")
-    if (graft.ops.IndexFs.exists(s"$meta/batches/$id") && setsDone)
+      else graft.ops.Standing.claimBatchId(meta, bucketedBatchIds(table))
+    if (id <= graft.ops.Standing.compactedThrough(setsRoot))
+      return // absorbed: replay no-op
+    if (graft.ops.Standing.committed(setsRoot, id) &&
+        graft.ops.Standing.committed(meta, id))
       return // committed: replay no-op
     val sets = shingleSets(newDocs).persist() // one tokenize, two sinks
     try {
-      sets.write.mode("overwrite").parquet(s"$setsRoot/batch_$id")
+      sets.write.mode("overwrite")
+        .parquet(graft.ops.Standing.batchDir(setsRoot, id))
       writeBucketedBatch(shinglePostings(sets), table, id, buckets)
     } finally { sets.unpersist(); () }
   }
 
-  /** COMPACTION of the bucketed shingle index: the posting table
-    * rewritten as one `batch=<max id>` partition
-    * ([[gramIndexCompactBucketed]]'s mechanism) and the sets sidecar's
-    * batch subdirectories merged into one — after N daily batches,
-    * consumers stop paying the N-way in-bucket merge and the N-dir
-    * sidecar listing. Replays of absorbed batches stay no-ops via the
-    * restored `_COMPACTED` mark. Maintenance-window only, like every
-    * compaction here. */
+  /** COMPACTION of the bucketed shingle index: the sets sidecar's batch
+    * dirs merged into one (ops.Standing's swap, guarded against a batch
+    * committed in the sidecar but not the manifest or the reverse), then
+    * the posting table rewritten as ONE `batch=<max id>` partition with
+    * the same bucket spec — after N daily batches, consumers stop paying
+    * the N-way in-bucket merge and the N-dir sidecar listing, and their
+    * plans are unchanged (DedupSpec pins compact == before and the
+    * exchange-free df plan after it). Replays of absorbed batches stay
+    * no-ops via the sidecar's `_COMPACTED` mark; the manifest and claims
+    * live in the meta SIBLING and survive the table rewrite. Same honesty
+    * as every compaction here: not atomic — a crash mid-compact can lose
+    * the table, which is DERIVED state rebuildable from the corpus; a
+    * crash between the two rewrites leaves a consistent index whose next
+    * compaction finishes the table. Maintenance-window only. */
   def shingleIndexCompactBucketed(spark: SparkSession, table: String,
                                   buckets: Int = 32): Unit = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val setsRoot = root + "_sets"
+    val setsRoot = shingleSetsRoot(table)
+    graft.ops.Standing.compact(setsRoot, bucketedMeta(table))(
+      shingleIndex(spark, setsRoot))
     val ids = bucketedBatchIds(table)
-    if (ids.size <= 1) return
-    val maxId = ids.max
-    // the gramIndexCompact guard, mirrored: a batch whose sets committed
-    // but whose postings never did (crash between the two writes) must
-    // be REPLAYED before compaction — compacting would absorb its sets
-    // while raising the high-water mark over its id, so the replay's
-    // skip would leave its postings missing forever
-    val meta = bucketedMeta(table)
-    val setsIds = graft.ops.IndexFs.childNames(setsRoot, dirsOnly = true)
-      .collect { case n if n.startsWith("batch_") &&
-          graft.ops.IndexFs.exists(s"$setsRoot/$n/_SUCCESS") =>
-        n.stripPrefix("batch_").toLong }
-    val orphans = setsIds.filter(id => id > compactedThrough(meta) &&
-      !graft.ops.IndexFs.exists(s"$meta/batches/$id"))
-    require(orphans.isEmpty,
-      s"shingleIndexCompactBucketed: batch(es) ${orphans.sorted.mkString(",")}" +
-        " have committed sets but no postings manifest (crash between the" +
-        " append's two writes?) — replay them before compacting")
-    compactBucketedTable(spark, table, buckets)
-    val tmp = setsRoot + "_compact_tmp"
+    if (ids.size <= 1) return // nothing to merge
+    val root = graft.ops.Scale.bucketPath(table)
+    val tmp = root + "_compact_tmp"
     graft.ops.Scratch.track(tmp)
-    spark.read.option("recursiveFileLookup", "true").parquet(setsRoot)
-      .write.mode("overwrite").parquet(tmp)
-    graft.ops.IndexFs.delete(setsRoot)
-    graft.ops.IndexFs.mkdirs(setsRoot)
-    graft.ops.IndexFs.rename(tmp, s"$setsRoot/batch_$maxId")
-    ()
+    shinglePostingsBucketed(spark, table).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).withColumn("batch", lit(ids.max))
+      .write.mode("overwrite")
+      .partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
+      .option("path", root).saveAsTable(table)
+    graft.ops.IndexFs.delete(tmp)
   }
 
-  /** The doc-keyed SETS sidecar of the bucketed index (per-batch
-    * subdirectories since r11, hence the recursive lookup). */
+  /** The doc-keyed SETS sidecar of the bucketed index: [[shingleSets]]
+    * rows in per-batch dirs, read like the plain shingle index. */
   def shingleSetsSidecar(spark: SparkSession, table: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(graft.ops.Scale.bucketPath(table) + "_sets")
+    shingleIndex(spark, shingleSetsRoot(table))
+
+  private def shingleSetsRoot(table: String): String = {
+    val r = graft.ops.Scale.bucketPath(table) + "_sets"
+    graft.ops.Scratch.track(r)
+    r
+  }
+
+  /** The bucketed table's maintenance-metadata SIBLING dir: the `_claims`
+    * namespace and the per-batch commit manifest (ops.Standing). A
+    * sibling, not a subdirectory: the table path must be empty for the
+    * bootstrap CTAS, and the manifest must SURVIVE compaction's table
+    * rewrite — a manifest that died with the table would forget which
+    * batches committed, exactly when replays get interesting. */
+  private def bucketedMeta(table: String): String = {
+    val m = graft.ops.Scale.bucketPath(table) + "_meta"
+    graft.ops.Scratch.track(m)
+    m
+  }
+
+  /** One batch into one `batch=<id>` partition of a bucketed table:
+    * bootstrap via saveAsTable, steady state via positional insertInto
+    * under dynamic partition overwrite (only the batch's own partition
+    * is replaced — the replay idempotency), manifest commit last. */
+  private def writeBucketedBatch(rows: DataFrame, table: String,
+                                 id: Long, buckets: Int): Unit = {
+    val spark = rows.sparkSession
+    val root = graft.ops.Scale.bucketPath(table)
+    val withBatch = rows.withColumn("batch", lit(id))
+    if (!spark.catalog.tableExists(table))
+      withBatch.write.partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
+        .option("path", root).saveAsTable(table)
+    else {
+      // dynamic partition overwrite scoped to a session CLONE (the
+      // bloomSketchBytes mechanism): the catalog-table insert path reads
+      // the SESSION conf, not the writer option (measured — a static
+      // overwrite wipes every other batch), and mutating the shared
+      // session would leak overwrite semantics to concurrent writers.
+      // Catalog entries live in shared state, so the clone sees `table`,
+      // and the executor classloader is shared too (artifact isolation
+      // is off in Sessions.local), so the insert reuses compiled classes.
+      val scoped = org.apache.spark.sql.GraftBridge
+        .cloneSession(spark)
+      scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      org.apache.spark.sql.GraftBridge.withSession(
+          withBatch.select(spark.table(table).columns.map(col(_)): _*),
+          scoped)
+        .write.mode("overwrite").insertInto(table)
+      // the insert refreshed the CLONE's relation cache; the caller's
+      // session still holds the pre-overwrite file listing — refresh it
+      spark.catalog.refreshTable(table)
+    }
+    graft.ops.Standing.commit(bucketedMeta(table), id)
+  }
+
+  /** Partition ids (`batch=<id>` dirs) of a bucketed index table. */
+  private def bucketedBatchIds(table: String): Seq[Long] =
+    graft.ops.IndexFs
+      .childNames(graft.ops.Scale.bucketPath(table), dirsOnly = true)
+      .collect { case n if n.startsWith("batch=") =>
+        n.stripPrefix("batch=").toLong }
 
   /** [[similarityJoin]]'s LOW-τ regime, public so the crossover stays
     * measurable per-round (TauProbe forces each regime at each τ): |A∩B|
@@ -1187,14 +1240,10 @@ object Dedup {
       approx_count_distinct(col("g")).as("grams"))
     // a write executes its own QE, not obs.queryExecution — harvest the
     // counters through the listener bridge (GraftBridge scaladoc)
-    val (_, m0) = org.apache.spark.sql.GraftBridge.observedFromAction(
+    val m = org.apache.spark.sql.GraftBridge.observedFromAction(
       docs.sparkSession, "gram_ingest") {
       obs.write.mode("overwrite").parquet(root)
     }
-    val m = m0.getOrElse(sys.error(
-      "index ingest wrote successfully but its observed counters never " +
-        "arrived — a metrics-plumbing regression (the write's QE must " +
-        "carry the observe node; see GraftBridge.observedFromAction)"))
     (m.getLong(0), m.getLong(1))
   }
 
@@ -1211,162 +1260,6 @@ object Dedup {
   def gramIndex(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(GramIndexSchema)
       .option("recursiveFileLookup", "true").parquet(root)
-
-  /** BUCKETED ingest — the exchange-free cluster form the plain-parquet
-    * scaladoc promised: postings saved as a bucketed+sorted table on `g`,
-    * so the df aggregation (`groupBy(g)`) and every gram join whose both
-    * sides read this table (eval⋈train contamination, postings⋈df) start
-    * from HashPartitioning(g, buckets) and plan with NO shuffle exchange
-    * on g (PlanAuditSpec pins it; BENCHMARKS.md records the shuffle-bytes
-    * delta vs the plain index). The trade is write-side: bucketBy
-    * shuffles the postings once at ingest — paid once, saved by every
-    * consumer of the index thereafter. Read back with [[gramIndexBucketed]]. */
-  def gramIndexIngestBucketed(docs: DataFrame, table: String, n: Int = 8,
-                              buckets: Int = 32): Unit = {
-    resetBucketedTable(docs.sparkSession, table)
-    writeBucketedBatch(gramPostings(docs, n), table, 0L, buckets)
-  }
-
-  /** Fresh-build preamble: drop the catalog entry and wipe the table dir
-    * (data, claims, manifest, high-water mark) so ingest means "rebuild
-    * from this corpus", never "append to whatever was there". */
-  private def resetBucketedTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    graft.ops.IndexFs.delete(graft.ops.Scale.bucketPath(table))
-    graft.ops.IndexFs.delete(bucketedMeta(table))
-  }
-
-  /** The bucketed standing index (metastore table, bucket-aware scan).
-    * The `batch` partition column is maintenance metadata (the
-    * exactly-once append/compaction bookkeeping), not index content —
-    * dropped here so consumers see the same schema as the plain index. */
-  def gramIndexBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).drop("batch")
-
-  /** Incremental maintenance of the BUCKETED gram index — EXACTLY-ONCE
-    * per batch since r11 (the r10 deferral closed): each batch lands as
-    * its own `batch=<id>` PARTITION of the (partitioned + bucketed)
-    * table, written through DYNAMIC partition overwrite — a replayed
-    * batch rewrites only its own partition instead of double-appending,
-    * and a crashed write leaves no committed files (the v1 committer
-    * moves task output at job commit), so replay repairs every crash
-    * point. A `_batches/<id>` manifest marker (presence-only, written
-    * AFTER the data commits — the `_SUCCESS` discipline) short-circuits
-    * committed replays without a Spark job, and `batchId < 0`
-    * auto-claims an unused id durably (`_claims`, the
-    * [[claimBatchId]] mechanism). Partitioning does NOT cost the
-    * bucketing win: each bucket id spans files across partitions and
-    * Spark's bucketed scan still reports HashPartitioning(g, buckets) —
-    * consumers keep their exchange-free plans after any number of
-    * appends (DedupSpec + PlanAuditSpec pin it). Appending to a missing
-    * table bootstraps it, so bucketed ingest == first bucketed append.
-    * No df sidecar exists in this form — ON the bucketed table the df
-    * aggregation is itself exchange-free, so maintaining partials would
-    * save nothing. */
-  def gramIndexAppendBucketed(newDocs: DataFrame, table: String, n: Int = 8,
-                              buckets: Int = 32, batchId: Long = -1L): Unit = {
-    val meta = bucketedMeta(table)
-    val id = if (batchId >= 0) batchId
-      else claimId(meta, bucketedBatchIds(table) :+ compactedThrough(meta))
-    if (id <= compactedThrough(meta)) return // absorbed: replay no-op
-    if (graft.ops.IndexFs.exists(s"$meta/batches/$id"))
-      return // committed: replay no-op
-    writeBucketedBatch(gramPostings(newDocs, n), table, id, buckets)
-  }
-
-  /** The bucketed table's maintenance-metadata SIBLING dir (claims,
-    * per-batch commit manifest, compaction high-water mark). A sibling,
-    * not a subdirectory: the table path must be empty for the bootstrap
-    * CTAS, and the metadata must SURVIVE compaction's table rewrite —
-    * a manifest that died with the table would forget which batches
-    * committed, exactly when replays get interesting. */
-  private def bucketedMeta(table: String): String = {
-    val m = graft.ops.Scale.bucketPath(table) + "_meta"
-    graft.ops.Scratch.track(m)
-    m
-  }
-
-  /** One batch into one `batch=<id>` partition of a bucketed table:
-    * bootstrap via saveAsTable, steady state via positional insertInto
-    * under dynamic partition overwrite (only the batch's own partition
-    * is replaced — the replay idempotency), manifest marker last. */
-  private def writeBucketedBatch(rows: DataFrame, table: String,
-                                 id: Long, buckets: Int): Unit = {
-    val spark = rows.sparkSession
-    val root = graft.ops.Scale.bucketPath(table)
-    val withBatch = rows.withColumn("batch", lit(id))
-    if (!spark.catalog.tableExists(table))
-      withBatch.write.partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
-        .option("path", root).saveAsTable(table)
-    else {
-      // dynamic partition overwrite scoped to a session CLONE (the
-      // bloomSketchBytes mechanism): the catalog-table insert path reads
-      // the SESSION conf, not the writer option (measured — a static
-      // overwrite wipes every other batch), and mutating the shared
-      // session would leak overwrite semantics to concurrent writers.
-      // Catalog entries live in shared state, so the clone sees `table`,
-      // and the executor classloader is shared too (artifact isolation
-      // is off in Sessions.local), so the insert reuses compiled classes.
-      val scoped = org.apache.spark.sql.GraftBridge
-        .cloneSession(spark)
-      scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      org.apache.spark.sql.GraftBridge.withSession(
-          withBatch.select(spark.table(table).columns.map(col(_)): _*),
-          scoped)
-        .write.mode("overwrite").insertInto(table)
-      // the insert refreshed the CLONE's relation cache; the caller's
-      // session still holds the pre-overwrite file listing — refresh it
-      spark.catalog.refreshTable(table)
-    }
-    graft.ops.IndexFs.mkdirs(s"${bucketedMeta(table)}/batches/$id")
-    ()
-  }
-
-  /** Partition ids (`batch=<id>` dirs) of a bucketed index table. */
-  private def bucketedBatchIds(table: String): Seq[Long] =
-    graft.ops.IndexFs
-      .childNames(graft.ops.Scale.bucketPath(table), dirsOnly = true)
-      .collect { case n if n.startsWith("batch=") =>
-        n.stripPrefix("batch=").toLong }
-
-  /** COMPACTION of the bucketed gram index — [[gramIndexCompact]] one
-    * level up (r10 verdict item): every append adds one file set per
-    * bucket, and though consumers stay exchange-free, after N batches
-    * each bucket task pays an N-way merge forever. Compaction rewrites
-    * the table as ONE `batch=<max id>` partition with the same bucket
-    * spec (consumer plans unchanged; DedupSpec pins compact + more
-    * appends == from-scratch) and restores the `_COMPACTED` high-water
-    * mark the rewrite wiped, so replays of absorbed batches stay no-ops
-    * and later auto ids stay ahead. Same honesty as the plain form: not
-    * atomic — a crash mid-compact can lose the table, which is DERIVED
-    * state rebuildable from the corpus; run it in the maintenance
-    * window, never the serving path, and never concurrently with
-    * appends. */
-  def gramIndexCompactBucketed(spark: SparkSession, table: String,
-                               buckets: Int = 32): Unit =
-    compactBucketedTable(spark, table, buckets)
-
-  private def compactBucketedTable(spark: SparkSession, table: String,
-                                   buckets: Int): Unit = {
-    val root = graft.ops.Scale.bucketPath(table)
-    val ids = bucketedBatchIds(table)
-    if (ids.size <= 1) return // nothing to merge
-    val maxId = ids.max
-    val tmp = root + "_compact_tmp"
-    graft.ops.Scratch.track(tmp)
-    spark.table(table).drop("batch").write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).withColumn("batch", lit(maxId))
-      .write.mode("overwrite")
-      .partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
-      .option("path", root).saveAsTable(table)
-    // the manifest and claims live in the meta SIBLING and survived the
-    // table rewrite, so committed replays stay no-ops on their own; the
-    // high-water mark additionally floors auto ids and covers batches
-    // whose data was absorbed without a manifest
-    graft.ops.IndexFs.writeString(
-      s"${bucketedMeta(table)}/_COMPACTED", maxId.toString)
-    graft.ops.IndexFs.delete(tmp)
-  }
 
   /** Mergeable df state of ONE postings batch — the gram-index twin of
     * [[graft.ops.Incremental.aggState]]: df counts are a sum, so partial
@@ -1401,80 +1294,27 @@ object Dedup {
     * point. A batch already committed to both sinks (`_SUCCESS` markers
     * present, or a df partial absorbed by [[gramIndexCompact]] — the
     * sidecar's `_COMPACTED` high-water mark) is skipped outright.
-    * `batchId < 0` (batch callers without a replay log) auto-assigns an
-    * unused id by ATOMIC directory creation — two concurrent auto-id
-    * appenders race to mkdir the same candidate, exactly one wins, the
-    * loser takes the next id (local/HDFS semantics; object stores lack
-    * atomic mkdir — there, name your batches). Overwrite-on-replay is
-    * reserved for callers that DO name their batches (foreachBatch's
-    * batchId). */
+    * `batchId < 0` (batch callers without a replay log) auto-claims an
+    * unused id ([[graft.ops.Standing.claimBatchId]]: two concurrent
+    * auto-id appenders never share one). Overwrite-on-replay is reserved
+    * for callers that DO name their batches (foreachBatch's batchId). */
   def gramIndexAppend(newDocs: DataFrame, root: String, n: Int = 8,
                       batchId: Long = -1L): Unit = {
-    val id = if (batchId >= 0) batchId else claimBatchId(root)
-    val pDir = s"$root/batch_$id"
-    val dfDir = s"${root}_df/batch_$id"
-    val dfDone = graft.ops.IndexFs.exists(s"$dfDir/_SUCCESS") ||
-      id <= compactedThrough(root + "_df") // partial absorbed by compaction
-    if (graft.ops.IndexFs.exists(s"$pDir/_SUCCESS") && dfDone)
+    val side = root + "_df"
+    val id = if (batchId >= 0) batchId
+      else graft.ops.Standing.claimBatchId(root)
+    val dfDone = graft.ops.Standing.committed(side, id) ||
+      id <= graft.ops.Standing.compactedThrough(side) // absorbed by compaction
+    if (graft.ops.Standing.committed(root, id) && dfDone)
       return // committed: replay no-op
     val p = gramPostings(newDocs, n).persist() // one tokenize pass, two sinks
     try {
-      p.write.mode("overwrite").parquet(pDir)
+      p.write.mode("overwrite").parquet(graft.ops.Standing.batchDir(root, id))
       if (!dfDone) // never re-emit a partial compaction already merged
-        gramDfState(p).write.mode("overwrite").parquet(dfDir)
+        gramDfState(p).write.mode("overwrite")
+          .parquet(graft.ops.Standing.batchDir(side, id))
     } finally { p.unpersist(); () }
   }
-
-  /** Ids of the committed `batch_<id>` subdirectories under `root`. */
-  private def batchIds(root: String): Seq[Long] =
-    graft.ops.IndexFs.childNames(root, dirsOnly = true)
-      .collect { case n if n.startsWith("batch_") =>
-        n.stripPrefix("batch_").toLong }
-
-  /** Claim the next unused auto batch id by ATOMIC create-if-absent of
-    * a DURABLE marker file under `_claims/` — a namespace no data write
-    * ever touches. A plain max+1 read is a TOCTOU race (two concurrent
-    * appenders pick the same id — the r10 review find), and the first
-    * fix claimed the `batch_<id>` DATA directory itself, which the
-    * subsequent mode("overwrite") write DELETES before recreating: in
-    * that window a concurrent auto-id appender could re-claim the freed
-    * id and the two batches would silently overwrite each other — the
-    * exact silent-loss class the claim exists to prevent (the r11 review
-    * find). Claim markers are empty FILES created via
-    * [[graft.ops.IndexFs.createExclusive]] (atomic on local/HDFS — the
-    * r12 FileSystem port; HDFS `mkdirs` returns true on existing dirs,
-    * so the old local `File.mkdir` claim could not port as a dir.
-    * Object stores lack ANY atomic create-if-absent — there, name your
-    * batches) and NEVER removed, so a claim outlives any crash or
-    * rewrite of its batch: the id is burned, never reusable. The
-    * underscore-prefixed parent keeps Spark's file index from ever
-    * listing the markers. Candidates start past existing data batches
-    * AND existing claims (named-batch replays bypass claims, so a named
-    * id below the claim watermark stays replayable). */
-  private[graft] def claimBatchId(root: String): Long =
-    claimId(root, batchIds(root))
-
-  /** The shared claim mechanism: atomic mkdir under `root/_claims`,
-    * candidates starting past both `existing` ids and prior claims. */
-  private def claimId(root: String, existing: Seq[Long]): Long = {
-    val claims = s"$root/_claims"
-    graft.ops.IndexFs.mkdirs(claims)
-    // tolerate non-numeric detritus (NFS tombstones, stray sidecars) —
-    // a foreign file must not brick every future auto-id append
-    val claimed = graft.ops.IndexFs.childNames(claims)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-    var cand = (existing ++ claimed).foldLeft(-1L)(math.max) + 1L
-    while (!graft.ops.IndexFs.createExclusive(s"$claims/$cand")) cand += 1
-    cand
-  }
-
-  /** The sidecar's compaction high-water mark: every df partial with
-    * batch id ≤ this has been merged into the compacted partial, so a
-    * REPLAY of such a batch must not re-emit its df state (it would
-    * double-count — the r10 review find). -1 when never compacted. */
-  private def compactedThrough(side: String): Long =
-    graft.ops.IndexFs.readStringOpt(s"$side/_COMPACTED")
-      .map(_.trim.toLong).getOrElse(-1L)
 
   /** The maintained df aggregate: merge the appended partials by sum —
     * equals `gramPostings(allDocs).groupBy(g).count()` exactly, without
@@ -1498,42 +1338,17 @@ object Dedup {
     * `_COMPACTED` high-water marker records which partials were
     * absorbed — a REPLAYED pre-compaction batch then skips its df write
     * instead of double-counting (the r10 review find; DedupSpec pins
-    * replay-after-compact == from-scratch). Not atomic — a crash
+    * replay-after-compact == from-scratch). It refuses while a postings
+    * batch lacks its df partial (a crash between the append's two
+    * writes — replay that batch first). The swap, the mark and the guard
+    * are [[graft.ops.Standing.compact]]'s. Not atomic — a crash
     * mid-compact can lose the sidecar — but the sidecar is DERIVED
     * state, rebuildable from the postings root
     * (`gramDfState(gramIndex(root))`); run compaction in the maintenance
     * window, not the serving path. */
-  def gramIndexCompact(spark: SparkSession, root: String): Unit = {
-    val side = root + "_df"
-    // Refuse to compact around a half-committed append: a postings batch
-    // whose df partial is missing (crash between gramIndexAppend's two
-    // writes) must be REPLAYED first — compacting past it can raise the
-    // `_COMPACTED` high-water mark over its id, and the replay's
-    // `id <= compactedThrough` skip would then drop that batch's df
-    // partial forever (gramIndexDf undercounts — the r11 review find).
-    // Inductively, ids at or below the current mark were all absorbed
-    // complete, so only ids above it can be orphans.
-    val mark = compactedThrough(side)
-    val orphans = batchIds(root).filter(id => id > mark &&
-      graft.ops.IndexFs.exists(s"$root/batch_$id/_SUCCESS") &&
-      !graft.ops.IndexFs.exists(s"$side/batch_$id/_SUCCESS"))
-    require(orphans.isEmpty,
-      s"gramIndexCompact: postings batch(es) ${orphans.sorted.mkString(",")}" +
-        " lack their df sidecar (crash between the append's two writes?)" +
-        " — replay them (gramIndexAppend with the same batchId) before" +
-        " compacting")
-    val ids = batchIds(side)
-    if (ids.size <= 1) return // nothing to merge
-    val merged = gramIndexDf(spark, root)
-      .select(col("g"), col("df").as("df_part"))
-    val tmp = side + "_compact_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.ops.IndexFs.delete(side)
-    graft.ops.IndexFs.mkdirs(side)
-    graft.ops.IndexFs.rename(tmp, s"$side/batch_${ids.max}")
-    graft.ops.IndexFs.writeString(s"$side/_COMPACTED", ids.max.toString)
-    ()
-  }
+  def gramIndexCompact(spark: SparkSession, root: String): Unit =
+    graft.ops.Standing.compact(root + "_df", root)(
+      gramIndexDf(spark, root).select(col("g"), col("df").as("df_part")))
 
   /** [[contaminationPairs]] over an existing postings frame (from
     * [[gramPostings]] or the persisted [[gramIndex]]). */

@@ -3,9 +3,10 @@ package graft.ops
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem façade for the standing-index METADATA protocols (validity
-  * markers, `batch_<id>` commit listings, `_claims` id allocation,
-  * compaction dir swaps, `_COMPACTED` high-water marks).
+/** Filesystem façade for the standing-index METADATA protocols. The
+  * protocols themselves (validity markers, batch dirs and their commits,
+  * id claims, compaction swaps and high-water marks) are defined once, in
+  * [[Standing]]; this object is only the I/O they run on.
   *
   * Through round 11 these protocols used `java.io.File` /
   * `java.nio.file` directly, which silently scoped every standing index
@@ -43,11 +44,11 @@ object IndexFs {
 
   // Built once and cached: newHadoopConf() clones the full Spark+Hadoop
   // configuration map, and several protocols call IndexFs in driver-side
-  // loops (committedBatchDirs probes per batch dir, claimId retries per
+  // loops (committedBatchDirs probes per batch dir, claimBatchId retries per
   // candidate). Every call site in this library runs after the driver
   // session exists, so the first call captures the session's conf.
   // `getActiveSession` is THREAD-LOCAL: the first IndexFs call can land
-  // on a user pool thread with no active session (concurrent claimId
+  // on a user pool thread with no active session (concurrent claimBatchId
   // callers do exactly this), and caching `new Configuration()` there
   // would permanently drop the session's Hadoop config — s3a credentials,
   // HA namenode mappings — for all later metadata I/O on exactly the
@@ -142,7 +143,7 @@ object IndexFs {
     * through NIO `Files.createFile` (O_EXCL, one syscall); on HDFS
     * `create(overwrite=false)` is a single atomic namenode op. Losing
     * the race returns false; any OTHER I/O error (namenode down,
-    * permissions) PROPAGATES — swallowing it would spin claimId's retry
+    * permissions) PROPAGATES — swallowing it would spin claimBatchId's retry
     * loop forever on a broken filesystem. */
   def createExclusive(p: String): Boolean = {
     val (fs, path) = fsOf(p)

@@ -3,6 +3,7 @@ package graft.similarity
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 
 /** IVF-PQ: the composed production ANN index (the FAISS "IVFADC" shape —
   * Jégou et al., TPAMI 2011, §V) this library's two halves were built
@@ -154,6 +155,21 @@ object IvfPq {
     }
   }
 
+  /** The standing codes table's schema as [[ivfPqIngest]] and
+    * [[ivfPqAppend]] write it and parquet reads it back: the data columns,
+    * then `cluster`, the partition column read from the directory names.
+    * [[ivfPqCodes]] reads with it, so a serving call runs no
+    * footer-inference job (SimilaritySpec pins it against the inferred
+    * schema after an ingest and after an append). */
+  val IvfPqSchema: StructType = new StructType()
+    .add("vec_id", LongType).add("codes", ArrayType(IntegerType))
+    .add("cluster", IntegerType)
+
+  /** SCAN half: the standing codes table, partitioned by `cluster` (a
+    * filter on it prunes at the file index). */
+  def ivfPqCodes(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(IvfPqSchema).parquet(root)
+
   /** Replace `embedding` with the per-cluster residual x − c_cluster(x)
     * (float arithmetic, centroids a plan literal — map-only). */
   private[graft] def residualized(assigned: DataFrame,
@@ -254,7 +270,7 @@ object IvfPq {
     // in-plan observe node rides that same pass for free; the metric
     // lands when `missing.count()` executes the join.
     val obs = new org.apache.spark.sql.Observation()
-    val standingIds = spark.read.parquet(root).select("vec_id")
+    val standingIds = ivfPqCodes(spark, root).select("vec_id")
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("standing_n"))
     val missing = newEmb.join(standingIds, Seq("vec_id"), "left_anti")
@@ -305,7 +321,7 @@ object IvfPq {
     val old = root + "_compact_old"
     graft.ops.IndexFs.delete(tmp)
     graft.ops.IndexFs.delete(old)
-    spark.read.parquet(root)
+    ivfPqCodes(spark, root)
       .repartition(cents.length, col("cluster"))
       .write.partitionBy("cluster").mode("overwrite").parquet(tmp)
     // two renames (atomic on local/HDFS — IndexFs's declared scope; on
@@ -339,9 +355,9 @@ object IvfPq {
     // and breaking the "matches row-for-row" contract on the default-args
     // path (r11 review find; in-repo callers pass corpusSize explicitly).
     val corpusN = if (corpusSize >= 0L) corpusSize
-      else spark.read.parquet(root).count()
+      else ivfPqCodes(spark, root).count()
     if (!residual) {
-      val pruned = spark.read.parquet(root)
+      val pruned = ivfPqCodes(spark, root)
         .filter(col("cluster").isInCollection(probe))
         .select("vec_id", "codes")
         // the pruning ratio, in-artifact: scanned codes rows ≈ n·nprobe/k
@@ -383,7 +399,7 @@ object IvfPq {
         element_at(element_at(element_at(t, col("cluster") + 1), mi + 1),
           element_at(col("codes"), mi + 1) + 1))
       .reduce(_ + _)
-    val shortlist = spark.read.parquet(root)
+    val shortlist = ivfPqCodes(spark, root)
       .filter(col("cluster").isInCollection(probe))
       .select(col("vec_id"), col("cluster"), col("codes"))
       .observe(observeName, count(lit(1)).as("scanned_rows"))
@@ -450,7 +466,7 @@ object IvfPq {
     if (queryIds.distinct.size > maxChunk) {
       val qIds = queryIds.distinct.sorted
       val n = if (corpusSize >= 0L) corpusSize
-        else spark.read.parquet(root).count()
+        else ivfPqCodes(spark, root).count()
       val qVecs = Pq.collectQueryVecs(emb, qIds)
       val probes = qIds.map(id =>
         id -> probeClusters(cents, qVecs(id), nprobe)).toMap
@@ -512,8 +528,8 @@ object IvfPq {
       if (refine > 0) refine
       else Pq.proportionalShortlist(
         if (corpusSize >= 0L) corpusSize
-        else spark.read.parquet(root).count())
-    val scanned = spark.read.parquet(root)
+        else ivfPqCodes(spark, root).count())
+    val scanned = ivfPqCodes(spark, root)
       .filter(col("cluster").isInCollection(unionClusters))
       .select("vec_id", "cluster", "codes")
       // union-scan volume: rows read once for the whole batch

@@ -3,6 +3,7 @@ package graft.similarity
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011) — the memory-side half of large-scale
@@ -524,6 +525,17 @@ object Pq {
     }
   }
 
+  /** The standing codes table's schema as [[pqIngest]] writes it and
+    * parquet reads it back (every field nullable). [[pqCodes]] reads with
+    * it, so a serving call runs no footer-inference job (SimilaritySpec
+    * pins it against the inferred schema). */
+  val PqCodesSchema: StructType = new StructType()
+    .add("vec_id", LongType).add("codes", ArrayType(IntegerType))
+
+  /** SCAN half: the standing codes table (vec_id, codes). */
+  def pqCodes(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(PqCodesSchema).parquet(root)
+
   /** Bit-exact model serialization for the validity-marker payload
     * ([[floatRowHex]] rows), so a REUSED model is byte-identical to the
     * one the build trained — encode determinism (PqSpec) then makes the
@@ -555,7 +567,7 @@ object Pq {
   def pqQuery(spark: SparkSession, d: String, root: String,
               books: Codebooks, n: Long): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val codes = spark.read.parquet(root)
+    val codes = pqCodes(spark, root)
     graft.similarity.Similarity.annContract(
       adcTopKOnCodes(codes, emb, queryVecId = 0L, k = 10, books,
         corpusSize = n),
@@ -614,7 +626,7 @@ object Pq {
   def qPqBatch(spark: SparkSession, d: String): DataFrame = {
     val (books, n, root) = pqIngest(spark, d)
     val emb = Tables.embeddings(spark, d)
-    val codes = spark.read.parquet(root)
+    val codes = pqCodes(spark, root)
     val qIds = Seq(0L, 1L, 2L, 3L)
     val refine = proportionalShortlist(n, mult = 2)
     annContractBatch(

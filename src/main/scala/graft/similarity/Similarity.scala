@@ -840,9 +840,7 @@ object Similarity {
         // marker claiming the half-deleted index valid), then the stale
         // batch dirs and the burned-id _claims namespace.
         graft.ops.Standing.invalidate(root)
-        graft.ops.IndexFs.childNames(root, dirsOnly = true)
-          .filter(n => n.startsWith("batch_") || n == "_claims")
-          .foreach(n => graft.ops.IndexFs.delete(s"$root/$n"))
+        graft.ops.Standing.dropBatches(root)
         val emb = Tables.embeddings(spark, d)
         val sigs = signatureTable(emb, resolved, nCorpus)
         sigs.join(directVerdicts(sigs, num, den), "vec_id")
@@ -868,12 +866,11 @@ object Similarity {
     // batch ids start at 0, so the ingest dir must NOT share their
     // namespace — a streaming batch 0 would otherwise see the ingest's
     // _SUCCESS and silently no-op (drop its own rows).
-    val kids = graft.ops.IndexFs.childNames(root, dirsOnly = true)
-      .filter(n => graft.ops.IndexFs.exists(s"$root/$n/_SUCCESS"))
-    val base = kids.filter(_ == "base")
-    val batches = kids.filter(_.startsWith("batch_"))
-      .sortBy(_.stripPrefix("batch_").toLong)
-    (base ++ batches).map(n => s"$root/$n")
+    val base = Seq(s"$root/base").filter(graft.ops.Standing.committed(_))
+    val batches = graft.ops.Standing.batchIds(root).sorted
+      .map(graft.ops.Standing.batchDir(root, _))
+      .filter(graft.ops.Standing.committed(_))
+    base ++ batches
   }
 
   /** (n, kept, maxId) recomputed from the COMMITTED data — never from
@@ -901,7 +898,7 @@ object Similarity {
     * Exactly-once: `batchId` keys the write to its own overwrite dir —
     * a committed replay no-ops, a crashed replay overwrites its own
     * partial, and auto-ids go through the durable `_claims` protocol
-    * ([[graft.dedup.Dedup.claimBatchId]]). */
+    * ([[graft.ops.Standing.claimBatchId]]). */
   def semDeDupAppend(newEmb: DataFrame, root: String,
                      batchId: Long = -1L): (Long, Long) = {
     val spark = newEmb.sparkSession
@@ -911,9 +908,9 @@ object Similarity {
     val a = p.trim.split(" ")
     val (planes, num, den) = (a(0).toInt, a(1).toInt, a(2).toInt)
     val id = if (batchId >= 0) batchId
-      else graft.dedup.Dedup.claimBatchId(root)
-    val bDir = s"$root/batch_$id"
-    if (!graft.ops.IndexFs.exists(s"$bDir/_SUCCESS")) {
+      else graft.ops.Standing.claimBatchId(root)
+    val bDir = graft.ops.Standing.batchDir(root, id)
+    if (!graft.ops.Standing.committed(bDir)) {
       val (_, _, maxId) = indexStats(spark, root)
       // An EMPTY batch is legal (streaming restart / no-data trigger
       // delivers one — r11 advisor find): min(vec_id) aggregates to SQL

@@ -68,7 +68,7 @@ object PqBench {
     // batched amortization sweep: ONE codes scan answering Q queries vs
     // the per-query singles baseline — the numbers behind q126.
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val codes = spark.read.parquet(root)
+    val codes = Pq.pqCodes(spark, root)
     // singles baseline: per-query mean over a fixed sample, once
     val singlesSample = 4
     val sampleIds = (0L until singlesSample.toLong)

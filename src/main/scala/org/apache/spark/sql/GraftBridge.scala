@@ -55,9 +55,11 @@ object GraftBridge {
     * the writer wraps the plan in a fresh QE around the insert command —
     * so `observe` counters on an ingest write are only reachable through
     * a QueryExecutionListener; delivery is async on the shared listener
-    * bus, hence the [[drainListenerBus]] flush. */
-  def observedFromAction[T](spark: SparkSession, name: String)
-                           (action: => T): (T, Option[Row]) = {
+    * bus, hence the [[drainListenerBus]] flush. Throws when the action
+    * succeeded but no counters arrived: the write's QE must carry the
+    * observe node, and losing it is a metrics-plumbing regression. */
+  def observedFromAction(spark: SparkSession, name: String)
+                        (action: => Unit): Row = {
     val found = new java.util.concurrent.atomic.AtomicReference[Row]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -70,9 +72,12 @@ object GraftBridge {
     }
     spark.listenerManager.register(listener)
     try {
-      val r = action
+      action
       drainListenerBus(spark)
-      (r, Option(found.get))
+      Option(found.get).getOrElse(sys.error(
+        s"the action succeeded but its observed counters '$name' never" +
+          " arrived — a metrics-plumbing regression (the write's QE must" +
+          " carry the observe node)"))
     } finally spark.listenerManager.unregister(listener)
   }
 }

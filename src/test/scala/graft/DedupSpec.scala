@@ -355,14 +355,14 @@ class DedupSpec extends SparkSpec {
        "dir (the mode-overwrite window) never frees the id") {
     val root = java.nio.file.Files
       .createTempDirectory("gram_claim_spec").toString + "/postings"
-    val id0 = Dedup.claimBatchId(root)
+    val id0 = graft.ops.Standing.claimBatchId(root)
     // the r11 review window: mode("overwrite") DELETES batch_<id> before
     // the job recreates it — under the old data-dir claim, a concurrent
     // auto-id appender could re-claim the freed id in that window and the
     // two batches would silently overwrite each other. The claim marker
     // must survive the data dir's deletion.
     graft.ops.Scratch.deleteRec(new java.io.File(s"$root/batch_$id0"))
-    val id1 = Dedup.claimBatchId(root)
+    val id1 = graft.ops.Standing.claimBatchId(root)
     assert(id1 != id0, "a deleted data dir must not free its claimed id")
     // and claims interleave correctly with real data batches: an append
     // after two bare claims lands past both
@@ -386,7 +386,9 @@ class DedupSpec extends SparkSpec {
     try {
       val futures = (0 until n).map { _ =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = { barrier.await(); Dedup.claimBatchId(root) }
+          def call(): Long = {
+            barrier.await(); graft.ops.Standing.claimBatchId(root)
+          }
         })
       }
       val claimed = futures.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
@@ -497,30 +499,15 @@ class DedupSpec extends SparkSpec {
       pairs(Dedup.similarityJoin(docs, 1, 2)))
   }
 
-  test("bucketed index appends: batches == one-shot bucketed ingest for " +
-       "gram AND shingle; consumers stay exchange-free after appends") {
+  test("bucketed index appends: batches == one-shot bucketed ingest; " +
+       "consumers stay exchange-free after appends") {
     val docs = Tables.documents(spark, sf)
     val a = docs.filter(abs(xxhash64(col("doc_id"))) % 2 === 0)
     val b = docs.filter(abs(xxhash64(col("doc_id"))) % 2 =!= 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    // gram: two appends (the first bootstraps the table) == one-shot
-    val gtbl = graft.ops.Scratch.bucketedTable(spark, sf, "gram_appb")
-    Dedup.gramIndexAppendBucketed(a, gtbl)
-    Dedup.gramIndexAppendBucketed(b, gtbl)
-    val gidx = Dedup.gramIndexBucketed(spark, gtbl)
-    assert(rows(gidx.select("doc_id", "source", "g")) ==
-      rows(Dedup.gramPostings(docs)))
-    // exchange-free df aggregation survives the multi-file buckets
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val dfAgg = gidx.groupBy("g").agg(count(lit(1)).as("df"))
-      dfAgg.collect()
-      assert(graft.ops.Scale.countExchanges(dfAgg) == 0,
-        "appended bucketed index must keep the exchange-free df plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    // shingle: appends == one-shot for postings AND the sets sidecar
+    // two appends (the first bootstraps the table) == one-shot, for the
+    // postings AND the sets sidecar
     val stbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_appb")
     val stbl2 = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_oneb")
     Dedup.shingleIndexAppendBucketed(a, stbl)
@@ -530,6 +517,16 @@ class DedupSpec extends SparkSpec {
       rows(Dedup.shinglePostingsBucketed(spark, stbl2)))
     assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) ==
       rows(Dedup.shingleSetsSidecar(spark, stbl2)))
+    // exchange-free df aggregation survives the multi-file buckets
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val dfAgg = Dedup.shinglePostingsBucketed(spark, stbl)
+        .groupBy("g").agg(count(lit(1)).as("df"))
+      dfAgg.collect()
+      assert(graft.ops.Scale.countExchanges(dfAgg) == 0,
+        "appended bucketed index must keep the exchange-free df plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     // and the similarity consumers answer identically off the appended form
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -547,51 +544,12 @@ class DedupSpec extends SparkSpec {
     val b = docs.filter(abs(xxhash64(col("doc_id"))) % 2 =!= 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    val wantG = rows(Dedup.gramPostings(docs))
-    // ---- gram bucketed: named batches, replay, compaction ----
-    val gtbl = graft.ops.Scratch.bucketedTable(spark, sf, "gram_xonce")
-    val gpath = graft.ops.Scale.bucketPath(gtbl)
-    def gPartitions(): Int = Option(new java.io.File(gpath).listFiles())
-      .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
-      .getOrElse(0)
-    Dedup.gramIndexAppendBucketed(a, gtbl, batchId = 0)
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
-    // committed replay: manifest marker present → no write job, no dupes
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
-      "a committed replay must not double-append")
-    // crash replay: manifest lost (crash before marker) → the replay
-    // rewrites ONLY its own partition (dynamic overwrite), still no dupes
-    graft.ops.Scratch.deleteRec(
-      new java.io.File(s"${gpath}_meta/batches/1"))
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1)
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
-      "a crash replay must rewrite only its own partition")
-    // compaction: one partition left, consumers identical, replays of
-    // absorbed batches are no-ops, later appends land past the mark
-    assert(gPartitions() == 2)
-    Dedup.gramIndexCompactBucketed(spark, gtbl)
-    assert(gPartitions() == 1, "compaction must merge to one partition")
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
-    Dedup.gramIndexAppendBucketed(b, gtbl, batchId = 1) // absorbed: no-op
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG,
-      "replay of a compacted batch must be a no-op")
-    Dedup.gramIndexCompactBucketed(spark, gtbl) // single partition: no-op
-    assert(rows(Dedup.gramIndexBucketed(spark, gtbl)) == wantG)
-    // exchange-free df agg survives compaction's rewrite
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val dfAgg = Dedup.gramIndexBucketed(spark, gtbl)
-        .groupBy("g").agg(count(lit(1)).as("df"))
-      dfAgg.collect()
-      assert(graft.ops.Scale.countExchanges(dfAgg) == 0,
-        "compacted bucketed index must keep the exchange-free df plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    // ---- shingle bucketed: two sinks, crash window, compaction ----
+    // two sinks, crash window, compaction
     val stbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_xonce")
     val spath = graft.ops.Scale.bucketPath(stbl)
+    def partitions(): Int = Option(new java.io.File(spath).listFiles())
+      .map(_.count(f => f.isDirectory && f.getName.startsWith("batch=")))
+      .getOrElse(0)
     Dedup.shingleIndexAppendBucketed(a, stbl, batchId = 0)
     Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
     val wantP = rows(Dedup.shinglePostingsBucketed(spark, stbl))
@@ -603,7 +561,7 @@ class DedupSpec extends SparkSpec {
     // crash between the two sinks: sets committed, postings manifest
     // missing → compaction must REFUSE (the replay-starvation guard)...
     graft.ops.Scratch.deleteRec(
-      new java.io.File(s"${spath}_meta/batches/1"))
+      new java.io.File(s"${spath}_meta/batch_1"))
     val e = intercept[IllegalArgumentException] {
       Dedup.shingleIndexCompactBucketed(spark, stbl)
     }
@@ -611,7 +569,9 @@ class DedupSpec extends SparkSpec {
     // ...and the replay repairs, after which compaction proceeds with
     // both sinks equal to the pre-compaction state
     Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
+    assert(partitions() == 2)
     Dedup.shingleIndexCompactBucketed(spark, stbl)
+    assert(partitions() == 1, "compaction must merge to one partition")
     assert(rows(Dedup.shinglePostingsBucketed(spark, stbl)) == wantP)
     assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) == wantS)
     // sidecar dirs bounded after compaction
@@ -619,6 +579,23 @@ class DedupSpec extends SparkSpec {
       .map(_.count(f => f.isDirectory && f.getName.startsWith("batch_")))
       .getOrElse(0)
     assert(setsDirs == 1, "compaction must merge the sets sidecar")
+    // replays of absorbed batches are no-ops; a second compaction of the
+    // one remaining partition is too
+    Dedup.shingleIndexAppendBucketed(b, stbl, batchId = 1)
+    Dedup.shingleIndexCompactBucketed(spark, stbl)
+    assert(rows(Dedup.shinglePostingsBucketed(spark, stbl)) == wantP,
+      "replay of a compacted batch must be a no-op")
+    assert(rows(Dedup.shingleSetsSidecar(spark, stbl)) == wantS)
+    // exchange-free df agg survives compaction's rewrite
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val dfAgg = Dedup.shinglePostingsBucketed(spark, stbl)
+        .groupBy("g").agg(count(lit(1)).as("df"))
+      dfAgg.collect()
+      assert(graft.ops.Scale.countExchanges(dfAgg) == 0,
+        "compacted bucketed index must keep the exchange-free df plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
   test("rare-gram similarity join: cap ≥ max df degenerates to the exact " +
@@ -776,6 +753,16 @@ class DedupSpec extends SparkSpec {
     Dedup.gramIndexCompact(spark, s"$base/gram_append")
     assert(Dedup.GramDfSchema == inferred(s"$base/gram_append_df"),
       "after compaction")
+    // the bucketed form's sets sidecar holds shingle-index rows: after an
+    // ingest, after an append and after a compaction
+    val tbl = graft.ops.Scratch.bucketedTable(spark, sf, "shingle_schema")
+    val sets = graft.ops.Scale.bucketPath(tbl) + "_sets"
+    Dedup.shingleIndexIngestBucketed(half, tbl)
+    assert(Dedup.ShingleIndexSchema == inferred(sets), "bucketed ingest")
+    Dedup.shingleIndexAppendBucketed(docs.except(half), tbl)
+    assert(Dedup.ShingleIndexSchema == inferred(sets), "bucketed append")
+    Dedup.shingleIndexCompactBucketed(spark, tbl)
+    assert(Dedup.ShingleIndexSchema == inferred(sets), "bucketed compaction")
   }
 
   test("shingle index append: batch appends == one-shot ingest; replay of " +

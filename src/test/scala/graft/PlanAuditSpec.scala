@@ -304,38 +304,6 @@ class PlanAuditSpec extends SparkSpec {
       "centroid assignment must be a map-only narrow projection")
   }
 
-  test("bucketed gram index: df aggregation and eval⋈train gram join run " +
-       "with NO shuffle exchange") {
-    import graft.dedup.Dedup
-    val docs = Tables.documents(spark, sf)
-    val tbl = graft.ops.Scratch.bucketedTable(spark, sf, "gram_spec")
-    Dedup.gramIndexIngestBucketed(docs, tbl)
-    val idx = Dedup.gramIndexBucketed(spark, tbl)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // force the shuffle-join shape (tiny SF would broadcast and prove
-    // nothing); at index scale SMJ is what the planner picks anyway
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val dfAgg = idx.groupBy("g").agg(count(lit(1)).as("df"))
-      dfAgg.collect()
-      assert(Scale.countExchanges(dfAgg) == 0,
-        s"bucketed df aggregation must not exchange:\n${plan(dfAgg)}")
-      val evalG = idx.filter(col("source") === "src0")
-        .select(col("doc_id").as("eval_doc"), col("g"))
-      val trainG = idx.filter(col("source") =!= "src0")
-        .select(col("doc_id").as("train_doc"), col("g"))
-      val joined = evalG.join(trainG, "g")
-      joined.collect()
-      assert(Scale.countExchanges(joined) == 0,
-        s"bucketed eval⋈train gram join must not exchange:\n${plan(joined)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    // and the bucketed index answers the consumers identically
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Dedup.dupCoverageFrom(idx.select("doc_id", "source", "g"))) ==
-      rows(Dedup.dupCoverage(docs)))
-  }
-
   test("bucketed shingle index: df probe aggregation runs with NO exchange; " +
        "the posting-count consumer's only exchange is the pair groupBy") {
     import graft.dedup.Dedup

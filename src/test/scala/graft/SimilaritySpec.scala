@@ -120,6 +120,8 @@ class SimilaritySpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_pq_stand_spec")
       .toString + "/codes"
     val (books1, n1, _) = Pq.pqIngest(spark, sf, root)
+    // the declared scan schema is the one parquet infers
+    assert(Pq.PqCodesSchema == spark.read.parquet(root).schema)
     def codeFiles() = new java.io.File(root).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified)
       .sortBy(_._1).toSeq
@@ -362,9 +364,13 @@ class SimilaritySpec extends SparkSpec {
       .toString + "/idx"
     val (cents, books, nHalf, _) = IvfPq.ivfPqIngest(spark, srcDir, root)
     assert(nHalf == half.count())
+    // the declared scan schema is the one parquet infers, before and
+    // after the append
+    assert(IvfPq.IvfPqSchema == spark.read.parquet(root).schema)
     // append the other half: encoded with the STANDING model, no retrain
     val (c2, _, nFull) = IvfPq.ivfPqAppend(rest, root)
     assert(nFull == emb.count())
+    assert(IvfPq.IvfPqSchema == spark.read.parquet(root).schema)
     assert(c2.flatten.map(java.lang.Float.floatToRawIntBits).toSeq ==
       cents.flatten.map(java.lang.Float.floatToRawIntBits).toSeq,
       "append must reuse the standing model bit-exactly")
