@@ -11,6 +11,12 @@ import org.apache.spark.sql.SparkSession
   *
   * The ONE session builder: tests, Bench, Verify and every tool main
   * build their session here, so a setting added here reaches all of them.
+  *
+  * It also installs [[graft.plans.SmallSort]] (a root ORDER BY over small
+  * input sorts in one task, without a range exchange), the one planner
+  * rule every graft session carries; `graft.functions.GraftExtensions`
+  * installs the same rule on the `spark.sql.extensions` path, so a
+  * cluster session plans sorts as a local one does.
   */
 object Sessions {
   def local(appName: String = "graft",
@@ -26,6 +32,7 @@ object Sessions {
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
+      .withExtensions(graft.plans.SmallSort.install)
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")

@@ -12,8 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - [[GraftExtensions]] — `SparkSessionExtensions` injection for
   *    `spark.sql.extensions=graft.functions.GraftExtensions`, the
   *    cluster-wide deployment path (SURVEY §7.4(c) registration point):
-  *    the functions plus the [[RewriteTokenize]] optimizer rule and the
-  *    [[graft.plans.IntervalJoinStrategy]] planner strategy.
+  *    the functions plus the [[RewriteTokenize]] optimizer rule, the
+  *    [[graft.plans.IntervalJoinStrategy]] planner strategy and the
+  *    [[graft.plans.SmallSort]] rule (static and AQE passes) — the last is
+  *    the one rule `graft.Sessions.local` installs too, so a cluster
+  *    session and a local one plan a root ORDER BY alike.
   */
 object Registry {
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -45,5 +48,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RewriteTokenize)
     // the custom-operator tier: plans PointInIntervalJoin → IntervalJoinExec
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
+    graft.plans.SmallSort.install(ext)
   }
 }

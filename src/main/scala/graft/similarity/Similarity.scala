@@ -3,6 +3,7 @@ package graft.similarity
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StructType}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim,
   * unit-normalized): brute-force cosine top-k as the exact baseline, and a
@@ -853,12 +854,21 @@ object Similarity {
     }
   }
 
+  /** The columns [[semDeDupIngest]] and [[semDeDupAppend]] write, as
+    * parquet reads them back; reading through it skips the footer
+    * inference a schemaless read runs (SimilaritySpec pins it against
+    * the inferred schema). */
+  val SemDeDupSchema: StructType = new StructType()
+    .add("vec_id", LongType).add("sig", IntegerType)
+    .add("micro", ArrayType(LongType)).add("dself", LongType)
+    .add("keep", BooleanType)
+
   /** The committed standing index: union of every `batch_<id>` whose
     * `_SUCCESS` exists. Half-written (crashed) batches are invisible. */
   def semDeDupIndex(spark: SparkSession, root: String): DataFrame = {
     val dirs = committedBatchDirs(root)
     require(dirs.nonEmpty, s"no committed semantic-dedup batches at $root")
-    spark.read.parquet(dirs: _*)
+    spark.read.schema(SemDeDupSchema).parquet(dirs: _*)
   }
 
   private def committedBatchDirs(root: String): Seq[String] = {

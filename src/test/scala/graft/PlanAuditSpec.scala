@@ -504,6 +504,133 @@ class PlanAuditSpec extends SparkSpec {
         s"regardless of gram heat):\n${p.take(800)}")
   }
 
+  /** Run `body` with `kvs` set on the shared session, then restore. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark jobs `action` starts, counted under a job group of its own so
+    * a stray job from another thread is not counted. */
+  private def jobsOf(action: => Unit): Int = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "jobsOf")
+    try { action; org.apache.spark.sql.GraftBridge.drainListenerBus(spark); n.get }
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private val RangeExchange = "Exchange rangepartitioning"
+
+  test("small root sort (static pass): q02 sorts in one task — Coalesce 1, " +
+       "no range exchange, ONE job per collect") {
+    val p = plan(Core.q02FilterProject(spark, sf))
+    assert(p.contains("Coalesce 1") && !p.contains(RangeExchange),
+      s"a root sort over small input must not range-partition:\n$p")
+    val df = Core.q02FilterProject(spark, sf)
+    val jobs = jobsOf(df.collect())
+    assert(jobs == 1, s"collect() must start 1 job (no sampling job, no " +
+      s"exchange map stage), started $jobs")
+  }
+
+  test("small root sort (AQE pass): q82's final plan has no range exchange " +
+       "once the aggregate's measured output is small") {
+    // sf0.001 leaves q82 one row, a sort Catalyst drops outright; read
+    // the sf0.01 tables next to it
+    val df = Core.q82RegionalRevenue(spark, sf.stripSuffix("sf0.001") + "sf0.01")
+    assert(df.collect().length > 1)
+    val Array(fin, initial) = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")
+    // the static estimate of a six-table join is large, so only the
+    // runtime pass, reading the materialized stage's bytes, can fire
+    assert(initial.contains(RangeExchange),
+      s"q82's static plan was expected to keep the range exchange:\n$initial")
+    assert(fin.contains("Coalesce 1") && !fin.contains(RangeExchange),
+      s"the final AQE plan must sort the small aggregate in one task:\n$fin")
+  }
+
+  test("small root sort: autoBroadcastJoinThreshold=-1 turns it off " +
+       "(q02 keeps the range exchange)") {
+    assert(!plan(Core.q02FilterProject(spark, sf)).contains(RangeExchange))
+    val p = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      plan(Core.q02FilterProject(spark, sf))
+    }
+    assert(p.contains(RangeExchange) && !p.contains("Coalesce 1"),
+      s"with the threshold at -1 the sort must range-partition as before:\n$p")
+  }
+
+  test("small root sort never touches a sort under a limit: q12 stays " +
+       "TakeOrderedAndProject with no Coalesce") {
+    val unlimited = Tables.orders(spark, sf)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    assert(plan(unlimited).contains("Coalesce 1"),
+      "the same sort without the limit plans Coalesce 1")
+    val p = plan(Core.q12TopK(spark, sf))
+    assert(p.contains("TakeOrderedAndProject") && !p.contains("Coalesce"),
+      s"a sort under a limit must stay a top-k:\n$p")
+  }
+
+  test("small root sort never touches a write: orderBy(k).write.parquet " +
+       "writes as many files as without the rule") {
+    val sorted = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
+      .orderBy("l_orderkey")
+    assert(plan(sorted).contains("Coalesce 1"), "the same sort, collected, " +
+      "plans Coalesce 1")
+    val root = java.nio.file.Files.createTempDirectory("smallsort_write").toString
+    def files(rule: Boolean): Int = {
+      val dir = s"$root/rule_$rule"
+      val off = if (rule) Nil else Seq(
+        "spark.sql.optimizer.excludedRules" -> graft.plans.SmallSort.ruleName,
+        "spark.sql.adaptive.optimizer.excludedRules" -> graft.plans.SmallSort.ruleName)
+      // keep every range partition its own file, so one task shows
+      withConf(("spark.sql.adaptive.coalescePartitions.enabled" -> "false") +: off: _*) {
+        sorted.write.parquet(dir)
+      }
+      new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet"))
+    }
+    val (withRule, without) = (files(rule = true), files(rule = false))
+    assert(without > 1 && withRule == without,
+      s"the write must range-partition into $without files, wrote $withRule")
+  }
+
+  test("small root sort never touches a streaming query's plan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("smallsort_stream").toString
+    (1 to 40).map(i => (i % 5, i)).toDF("k", "v").write.parquet(s"$dir/in")
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("k").agg(count(lit(1)).as("n")).orderBy("k")
+    val batch = counts(spark.read.parquet(s"$dir/in"))
+    assert(plan(batch).contains("Coalesce 1"), "the batch twin plans Coalesce 1")
+    val q = counts(spark.readStream.schema(spark.read.parquet(s"$dir/in").schema)
+        .parquet(s"$dir/in"))
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("smallsort_stream").option("checkpointLocation", s"$dir/ckpt")
+      .start()
+    val p = try {
+      q.processAllAvailable()
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+    } finally q.stop()
+    assert(spark.table("smallsort_stream").collect().map(_.getLong(1)).toSeq ==
+      Seq.fill(5)(8L))
+    assert(p.contains(RangeExchange) && !p.contains("Coalesce"),
+      s"a streaming sort must plan as before:\n$p")
+  }
+
   test("q85 mixture sampling: the per-source budget table joins by broadcast") {
     val docs = Tables.documents(spark, sf)
     val kept = graft.ops.Sampling.mixtureSample(

@@ -816,9 +816,15 @@ class SimilaritySpec extends SparkSpec {
     val rootInc = java.nio.file.Files.createTempDirectory("semdd_inc")
       .toString + "/idx"
     Similarity.semDeDupIngest(spark, srcHalf, rootInc)
+    // the declared read schema is the one parquet infers from what the
+    // ingest and the append wrote
+    assert(Similarity.SemDeDupSchema ==
+      spark.read.parquet(s"$rootInc/base").schema)
     val rest = emb.filter(col("vec_id") >= mid)
     val (nInc, keptInc) =
       Similarity.semDeDupAppend(rest, rootInc, batchId = 7L)
+    assert(Similarity.SemDeDupSchema == spark.read.parquet(s"$rootInc/base",
+      graft.ops.Standing.batchDir(rootInc, 7L)).schema)
     def tbl(root: String) = Similarity.semDeDupIndex(spark, root)
       .select("vec_id", "keep").collect()
       .map(r => (r.getLong(0), r.getBoolean(1))).sorted.toSeq
