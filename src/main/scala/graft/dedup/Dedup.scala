@@ -627,7 +627,8 @@ object Dedup {
     val tmp = root + "_compact_tmp"
     graft.ops.Scratch.track(tmp)
     shinglePostingsBucketed(spark, table).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).withColumn("batch", lit(ids.max))
+    spark.read.schema(ShinglePostingSchema).parquet(tmp)
+      .withColumn("batch", lit(ids.max))
       .write.mode("overwrite")
       .partitionBy("batch").bucketBy(buckets, "g").sortBy("g")
       .option("path", root).saveAsTable(table)
@@ -700,7 +701,8 @@ object Dedup {
         n.stripPrefix("batch=").toLong }
 
   /** [[similarityJoin]]'s LOW-τ regime, public so the crossover stays
-    * measurable per-round (TauProbe forces each regime at each τ): |A∩B|
+    * measurable per-round (each regime forced at each τ: BENCHMARKS.md
+    * "τ-dispatch crossover, measured (round 7)"): |A∩B|
     * is the COUNT of posting rows the pair shares — one posting self-join
     * + one partial-agg'd groupBy over 16-byte pair rows (Vernica et al.,
     * SIGMOD'10 shape); J = inter / (n_a + n_b − inter) needs only the
@@ -717,9 +719,10 @@ object Dedup {
     * exchange-free). */
   def shinglePostings(sets: DataFrame): DataFrame =
     // Deliberately NO position column: PPJoin's positional filter was
-    // implemented and MEASURED OUT in round 11 (PairShuffleBench /
-    // ShingleIndexBench A/B): in any global gram order (hash or df), a
-    // shared gram sits at a CORRELATED rank in both docs — both ranks
+    // implemented and MEASURED OUT in round 11 (BENCHMARKS.md "Pair-
+    // aggregation shuffle, attacked with measurements (round 11)"): in
+    // any global gram order (hash or df), a shared gram sits at a
+    // CORRELATED rank in both docs — both ranks
     // ≈ the gram's order percentile × n — so the positional bound
     // min(pos_a, pos_b) + min(n_a−pos_a, n_b−pos_b) ≈ n and prunes only
     // O(√n) fluctuation beyond what the size-ratio filter already
@@ -729,6 +732,13 @@ object Dedup {
     // from heterogeneous-length corpora, where the length gap dominates
     // the bound — and the length filter already prunes those pairs here.
     sets.select(col("doc_id"), col("n"), explode(col("hs")).as("g"))
+
+  /** [[shinglePostings]]' schema as parquet reads it back (every field
+    * nullable). The bucketed compaction reads its tmp dir with it, so it
+    * runs no footer-inference job; DedupSpec pins it against the inferred
+    * schema after a bucketed compaction. */
+  val ShinglePostingSchema: StructType = new StructType()
+    .add("doc_id", LongType).add("n", IntegerType).add("g", LongType)
 
   /** [[similarityJoinPostingCount]] over a prepped/persisted shingle
     * frame ([[shingleSets]] or [[shingleIndex]]). */
@@ -749,13 +759,14 @@ object Dedup {
         col("b.n") * lit(tauDen) >= col("a.n") * lit(tauNum))
       // the aggregation keys carry s = n_a + n_b, NOT both sizes: the
       // final threshold and the jaccard only ever use the SUM, and this
-      // exchange is the family's measured dominant cost —
-      // PairCompositionProbe (r11) shows ≥99.9% of its rows are chance
+      // exchange is the family's measured dominant cost — BENCHMARKS.md
+      // "Pair-aggregation shuffle, attacked with measurements (round
+      // 11)" shows ≥99.9% of its rows are chance
       // pairs sharing 1–2 grams (map-side partial aggregation reduces
       // volume ~1%, so every key byte ships), and no LOSSLESS row prune
       // can touch them: each such row is its pair's only evidence.
       // Dropping the second size column cut the pair shuffle 19–23% at
-      // sf1/sf10 (PairShuffleBench; the raw-repartition variant that
+      // sf1/sf10 (same section; the raw-repartition variant that
       // skips the useless map-side aggregate trades bytes for spill at
       // equal wall and adds a plan barrier — rejected there).
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -828,7 +839,8 @@ object Dedup {
   /** RARE-GRAM similarity join — the declared-contract scale variant of
     * the exact low-τ join, born from round 11's measured dead end: the
     * exact posting-count plan's pair shuffle is Σ_g df(g)² rows, which
-    * no lossless prune can touch (PairCompositionProbe: ≥99.9% of rows
+    * no lossless prune can touch (BENCHMARKS.md "Pair-aggregation
+    * shuffle, attacked with measurements (round 11)": ≥99.9% of rows
     * are chance pairs whose single co-occurrence IS their evidence), and
     * ONE corpus-wide gram makes it quadratic in the corpus. This
     * operator changes the CONTRACT instead of chasing the impossible
@@ -847,7 +859,8 @@ object Dedup {
     * The scale property bought: pair rows = Σ_{df≤cap} df(df−1)/2 ≤
     * (cap−1)/2 · |postings| — LINEAR in the corpus with a cap-sized
     * constant, versus the uncapped plan's df² blowup on heavy-tailed
-    * corpora (measured: TauProbe's planted corpus-wide gram). Costs
+    * corpora (measured on a planted corpus-wide gram: BENCHMARKS.md
+    * "Rare-gram join + the low-τ dispatch cliff (round 11)"). Costs
     * beyond the capped pair join are all linear and keyed: one df
     * aggregation (g), one semi join (g — exchange-free off the bucketed
     * index), one size recount + attach (doc_id). `dfCap ≥ max df`

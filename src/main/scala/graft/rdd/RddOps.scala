@@ -36,12 +36,8 @@ class CentsAvg extends Aggregator[Double, (Long, Long), Double] {
   */
 object RddOps {
 
-  // ----- R1–R4: map / mapValues / flatMap / filter --------------------
-  def mapRecords[T, U: Encoder](ds: Dataset[T])(f: T => U): Dataset[U] = ds.map(f)
-  def flatMapRecords[T, U: Encoder](ds: Dataset[T])(f: T => IterableOnce[U]): Dataset[U] =
-    ds.flatMap(f)
-  def filterRecords[T](ds: Dataset[T])(p: T => Boolean): Dataset[T] = ds.filter(p)
-
+  // ----- R2: mapValues (R1/R3/R4 map/flatMap/filter are the Dataset
+  // operators themselves — COVERAGE.md names the queries using them) ---
   /** R2: value-only transform on a pair RDD — preserves keys AND
     * partitioning (mapValues contract, mapvalues_transformation.py:8-18). */
   def mapValuesPreserving[K: scala.reflect.ClassTag, V: scala.reflect.ClassTag, U](

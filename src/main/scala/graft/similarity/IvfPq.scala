@@ -34,10 +34,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
   * SimilaritySpec demonstrates the recall win on a deliberately
   * CLUSTERED corpus — recall@10 0.575 raw → 0.80 residual at nprobe=k,
   * refine=2, a pure quantization-quality difference — and pins the raw
-  * path unchanged). The batched path serves BOTH modes: residual
-  * batching carries per-(query, cluster) tables as one 4-D literal
-  * (≈1 MB at the chunk size), pinned batch == singles like the raw
-  * path.
+  * path unchanged). The one serving path, [[ivfPqTopKBatch]], serves
+  * BOTH modes: residual batching carries per-(query, cluster) tables
+  * as per-subspace plan literals (≈1 MB at the chunk size), and a
+  * single query is a batch of one.
   *
   * Standing + reused: the (dataset, app)-keyed root carries an
   * ops.Standing validity marker whose payload holds corpus size,
@@ -185,7 +185,7 @@ object IvfPq {
     * (centroids + codebooks read from the validity marker's payload — no
     * retrain, no job over the existing corpus) and append their codes
     * into the same cluster-partitioned layout. Every consumer
-    * ([[ivfPqTopK]], [[ivfPqTopKBatch]], the partition pruning) is
+    * ([[ivfPqTopKBatch]], the partition pruning) is
     * unchanged, and a rebuild with the SAME model over the grown corpus
     * produces the identical codes table (SimilaritySpec pins the
     * multiset). The marker payload is rewritten with the grown corpus
@@ -332,93 +332,6 @@ object IvfPq {
     graft.ops.Standing.markValid(root, fp, p)
   }
 
-  /** QUERY: rank the k centroids against the query DRIVER-SIDE (the
-    * model is k×dim floats — no Spark job), scan only the nprobe nearest
-    * cluster partitions (partition pruning: unprobed clusters are never
-    * listed), ADC-score their codes, re-rank the proportional shortlist
-    * exactly. The scan reads nprobe/k of the codes — at 10^11 vectors
-    * that ratio times M bytes is the whole query cost, and both factors
-    * are knobs this plan exposes. */
-  def ivfPqTopK(spark: SparkSession, root: String, emb: DataFrame,
-                cents: Array[Array[Float]], books: Pq.Codebooks,
-                queryVecId: Long, k: Int, nprobe: Int = 4,
-                corpusSize: Long = -1L, refine: Int = 0,
-                observeName: String = "ivfpq",
-                residual: Boolean = false): DataFrame = {
-    val q = emb.filter(col("vec_id") === queryVecId)
-      .select("embedding").head().getSeq[Float](0).toArray
-    val probe = probeClusters(cents, q, nprobe)
-    // resolve the default corpus size from the FULL index, exactly as the
-    // batch path does: leaving -1 through would let adcTopKOnCodes size
-    // the proportional shortlist from the PRUNED frame's count (~nprobe/k
-    // of the corpus), silently shrinking the shortlist vs ivfPqTopKBatch
-    // and breaking the "matches row-for-row" contract on the default-args
-    // path (r11 review find; in-repo callers pass corpusSize explicitly).
-    val corpusN = if (corpusSize >= 0L) corpusSize
-      else ivfPqCodes(spark, root).count()
-    if (!residual) {
-      val pruned = ivfPqCodes(spark, root)
-        .filter(col("cluster").isInCollection(probe))
-        .select("vec_id", "codes")
-        // the pruning ratio, in-artifact: scanned codes rows ≈ n·nprobe/k
-        .observe(observeName, count(lit(1)).as("scanned_rows"))
-      return Pq.adcTopKOnCodes(pruned, emb, queryVecId, k, books,
-        refine = refine, corpusSize = corpusN,
-        observeName = observeName + "_pq")
-    }
-    // RESIDUAL ADC (classic IVFADC): codes quantize r = x − c_cluster, so
-    // ||q − x̃||² = ||(q − c_cluster) − r̃||² — the distance table is
-    // per-CLUSTER, built driver-side from (q − c) for each PROBED cluster
-    // (nprobe·M·K doubles — model-sized; unprobed slots ride as zeros and
-    // are unreachable behind the partition pruning). Same plan shape as
-    // the raw path otherwise: pruned scan over codes, proportional
-    // shortlist, exact re-rank.
-    val m = books.length
-    val sub = books.head.head.length
-    val refine2 = if (refine > 0) refine
-      else Pq.proportionalShortlist(corpusN)
-    val probed = probe.toSet
-    val table: Seq[Seq[Seq[Double]]] = cents.indices.map { c =>
-      if (!probed.contains(c)) books.map(_.map(_ => 0.0).toSeq).toSeq
-      else books.zipWithIndex.map { case (cw, mi) =>
-        cw.map { code =>
-          var s = 0.0
-          var i = 0
-          while (i < sub) {
-            val dlt = q(mi * sub + i).toDouble - cents(c)(mi * sub + i) -
-              code(i)
-            s += dlt * dlt
-            i += 1
-          }
-          s
-        }.toSeq
-      }.toSeq
-    }
-    val t = typedlit(table)
-    val adc = (0 until m).map(mi =>
-        element_at(element_at(element_at(t, col("cluster") + 1), mi + 1),
-          element_at(col("codes"), mi + 1) + 1))
-      .reduce(_ + _)
-    val shortlist = ivfPqCodes(spark, root)
-      .filter(col("cluster").isInCollection(probe))
-      .select(col("vec_id"), col("cluster"), col("codes"))
-      .observe(observeName, count(lit(1)).as("scanned_rows"))
-      .filter(col("vec_id") =!= queryVecId)
-      .withColumn("adc_dist", adc)
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k * refine2)
-      .select("vec_id")
-      .observe(observeName + "_pq", count(lit(1)).as("shortlist_rows"))
-    emb.join(broadcast(shortlist), "vec_id")
-      .crossJoin(broadcast(emb.filter(col("vec_id") === queryVecId)
-        .select(col("embedding").as("q_embedding"))))
-      .select(col("vec_id"),
-        round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
-          .as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
   /** Driver-side probe selection: dot(q, centroid) over the k-row model
     * — no Spark job; ties break toward the lowest cluster id. */
   private def probeClusters(cents: Array[Array[Float]], q: Array[Float],
@@ -429,16 +342,23 @@ object IvfPq {
       (s, i)
     }.sortBy { case (dot, cid) => (-dot, cid) }.take(nprobe).map(_._2).toSeq
 
-  /** BATCHED IVF-PQ: q126's one-scan batch composed with q129's
-    * partition pruning — the production serving shape (FAISS batch
-    * search). One scan reads the UNION of the batch's probed cluster
-    * partitions (partition pruning at the file index; everything
-    * outside every query's probe set is never listed); each scanned row
-    * explodes to ONLY the queries whose probe set contains its cluster
-    * (a cluster → [qi] plan literal, r12) and is ADC-scored map-side
-    * for those survivors alone — so per query the candidate set is
-    * EXACTLY [[ivfPqTopK]]'s, and the output matches it row-for-row
-    * (SimilaritySpec pins it). Shuffle
+  /** QUERY, the one IVF-PQ serving path: q126's one-scan batch composed
+    * with partition pruning — the production serving shape (FAISS batch
+    * search); a single query is a batch of one. Each query ranks the k
+    * centroids DRIVER-SIDE (the model is k×dim floats — no Spark job) and
+    * probes its nprobe nearest. One scan reads the UNION of the batch's
+    * probed cluster partitions (partition pruning at the file index;
+    * everything outside every query's probe set is never listed); each
+    * scanned row explodes to ONLY the queries whose probe set contains
+    * its cluster (a cluster → [qi] plan literal, r12) and is ADC-scored
+    * map-side for those survivors alone — so per query the candidate set
+    * is exactly its own nprobe clusters, whichever batch or chunk it
+    * rides in (SimilaritySpec pins batch == each query run as a batch of
+    * one, row-for-row). The scan reads nprobe/k of the codes per query —
+    * at 10^11 vectors that ratio times M bytes is the whole query cost.
+    * `corpusSize < 0` resolves from the FULL index (never the pruned
+    * scan's count), so the default shortlist matches the explicit-size
+    * plan. Shuffle
     * after the scan is O(Q × k·refine) TopKByScore buffers; the exact
     * re-rank touches only shortlist vectors. Chunked at
     * [[graft.Tuning.IvfPqBatchMaxQ]] (its OWN ceiling since r12: the
@@ -451,10 +371,11 @@ object IvfPq {
     * Greedy min-union packing (driver-side over the already-collected
     * probe sets, O(Q²·nprobe) on model-sized data) keeps each chunk's
     * union narrow; result-invariance is free because the per-(query,
-    * row) probe restriction enforces the single-query contract
-    * regardless of which chunk a query rides in (SimilaritySpec pins
-    * chunked == singles; scanned-rows deltas measured in IvfPqProbe
-    * `chunks` mode). Returns (q_id, rk, vec_id, cos_sim). */
+    * row) probe restriction gives each query its own candidate set
+    * regardless of which chunk it rides in (SimilaritySpec pins
+    * chunked == unchunked; the scanned-rows deltas are in BENCHMARKS.md
+    * "Batch chunking by probe overlap (round 11)"). Returns
+    * (q_id, rk, vec_id, cos_sim). */
   def ivfPqTopKBatch(spark: SparkSession, root: String, emb: DataFrame,
                      cents: Array[Array[Float]], books: Pq.Codebooks,
                      queryIds: Seq[Long], k: Int, nprobe: Int = 4,
@@ -538,8 +459,8 @@ object IvfPq {
     // queries that probe the row's cluster (cluster → [qi] is a
     // model-sized plan literal), instead of the r11 shape — compute all
     // Q ADC distances per row, then filter each pair against its
-    // query's probe set. Same surviving pair multiset (specs pin batch
-    // == singles row-for-row), but the ADC work drops from Q to
+    // query's probe set. Same surviving pair multiset, but the ADC work
+    // drops from Q to
     // |probers(cluster)| per scanned row — at nprobe/k = 6/16 that is
     // ~2.7× less distance compute in the serving hot loop, the term
     // that IS the query cost at 10¹¹ vectors. It also shrinks the
@@ -572,16 +493,19 @@ object IvfPq {
     * ([[Pq.adcSubspaceTableCols]] — each referenced once, so the task
     * binary stays model-sized at any Q; r13), summed via the shared
     * qi-column expression [[Pq.adcSumAtQi]] — one definition with
-    * the flat batch scorer, so the "bit-identical to the single-query
-    * plan" guarantee cannot drift between the two paths. */
+    * the flat batch scorer, so the ADC distance cannot drift between
+    * the two paths. */
   private def rawAdcExpr(books: Pq.Codebooks, qIds: Seq[Long],
                          qVecs: Map[Long, Array[Float]]): Column =
     Pq.adcSumAtQi(Pq.adcSubspaceTableCols(books, qIds, qVecs))
 
-  /** RESIDUAL-mode ADC distance of the exploded (row, qi) pair: one 4-D
-    * plan literal holds each query's PER-CLUSTER distance tables
-    * (Q·k·M·K doubles — ≈1 MB at the IvfPqBatchMaxQ chunk size of 32
-    * this path runs at; ~8× that if a caller forces AdcBatchMaxQ-sized
+  /** RESIDUAL-mode ADC distance of the exploded (row, qi) pair (classic
+    * IVFADC: codes quantize r = x − c_cluster, so ||q − x̃||² =
+    * ||(q − c_cluster) − r̃||² and the table is per-CLUSTER, built from
+    * q − c): one 4-D plan literal holds each query's PER-CLUSTER
+    * distance tables (Q·k·M·K doubles — ≈1 MB at the IvfPqBatchMaxQ
+    * chunk size of 32 this path runs at; ~8× that if a caller forces
+    * AdcBatchMaxQ-sized
     * residual chunks), built only for the (query, cluster) slots the query
     * actually probes; everything else rides as zeros and — since the
     * probers-by-cluster explode generates only probed (query, row)
@@ -626,55 +550,9 @@ object IvfPq {
     }.reduce(_ + _)
   }
 
-  /** Batch-average recall contract — the metric ANN benchmarks actually
-    * report (mean recall@k over a query set), and the RIGHT one for an
-    * IVF method on this corpus: the synthetic vectors are near-uniform
-    * on the sphere (IVF's textbook adversarial case — true neighbors
-    * spread across clusters ~uniformly, so single-query recall ≈
-    * nprobe/k exactly, measured: IvfPqProbe at sf0.1 tracks 0.2/0.25,
-    * 0.4/0.50, 0.5/0.63 for query 0), which makes any per-query floor a
-    * binomial coin-flip while the BATCH MEAN concentrates (measured
-    * 0.55 over queries 0–3 at nprobe=6). Per-query rows keep the exact
-    * accounting (n_ann = k, the oracle-recomputed exact min cosine);
-    * the boolean pins the batch mean ≥ `minAvgRecall`. */
-  def annContractBatchAvg(ann: DataFrame, emb: DataFrame,
-                          queryIds: Seq[Long], k: Int,
-                          minAvgRecall: Double): DataFrame = {
-    val qIds = queryIds.distinct.sorted
-    val qSide = emb.filter(col("vec_id").isInCollection(qIds))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
-    val topK = udaf(new graft.functions.TopKByScore(k))
-    // one corpus scan answers the whole batch's exact side (the knnJoin
-    // shape — broadcast queries, bounded top-k aggregate)
-    val bf = emb.crossJoin(broadcast(qSide))
-      .select(col("q_id"), col("vec_id"),
-        round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
-          .as("cos_sim"))
-      .groupBy("q_id").agg(topK(col("cos_sim"), col("vec_id")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("entry"))
-      .select(col("q_id"), col("entry._2").as("vec_id"),
-        col("entry._1").as("cos_sim"))
-    val perQuery = ann.select(col("q_id"), col("vec_id"))
-      .withColumn("in_ann", lit(1))
-      .join(bf.withColumn("in_bf", lit(1)), Seq("q_id", "vec_id"), "full_outer")
-      .groupBy("q_id")
-      .agg(count(col("in_ann")).as("n_ann"),
-        count(when(col("in_ann").isNotNull &&
-          col("in_bf").isNotNull, 1)).as("n_hits"),
-        min(col("cos_sim")).as("exact_topk_min_cos"))
-    perQuery
-      // batch mean over |queries| rows — a trivially small window
-      .withColumn("avg_recall",
-        avg(col("n_hits").cast("double") / k)
-          .over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .select(col("q_id"), lit(k).as("k"), col("n_ann"),
-        col("exact_topk_min_cos"),
-        (col("avg_recall") >= minAvgRecall).as("batch_recall_ok"))
-      .orderBy("q_id")
-  }
-
   /** q129: the composed index under a BATCH-average recall contract
-    * (see [[annContractBatchAvg]] — on this deliberately unclusterable
+    * (the batch-mean floor mode of [[Similarity.annContract]] — on this
+    * deliberately unclusterable
     * corpus, IVF recall ≈ scanned fraction by construction, so the
     * per-query floor of q46/q104 would be a coin-flip here while the
     * 4-query mean concentrates; ANN benchmarks report the mean). nprobe
@@ -682,22 +560,19 @@ object IvfPq {
     * real, clusterable embedding corpus the same plan prunes 10–100×;
     * what this corpus CAN pin is the plan shape: partition-pruned scan,
     * M-byte payload, bounded shortlist) with the 2× proportional
-    * shortlist (the q126 margin; PQ-stage loss measured ZERO here —
-    * IvfPqProbe's refine axis is flat). Floor 0.35 vs measured batch
-    * means 0.48–0.60 across sf0.001–sf10 (IvfPqProbe, nprobe=6,
-    * refine 2×). */
+    * shortlist (the q126 margin; PQ-stage loss measured ZERO here — the
+    * refine axis is flat). Floor 0.35 vs measured batch means 0.48–0.60
+    * across sf0.001–sf10 at nprobe=6, refine 2× (BENCHMARKS.md "Composed
+    * IVF-PQ (q129): recall surface measured, floor set from it"). */
   def qIvfPq(spark: SparkSession, d: String): DataFrame = {
     val (cents, books, n, root) = ivfPqIngest(spark, d)
     val emb = Tables.embeddings(spark, d)
     val refine = Pq.proportionalShortlist(n, mult = 2)
-    val qIds = Seq(0L, 1L, 2L, 3L)
-    // the BATCH path: one union-of-probes scan answers all four queries
-    // (per-query results pinned identical to the single-query plan by
-    // SimilaritySpec, so the registered shape is the production one)
-    val ann = ivfPqTopKBatch(spark, root, emb, cents, books, qIds, k = 10,
-        nprobe = 6, corpusSize = n, refine = refine)
-      .select(col("q_id"), col("vec_id"))
-    annContractBatchAvg(ann, emb, qIds, 10, minAvgRecall = 0.35)
+    // one union-of-probes scan answers all four queries
+    val ann = ivfPqTopKBatch(spark, root, emb, cents, books, Pq.BatchQueries,
+      k = 10, nprobe = 6, corpusSize = n, refine = refine)
+    Similarity.annContract(ann, emb, Pq.BatchQueries, 10, minRecall = 0.35,
+      batchMean = true)
   }
 
   /** q131: the RESIDUAL index under the same batch-average recall
@@ -708,46 +583,28 @@ object IvfPq {
     * the contract pins that residual codes are AS GOOD, i.e. the mode
     * changes representation, never correctness). Served through the
     * batched residual plan — one union-of-probes scan, per-(query,
-    * cluster) tables — pinned row-identical to the residual singles by
-    * SimilaritySpec, same as q129's raw batch. */
+    * cluster) tables — same as q129's raw batch. */
   def qIvfPqResidual(spark: SparkSession, d: String): DataFrame = {
     val (cents, books, n, root) = ivfPqIngest(spark, d, residual = true)
     val emb = Tables.embeddings(spark, d)
     val refine = Pq.proportionalShortlist(n, mult = 2)
-    val qIds = Seq(0L, 1L, 2L, 3L)
-    val ann = ivfPqTopKBatch(spark, root, emb, cents, books, qIds, k = 10,
-        nprobe = 6, corpusSize = n, refine = refine, residual = true)
-      .select(col("q_id"), col("vec_id"))
-    annContractBatchAvg(ann, emb, qIds, 10, minAvgRecall = 0.35)
+    val ann = ivfPqTopKBatch(spark, root, emb, cents, books, Pq.BatchQueries,
+      k = 10, nprobe = 6, corpusSize = n, refine = refine, residual = true)
+    Similarity.annContract(ann, emb, Pq.BatchQueries, 10, minRecall = 0.35,
+      batchMean = true)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q129_ivf_pq" -> (qIvfPq _),
     "q131_ivf_pq_residual" -> (qIvfPqResidual _))
 
-  /** q129's oracle: per-query exact top-k accounting (the q126 shape) —
-    * DuckDB recomputes each query's brute-force top-10 min cosine and
-    * pins n_ann = k and the batch-mean recall boolean TRUE. */
-  private lazy val ivfPqOracle: String = s"""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS q_embedding
-               FROM embeddings WHERE vec_id IN (0, 1, 2, 3)),
-    ranked AS (
-      SELECT q.q_id, e.vec_id,
-             ROUND(${Similarity.duckCos("e.embedding", "q_embedding")}, 6) AS cos_sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.q_id
-               ORDER BY ROUND(${Similarity.duckCos("e.embedding", "q_embedding")}, 6) DESC,
-                        e.vec_id) AS rn
-      FROM embeddings e CROSS JOIN q)
-    SELECT q_id, 10 AS k, CAST(10 AS BIGINT) AS n_ann,
-           MIN(cos_sim) AS exact_topk_min_cos, TRUE AS batch_recall_ok
-    FROM ranked WHERE rn <= 10 GROUP BY q_id ORDER BY q_id"""
-
-  val oracles: Map[String, String] = Map(
-    "q129_ivf_pq" -> ivfPqOracle,
-    // q131 carries the identical accounting contract: the oracle is a
-    // property of the EXACT side (brute-force top-10 per query) plus the
-    // pinned-TRUE recall boolean, independent of which ANN index
-    // produced the candidates
-    "q131_ivf_pq_residual" -> ivfPqOracle)
+  /** q131 carries q129's accounting contract: the oracle is a property
+    * of the EXACT side (brute-force top-10 per query) plus the
+    * pinned-TRUE recall boolean, independent of which ANN index produced
+    * the candidates. */
+  val oracles: Map[String, String] = {
+    val batchMean = Similarity.annContractOracle(Pq.BatchQueries,
+      batchMean = true)
+    Map("q129_ivf_pq" -> batchMean, "q131_ivf_pq_residual" -> batchMean)
+  }
 }

@@ -171,87 +171,33 @@ object Pq {
     // structs per row — CPU-dense, ~100 B/row payload); on big corpora
     // fan it out to cores rather than the source file count (same gate as
     // the training-sample fanout). In production the codes are
-    // PRE-ENCODED at ingest ([[adcTopKOnCodes]], q122) and the scan reads
+    // PRE-ENCODED at ingest ([[pqIngest]], q122) and the scan reads
     // M bytes/vector at file parallelism; encode-on-the-fly is the
-    // demo-shape cost.
+    // demo-shape cost. One query is a batch of one: the scan, shortlist
+    // and re-rank are [[adcTopKBatch]]'s.
     val embP = if (fanout > 0) emb.repartition(fanout) else emb
-    adcTopKOnCodes(encode(embP, books).select("vec_id", "codes"),
-      emb, queryVecId, k, books, refine2)
+    adcTopKBatch(encode(embP, books).select("vec_id", "codes"),
+        emb, Seq(queryVecId), k, books, refine = refine2)
+      .select("vec_id", "cos_sim")
   }
 
-  /** ADC query over a PRE-ENCODED codes table — the production hot path.
-    * [[adcTopK]] encodes on the fly (demo shape); at 10^11 vectors the
-    * codes are computed once at ingest ([[encode]] → parquet) and every
-    * query is: build the M×K distance table from the query vector
-    * (driver-side, plan literals), scan M-byte codes summing table
-    * lookups, TakeOrdered the proportional shortlist, then touch float
-    * vectors only for the shortlist re-rank. Nothing in this plan reads
-    * an embedding outside the k·refine broadcast — scan payload is the
-    * codes column, 32× smaller than the vectors.
+  /** ADC query over a PRE-ENCODED codes table — the production hot
+    * path, and the ONE ANN serving path for flat PQ: a single query is a
+    * batch of one (q104's [[adcTopK]], q122's [[pqQuery]]); a real batch
+    * (q126) amortizes the scan, which at 10^11 vectors is the entire
+    * cost, over every query in it. Nothing in this plan reads an
+    * embedding outside the query vectors and the k·refine shortlist —
+    * the scan payload is the codes column, 32× smaller than the vectors.
     *
-    * Callers with a standing index should pass `corpusSize` (qPqScan
-    * already counts at ingest): the proportional-shortlist default
-    * otherwise runs a codes.count() job per query — one extra full scan
-    * on what is documented as the production hot path. */
-  def adcTopKOnCodes(codes: DataFrame, emb: DataFrame, queryVecId: Long,
-                     k: Int, books: Codebooks,
-                     refine: Int = 0, corpusSize: Long = -1L,
-                     observeName: String = "pq"): DataFrame = {
-    val m = books.length
-    val sub = books.head.head.length
-    val refine2 =
-      if (refine > 0) refine
-      else proportionalShortlist(
-        if (corpusSize >= 0L) corpusSize else codes.count())
-    val q = emb.filter(col("vec_id") === queryVecId)
-      .select("embedding").head().getSeq[Float](0).toArray
-    val table: Seq[Seq[Double]] = books.zipWithIndex.map { case (cents, mi) =>
-      cents.map { c =>
-        var s = 0.0
-        var i = 0
-        while (i < sub) {
-          val dlt = q(mi * sub + i).toDouble - c(i)
-          s += dlt * dlt
-          i += 1
-        }
-        s
-      }.toSeq
-    }.toSeq
-    val t = typedlit(table)
-    val adc = (0 until m).map(mi =>
-        element_at(element_at(t, mi + 1), element_at(col("codes"), mi + 1) + 1))
-      .reduce(_ + _)
-    val shortlist = codes
-      .filter(col("vec_id") =!= queryVecId)
-      .withColumn("adc_dist", adc)
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k * refine2)
-      .select("vec_id")
-      // zero-extra-pass volume counter: the shortlist size IS the scale
-      // dial of this plan (proportional sizing, r7) — the bench artifact
-      // carries it so a q104/q122 wall-time flag arrives with its volume.
-      // Name parameterized: callers composing several single-query plans
-      // into one frame (IvfPq's batch) need unique observation names.
-      .observe(observeName, count(lit(1)).as("shortlist_rows"))
-    emb.join(broadcast(shortlist), "vec_id")
-      .crossJoin(broadcast(emb.filter(col("vec_id") === queryVecId)
-        .select(col("embedding").as("q_embedding"))))
-      .select(col("vec_id"),
-        round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
-          .as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Batched ADC: ONE codes scan answers a whole query batch — the
-    * production retrieval shape ([[adcTopK]]/[[adcTopKOnCodes]] answer a
-    * single query per scan; real serving amortizes the scan, which at
-    * 10^11 vectors is the entire cost, over every query in the batch).
+    * `refine ≤ 0` sizes the shortlist with [[proportionalShortlist]] from
+    * `corpusSize`; callers with a standing index should pass it (pqIngest
+    * counts at ingest), since the default otherwise runs a codes.count()
+    * job per call.
     *
     * Plan: all Q per-query M×K distance tables ride the plan as ONE 3-D
     * literal (Q·M·K doubles — model-sized); each codes row computes its Q
-    * ADC distances in a single projection (fixed subspace order → sums
-    * bit-identical to the single-query plan) and posexplodes to
+    * ADC distances in a single projection (fixed subspace order →
+    * deterministic sums) and posexplodes to
     * (query, dist) pairs MAP-SIDE; per-query shortlists come from the
     * bounded [[graft.functions.TopKByScore]] aggregate, so the only
     * shuffle after the scan is O(Q × k·refine) buffer rows — never the
@@ -260,10 +206,12 @@ object Pq {
     * vectors for the Q·k·refine shortlist rows only, with both the
     * shortlist and the Q query vectors broadcast.
     *
-    * Per query, the output is IDENTICAL to [[adcTopKOnCodes]] — same
-    * shortlist set (TopKByScore's (score desc, id asc) == (adc_dist asc,
-    * vec_id asc)), same re-rank order — PqSpec pins batch == Q
-    * single-query runs row-for-row. Returns (q_id, rk, vec_id, cos_sim).
+    * Per query, the output does not depend on the batch it rides in —
+    * the shortlist is (adc_dist asc, vec_id asc) via TopKByScore's
+    * (score desc, id asc), the re-rank (cos_sim desc, vec_id asc) —
+    * SimilaritySpec pins the batch == each query run as a batch of one
+    * and == an orderBy+limit reference plan, row-for-row. Returns
+    * (q_id, rk, vec_id, cos_sim).
     *
     * Batches larger than `maxChunk` ([[graft.Tuning.AdcBatchMaxQ]]) are
     * CHUNKED into independent sub-batch scans and unioned. HISTORY: the
@@ -336,9 +284,9 @@ object Pq {
     * (qi, adc_dist) pairs — all Q M×K distance tables ride the plan as
     * ONE 3-D literal ([[adcTables]]), the lookup keyed by the qi COLUMN
     * ([[adcSumAtQi]] — one M-term sum at any Q), sums in fixed subspace
-    * order (bit-identical to the single-query plan), each query's own
-    * row excluded. (The IVF-PQ batch path has its own prober-restricted
-    * explode in IvfPq — it no longer routes through here.) */
+    * order (deterministic), each query's own row excluded. (The IVF-PQ
+    * batch path has its own prober-restricted explode in IvfPq — it no
+    * longer routes through here.) */
   private[similarity] def adcPairs(codes: DataFrame, books: Codebooks,
                                    qIds: Seq[Long],
                                    qVecs: Map[Long, Array[Float]]): DataFrame = {
@@ -352,8 +300,7 @@ object Pq {
     // sweep": Q=256 single-plan ran 0.75× of SINGLES and OOM'd a 16 GB
     // driver on a JIT deopt of the giant method). With the lookup keyed
     // by the qi column, the generated code is ONE M-term sum at any Q —
-    // same (row, qi) pair multiset, same distances (PqSpec pins batch ==
-    // singles row-for-row).
+    // same (row, qi) pair multiset, same distances.
     codes
       .select(col("*"),
         explode(typedlit(qIds.indices.toList)).as("qi"))
@@ -363,9 +310,9 @@ object Pq {
 
   /** The Q×M×K raw ADC distance tables (squared-distance contribution of
     * each (query, subspace, code) cell) — ONE definition shared by the
-    * flat batch scorer above and IvfPq's raw batch path, so the
-    * "bit-identical to the single-query plan" guarantee lives in one
-    * place (r12 review find: the builder had been duplicated verbatim). */
+    * flat batch scorer above and IvfPq's raw batch path, so the ADC
+    * distance lives in one place (r12 review find: the builder had been
+    * duplicated verbatim). */
   private[similarity] def adcTables(
       books: Codebooks, qIds: Seq[Long],
       qVecs: Map[Long, Array[Float]]): Seq[Seq[Seq[Double]]] = {
@@ -435,7 +382,7 @@ object Pq {
     val shortlist = pairs
       .groupBy("qi")
       // negated distance: TopKByScore keeps (score desc, id asc) ==
-      // (adc_dist asc, vec_id asc), the single-query shortlist order
+      // (adc_dist asc, vec_id asc), the shortlist order
       .agg(shortTopK(-col("adc_dist"), col("vec_id")).as("top"))
       .select(element_at(qIdsLit, col("qi") + 1).as("q_id"),
         explode(col("top")).as("entry"))
@@ -462,17 +409,18 @@ object Pq {
   }
 
   /** PQ-ANN top-10 for query vec_id=0, as its oracle-checkable contract
-    * ([[graft.similarity.Similarity.annContract]], floor calibrated from
-    * measured 0.8–0.9 single-query recall); the raw neighbor list and
-    * determinism stay spec-pinned in SimilaritySpec. */
+    * ([[graft.similarity.Similarity.annContract]], per-query floor
+    * calibrated from measured 0.8–0.9 single-query recall); the raw
+    * neighbor list and determinism stay spec-pinned in SimilaritySpec. */
   def qPqAnn(spark: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    graft.similarity.Similarity.annContract(
-      adcTopK(emb, queryVecId = 0L, k = 10), emb, 0L, 10, minRecall = 0.6)
+    Similarity.annContract(
+      adcTopK(emb, queryVecId = 0L, k = 10).withColumn("q_id", lit(0L)),
+      emb, Seq(0L), 10, minRecall = 0.6)
   }
 
   /** q122: the ingest-then-scan split made real — codes encoded once,
-    * persisted to parquet, re-read, and queried via [[adcTopKOnCodes]];
+    * persisted to parquet, re-read, and queried via [[adcTopKBatch]];
     * the same recall contract as q104 holds because the codes are
     * byte-identical to the in-flight encode (PqSpec pins encode
     * determinism). The write is the ingest-time cost a standing index
@@ -489,8 +437,8 @@ object Pq {
     * from [[pqQuery]] so the two phases can be TIMED apart — the
     * registered q122 number is the honest ingest+query total, but a
     * regression gate that only sees the sum hides a scan-path (production
-    * hot path) regression inside training noise; tools.PqBench times each
-    * side, BENCHMARKS.md records them.
+    * hot path) regression inside training noise; BENCHMARKS.md "PQ ingest
+    * vs scan, split-timed (round 8)" records the two sides apart.
     *
     * STANDS between calls (r9 verdict item): a completed ingest writes a
     * content-addressed validity marker ([[graft.ops.Standing]]) carrying
@@ -562,55 +510,21 @@ object Pq {
   }
 
   /** q122's QUERY phase alone: ADC scan over the standing codes table +
-    * shortlist re-rank, wrapped in the recall contract. Touches the
-    * embeddings only for the query vector and the k·refine shortlist. */
+    * shortlist re-rank (a batch of one), wrapped in the recall contract.
+    * Touches the embeddings only for the query vector and the k·refine
+    * shortlist. */
   def pqQuery(spark: SparkSession, d: String, root: String,
               books: Codebooks, n: Long): DataFrame = {
     val emb = Tables.embeddings(spark, d)
     val codes = pqCodes(spark, root)
-    graft.similarity.Similarity.annContract(
-      adcTopKOnCodes(codes, emb, queryVecId = 0L, k = 10, books,
-        corpusSize = n),
-      emb, 0L, 10, minRecall = 0.6)
-  }
-
-  /** Per-query [[Similarity.annContract]] over a batched ANN result — one
-    * contract row per query, same columns/convention as the single-query
-    * contract (the exact side KEEPS the query itself, as bruteForceTopK
-    * does; the recall floors are calibrated against that). The exact side
-    * is one corpus scan for the whole batch (broadcast query side +
-    * bounded top-k aggregate — the knnJoin shape), so the oracle check
-    * itself scales the way the engine does. */
-  def annContractBatch(ann: DataFrame, emb: DataFrame, queryIds: Seq[Long],
-                       k: Int, minRecall: Double): DataFrame = {
-    val qIds = queryIds.distinct.sorted
-    val qSide = emb.filter(col("vec_id").isInCollection(qIds))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
-    val topK = udaf(new graft.functions.TopKByScore(k))
-    val bf = emb.crossJoin(broadcast(qSide))
-      .select(col("q_id"), col("vec_id"),
-        round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
-          .as("cos_sim"))
-      .groupBy("q_id").agg(topK(col("cos_sim"), col("vec_id")).as("top"))
-      .select(col("q_id"), explode(col("top")).as("entry"))
-      .select(col("q_id"), col("entry._2").as("vec_id"),
-        col("entry._1").as("cos_sim"))
-    ann.select(col("q_id"), col("vec_id")).withColumn("in_ann", lit(1))
-      .join(bf.withColumn("in_bf", lit(1)), Seq("q_id", "vec_id"), "full_outer")
-      .groupBy("q_id")
-      .agg(count(col("in_ann")).as("n_ann"),
-        count(when(col("in_ann").isNotNull &&
-          col("in_bf").isNotNull, 1)).as("n_hits"),
-        min(col("cos_sim")).as("exact_topk_min_cos"))
-      .select(col("q_id"), lit(k).as("k"), col("n_ann"),
-        col("exact_topk_min_cos"),
-        (col("n_hits").cast("double") / k >= minRecall).as("recall_ok"))
-      .orderBy("q_id")
+    Similarity.annContract(
+      adcTopKBatch(codes, emb, Seq(0L), k = 10, books, corpusSize = n),
+      emb, Seq(0L), 10, minRecall = 0.6)
   }
 
   /** q126: batched ADC over the standing codes table — one index scan
-    * answers four queries, each held to the same recall contract as the
-    * single-query q104/q122 (floor 0.5: measured per-query recall of the
+    * answers four queries, each held to the same per-query recall
+    * contract as q104/q122 (floor 0.5: measured per-query recall of the
     * md5-seeded codebooks on the synthetic vectors is 0.6–0.9 across
     * sf0.001–0.1 for vec_ids 0–3; single-query recall on near-random
     * vectors is intrinsically modest — annContract scaladoc).
@@ -627,39 +541,24 @@ object Pq {
     val (books, n, root) = pqIngest(spark, d)
     val emb = Tables.embeddings(spark, d)
     val codes = pqCodes(spark, root)
-    val qIds = Seq(0L, 1L, 2L, 3L)
     val refine = proportionalShortlist(n, mult = 2)
-    annContractBatch(
-      adcTopKBatch(codes, emb, qIds, k = 10, books, refine = refine,
+    Similarity.annContract(
+      adcTopKBatch(codes, emb, BatchQueries, k = 10, books, refine = refine,
         corpusSize = n),
-      emb, qIds, 10, minRecall = 0.5)
+      emb, BatchQueries, 10, minRecall = 0.5)
   }
+
+  /** The query batch q126 (and IvfPq's q129/q131) answers, shared with
+    * the oracles so a query and its oracle cannot disagree on it. */
+  private[similarity] val BatchQueries: Seq[Long] = Seq(0L, 1L, 2L, 3L)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q104_pq_ann" -> (qPqAnn _),
     "q122_pq_scan" -> (qPqScan _),
     "q126_pq_batch" -> (qPqBatch _))
 
-  /** q126's oracle: the per-query exact top-k contract — DuckDB
-    * recomputes each query's brute-force top-10 min cosine and pins
-    * n_ann = k and recall_ok TRUE for every query in the batch. */
-  private val annContractBatchOracle: String = s"""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS q_embedding
-               FROM embeddings WHERE vec_id IN (0, 1, 2, 3)),
-    ranked AS (
-      SELECT q.q_id, e.vec_id,
-             ROUND(${Similarity.duckCos("e.embedding", "q_embedding")}, 6) AS cos_sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.q_id
-               ORDER BY ROUND(${Similarity.duckCos("e.embedding", "q_embedding")}, 6) DESC,
-                        e.vec_id) AS rn
-      FROM embeddings e CROSS JOIN q)
-    SELECT q_id, 10 AS k, CAST(10 AS BIGINT) AS n_ann,
-           MIN(cos_sim) AS exact_topk_min_cos, TRUE AS recall_ok
-    FROM ranked WHERE rn <= 10 GROUP BY q_id ORDER BY q_id"""
-
   val oracles: Map[String, String] = Map(
-    "q104_pq_ann" -> Similarity.annContractOracle,
-    "q122_pq_scan" -> Similarity.annContractOracle,
-    "q126_pq_batch" -> annContractBatchOracle)
+    "q104_pq_ann" -> Similarity.annContractOracle(Seq(0L)),
+    "q122_pq_scan" -> Similarity.annContractOracle(Seq(0L)),
+    "q126_pq_batch" -> Similarity.annContractOracle(BatchQueries))
 }

@@ -763,6 +763,16 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.ShingleIndexSchema == inferred(sets), "bucketed append")
     Dedup.shingleIndexCompactBucketed(spark, tbl)
     assert(Dedup.ShingleIndexSchema == inferred(sets), "bucketed compaction")
+    // the compaction reads its tmp dir of postings through the declared
+    // posting schema; the tmp dir is gone once compaction returns, so
+    // pin the schema against the same write of the compacted postings
+    // and against the compacted table's own files
+    Dedup.shinglePostingsBucketed(spark, tbl)
+      .write.parquet(s"$base/postings_tmp")
+    assert(Dedup.ShinglePostingSchema == inferred(s"$base/postings_tmp"),
+      "compaction tmp postings")
+    assert(Dedup.ShinglePostingSchema ==
+      inferred(graft.ops.Scale.bucketPath(tbl)), "compacted posting table")
   }
 
   test("shingle index append: batch appends == one-shot ingest; replay of " +
@@ -842,9 +852,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("contract precondition: pair producers emit distinct (doc_a, doc_b)") {
-    // qMinhashVerify's full-outer accounting (and annContract's) silently
-    // corrupts if either side ever carries a duplicate pair — a dup in
-    // `found` fans out the matching exact row and inflates n_exact_pairs.
+    // qMinhashVerify's full-outer accounting silently corrupts if either
+    // side ever carries a duplicate pair — a dup in `found` fans out the
+    // matching exact row and inflates n_exact_pairs (annContract has the
+    // same distinct-side precondition).
     // Pin the precondition on every producer, on BOTH similarityJoin
     // regimes (posting-count at low tau, prefix+verify at high tau).
     def assertDistinctPairs(df: org.apache.spark.sql.DataFrame, what: String): Unit = {

@@ -189,13 +189,13 @@ class PlanAuditSpec extends SparkSpec {
       "q98_global_curriculum" -> "quantile-spec domain",
       // suffix-cumulative retention over the decile-bin table (≤ 11 rows)
       "q118_retention_curve" -> "decile-bin domain",
-      // batch-mean recall over the per-query contract rows (≤ |queries|
-      // = 4 rows; the window is the one-pass way to attach the mean —
-      // a crossJoin of a 1-row agg would re-execute the whole contract
-      // pipeline, the annContract double-execution hazard)
+      // annContract's batch-mean floor mode: the mean recall over the
+      // per-query contract rows (≤ |queries| = 4 rows; the window is the
+      // one-pass way to attach the mean — a crossJoin of a 1-row agg
+      // would re-execute the whole contract pipeline, the annContract
+      // double-execution hazard). Its per-query mode plans no Window.
       "q129_ivf_pq" -> "query-batch domain",
-      // q131 is q129's residual-code twin: same annContractBatchAvg
-      // batch-mean window over the ≤ |queries| contract rows
+      // q131 is q129's residual-code twin: the same batch-mean window
       "q131_ivf_pq_residual" -> "query-batch domain")
     val allowedCartesian = Set("q08_cross_join")
     val plans = SparkEntry.queries.toSeq.sortBy(_._1).map {

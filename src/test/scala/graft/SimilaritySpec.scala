@@ -107,8 +107,8 @@ class SimilaritySpec extends SparkSpec {
     Pq.encode(emb, books).select("vec_id", "codes")
       .write.mode("overwrite").parquet(root)
     val codes = spark.read.parquet(root)
-    val onCodes = Pq.adcTopKOnCodes(codes, emb, 0L, 10, books)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val onCodes = Pq.adcTopKBatch(codes, emb, Seq(0L), 10, books)
+      .collect().map(r => (r.getLong(2), r.getDouble(3))).toSeq
     val inline = Pq.adcTopK(emb, 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(onCodes === inline)
@@ -157,15 +157,54 @@ class SimilaritySpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
-    // the amortized one-scan batch must reproduce each single-query plan
-    // exactly: same shortlist order (TopKByScore == orderBy+limit), same
-    // re-rank — any divergence means the batch is a different algorithm
-    for (q <- qIds) {
-      val single = Pq.adcTopKOnCodes(codes, emb, q, 10, books)
+    // Two independent references per query. (a) The query run as a
+    // batch of one: pins cross-query invariance — nothing a query's
+    // neighbors depend on may leak in from the other queries of its
+    // batch. (b) A test-local single-query plan: the ADC table built
+    // here from the codebooks, the shortlist by orderBy(adc_dist,
+    // vec_id).limit(k·refine), the exact re-rank by orderBy+limit — so a
+    // bug shared by every batch size (TopKByScore's order, the qi-keyed
+    // lookup, the self-exclusion) still shows.
+    import org.apache.spark.sql.functions.{broadcast, element_at, round, typedlit}
+    val refine = Pq.proportionalShortlist(codes.count())
+    val sub = books.head.head.length
+    def reference(q: Long): Seq[(Long, Int, Long, Double)] = {
+      val qv = emb.filter(col("vec_id") === q).select("embedding").head()
+        .getSeq[Float](0).toArray
+      val table = books.toSeq.zipWithIndex.map { case (cents, mi) =>
+        cents.toSeq.map(c => (0 until sub).foldLeft(0.0) { (acc, i) =>
+          val dlt = qv(mi * sub + i).toDouble - c(i)
+          acc + dlt * dlt
+        })
+      }
+      val t = typedlit(table)
+      val adc = books.indices.map(mi => element_at(element_at(t, mi + 1),
+        element_at(col("codes"), mi + 1) + 1)).reduce(_ + _)
+      val shortlist = codes.filter(col("vec_id") =!= q)
+        .withColumn("adc_dist", adc)
+        .orderBy(col("adc_dist"), col("vec_id")).limit(10 * refine)
+        .select("vec_id")
+      emb.join(broadcast(shortlist), "vec_id")
+        .crossJoin(broadcast(emb.filter(col("vec_id") === q)
+          .select(col("embedding").as("q_embedding"))))
+        .select(col("vec_id"),
+          round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
+            .as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id")).limit(10)
         .collect().zipWithIndex
         .map { case (r, i) => (q, i + 1, r.getLong(0), r.getDouble(1)) }
         .toSeq
-      assert(batch.filter(_._1 == q) == single, s"batch diverges for query $q")
+    }
+    for (q <- qIds) {
+      val one = Pq.adcTopKBatch(codes, emb, Seq(q), 10, books)
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+      assert(one.size == 10)
+      assert(batch.filter(_._1 == q) == one,
+        s"batch diverges from the batch of one for query $q")
+      assert(one == reference(q),
+        s"batch of one diverges from the reference plan for query $q")
     }
   }
 
@@ -194,16 +233,16 @@ class SimilaritySpec extends SparkSpec {
       .toString + "/idx"
     val (cents, books, n, _) = IvfPq.ivfPqIngest(spark, sf, root)
     val emb = Tables.embeddings(spark, sf)
-    val ann = IvfPq.ivfPqTopK(spark, root, emb, cents, books,
-      queryVecId = 0L, k = 10, nprobe = 4, corpusSize = n)
-    val got = ann.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val ann = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books,
+      Seq(0L), k = 10, nprobe = 4, corpusSize = n)
+    val got = ann.collect().map(r => (r.getLong(2), r.getDouble(3))).toSeq
     assert(got.size == 10)
     assert(got.map(_._1).distinct.size == 10, "neighbors must be distinct")
     assert(!got.map(_._1).contains(0L), "query itself excluded")
     // the pruning claim, from the in-plan counter: the scan touched only
     // the probed clusters' rows (≈ nprobe/k of the corpus; ≤ 60% guards
     // against silently scanning everything while allowing cluster skew)
-    val scanned = ann.queryExecution.observedMetrics("ivfpq")
+    val scanned = ann.queryExecution.observedMetrics("ivfpq_batch")
       .getLong(0)
     assert(scanned > 0 && scanned < (n * 6) / 10,
       s"probe scan must be pruned: scanned $scanned of $n")
@@ -232,9 +271,9 @@ class SimilaritySpec extends SparkSpec {
       books.flatten.flatten.map(java.lang.Float.floatToRawIntBits).toSeq)
     assert(idxFiles() == files1, "reuse must not rewrite the index")
     // determinism: the reused model answers identically
-    val again = IvfPq.ivfPqTopK(spark, root, emb, c2, b2,
-      queryVecId = 0L, k = 10, nprobe = 4, corpusSize = n2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val again = IvfPq.ivfPqTopKBatch(spark, root, emb, c2, b2,
+      Seq(0L), k = 10, nprobe = 4, corpusSize = n2)
+      .collect().map(r => (r.getLong(2), r.getDouble(3))).toSeq
     assert(again == got)
   }
 
@@ -276,13 +315,12 @@ class SimilaritySpec extends SparkSpec {
     def recall(root: String, cents: Array[Array[Float]],
                books: graft.similarity.Pq.Codebooks,
                residual: Boolean): Double = {
-      val hits = qIds.map { q =>
-        val got = IvfPq.ivfPqTopK(spark, root, emb, cents, books, q, 10,
-            nprobe = kClusters, corpusSize = 2000L, refine = 2,
-            residual = residual)
-          .collect().map(_.getLong(0)).toSet
-        (got intersect truth(q)).size
-      }.sum
+      val got = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books, qIds,
+          10, nprobe = kClusters, corpusSize = 2000L, refine = 2,
+          residual = residual)
+        .collect().groupBy(_.getLong(0))
+        .map { case (q, rows) => q -> rows.map(_.getLong(2)).toSet }
+      val hits = qIds.map(q => (got(q) intersect truth(q)).size).sum
       hits.toDouble / (qIds.size * 10)
     }
     val rootRaw = java.nio.file.Files.createTempDirectory("ivfpq_res_raw")
@@ -322,9 +360,9 @@ class SimilaritySpec extends SparkSpec {
     assert(appended == rebuilt,
       "append into a residual index must encode residuals with the " +
         "standing model")
-    // residual BATCH == residual singles, row-for-row (the q129 raw-path
-    // contract carried to the 4-D per-(query, cluster) table plan),
-    // chunking included
+    // residual BATCH == each query run as a residual batch of one,
+    // row-for-row (the q129 raw-path invariance carried to the
+    // per-(query, cluster) table plan), chunking included
     val batch = IvfPq.ivfPqTopKBatch(spark, rootRes, emb, cRes, bRes,
         qIds, k = 10, nprobe = 6, corpusSize = 2000L, refine = 2,
         residual = true)
@@ -332,12 +370,13 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
     for (q <- qIds) {
-      val single = IvfPq.ivfPqTopK(spark, rootRes, emb, cRes, bRes, q,
-          k = 10, nprobe = 6, corpusSize = 2000L, refine = 2,
+      val single = IvfPq.ivfPqTopKBatch(spark, rootRes, emb, cRes, bRes,
+          Seq(q), k = 10, nprobe = 6, corpusSize = 2000L, refine = 2,
           residual = true)
-        .collect().zipWithIndex
-        .map { case (r, i) => (q, i + 1, r.getLong(0), r.getDouble(1)) }
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
         .toSeq
+      assert(single.size == 10)
       assert(batch.filter(_._1 == q) == single,
         s"residual batch diverges for query $q")
     }
@@ -392,9 +431,9 @@ class SimilaritySpec extends SparkSpec {
       "marker payload must carry the appended corpus size")
     // and the query side serves the appended corpus: neighbors can come
     // from BOTH halves through the same partition-pruned plan
-    val ann = IvfPq.ivfPqTopK(spark, root, emb, cents, books,
-      queryVecId = 1L, k = 10, nprobe = 16, corpusSize = nFull)
-    val ids = ann.collect().map(_.getLong(0)).toSeq
+    val ann = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books,
+      Seq(1L), k = 10, nprobe = 16, corpusSize = nFull)
+    val ids = ann.collect().map(_.getLong(2)).toSeq
     assert(ids.size == 10 && !ids.contains(1L))
     assert(ids.exists(_ % 2 == 0) && ids.exists(_ % 2 != 0),
       s"appended vectors must be servable: $ids")
@@ -420,15 +459,14 @@ class SimilaritySpec extends SparkSpec {
     assert(c8b.flatten.map(java.lang.Float.floatToRawIntBits).toSeq ==
       c8.flatten.map(java.lang.Float.floatToRawIntBits).toSeq)
     // default corpusSize resolves to the FULL index size (not the pruned
-    // scan's count): the default-args single-query plan must equal the
-    // explicit-size one row-for-row
+    // scan's count): the default-args plan must equal the explicit-size
+    // one row-for-row
     val emb = Tables.embeddings(spark, sf)
-    def got(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val explicit = got(IvfPq.ivfPqTopK(spark, root, emb, c8, b8,
-      queryVecId = 0L, k = 10, nprobe = 4, corpusSize = n8))
-    val defaulted = got(IvfPq.ivfPqTopK(spark, root, emb, c8, b8,
-      queryVecId = 0L, k = 10, nprobe = 4))
+    def got(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val explicit = got(IvfPq.ivfPqTopKBatch(spark, root, emb, c8, b8,
+      Seq(0L), k = 10, nprobe = 4, corpusSize = n8))
+    val defaulted = got(IvfPq.ivfPqTopKBatch(spark, root, emb, c8, b8,
+      Seq(0L), k = 10, nprobe = 4))
     assert(defaulted == explicit,
       "default corpusSize must size the shortlist from the full corpus")
   }
@@ -447,14 +485,17 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
     // the per-(query, row) cluster restriction makes each query's
-    // candidate set EXACTLY the single-query pruned scan's — so the
-    // batch must reproduce every single-query plan row-for-row
+    // candidate set EXACTLY its own probe clusters, whatever else the
+    // union-of-probes scan reads — so the batch must reproduce each
+    // query run as a batch of one (which scans only that query's
+    // probes) row-for-row
     for (q <- qIds) {
-      val single = IvfPq.ivfPqTopK(spark, root, emb, cents, books, q,
-          k = 10, nprobe = 4, corpusSize = n)
-        .collect().zipWithIndex
-        .map { case (r, i) => (q, i + 1, r.getLong(0), r.getDouble(1)) }
+      val single = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books,
+          Seq(q), k = 10, nprobe = 4, corpusSize = n)
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
         .toSeq
+      assert(single.size == 10)
       assert(batch.filter(_._1 == q) == single, s"batch diverges for query $q")
     }
     // chunking is result-invariant here too
@@ -541,9 +582,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("contract precondition: ANN/brute-force neighbor lists are duplicate-free") {
-    // annContract's full-outer accounting needs both sides distinct on
-    // vec_id — a duplicate ann row would fan out the matching bf row and
-    // inflate n_hits past k. Pin it on every producer annContract consumes.
+    // annContract's accounting needs both sides distinct on vec_id
+    // within a query — a duplicate ann row would fan out the matching
+    // corpus row, count twice in n_ann and enter the exact top-k twice.
+    // Pin it on every producer annContract consumes.
     val emb = Tables.embeddings(spark, sf)
     for ((name, df) <- Seq(
         "bruteForceTopK" -> Similarity.bruteForceTopK(emb, 0L, 10),
@@ -551,6 +593,50 @@ class SimilaritySpec extends SparkSpec {
         "ivfTopK" -> Similarity.ivfTopK(emb, 0L, 10))) {
       val ids = df.select("vec_id").collect().map(_.getLong(0))
       assert(ids.length == ids.distinct.length, s"$name emitted duplicate vec_ids")
+    }
+  }
+
+  test("annContract, both floor modes: n_ann = k, the exact side's min " +
+       "cosine is bruteForceTopK's, the floor booleans follow the recall, " +
+       "and only the batch-mean mode plans a Window") {
+    import graft.similarity.Pq
+    val emb = Tables.embeddings(spark, sf)
+    val books = Pq.trainCodebooks(emb)
+    val codes = Pq.encode(emb, books).select("vec_id", "codes")
+    val qIds = Seq(0L, 1L, 2L, 3L)
+    val ann = Pq.adcTopKBatch(codes, emb, qIds, 10, books)
+    val annIds = ann.collect().groupBy(_.getLong(0))
+      .map { case (q, rows) => q -> rows.map(_.getLong(2)).toSet }
+    // the exact side the single-query contract used: one brute-force
+    // top-k per query (the query itself kept)
+    val exact = qIds.map(q => q -> Similarity.bruteForceTopK(emb, q, 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq).toMap
+    val recall = qIds.map(q =>
+      q -> (annIds(q) intersect exact(q).map(_._1).toSet).size / 10.0).toMap
+    val meanRecall = recall.values.sum / qIds.size
+    // a floor between the lowest and the highest per-query recall makes
+    // both booleans informative whenever the recalls differ
+    val floor = (recall.values.min + recall.values.max) / 2
+    for (batchMean <- Seq(false, true)) {
+      val c = Similarity.annContract(ann, emb, qIds, 10, minRecall = floor,
+        batchMean = batchMean)
+      val okCol = if (batchMean) "batch_recall_ok" else "recall_ok"
+      assert(c.columns.toSeq ==
+        Seq("q_id", "k", "n_ann", "exact_topk_min_cos", okCol))
+      val rows = c.collect()
+      assert(rows.map(_.getLong(0)).toSeq == qIds)
+      for (r <- rows) {
+        val q = r.getLong(0)
+        assert(r.getInt(1) == 10 && r.getLong(2) == 10L, s"q=$q: n_ann != k")
+        assert(r.getDouble(3) == exact(q).map(_._2).min,
+          s"q=$q: exact min cosine diverges from bruteForceTopK")
+        val want = if (batchMean) meanRecall >= floor else recall(q) >= floor
+        assert(r.getBoolean(4) == want,
+          s"q=$q batchMean=$batchMean: floor boolean != recall ${recall(q)}")
+      }
+      val plan = c.queryExecution.executedPlan.toString
+      assert(plan.contains("Window") == batchMean,
+        s"batchMean=$batchMean: Window in plan must be $batchMean:\n$plan")
     }
   }
 
@@ -574,8 +660,8 @@ class SimilaritySpec extends SparkSpec {
     val before = partFiles()
     assert(before.values.exists(_ > 1),
       s"append should accrete files somewhere before compact: $before")
-    def topk() = IvfPq.ivfPqTopK(spark, root, emb, cents, books,
-        queryVecId = 1L, k = 10, nprobe = 16, corpusSize = nFull)
+    def topk() = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books,
+        Seq(1L), k = 10, nprobe = 16, corpusSize = nFull)
       .collect().map(_.toString).toSeq
     val want = topk()
     IvfPq.ivfPqCompact(spark, root)
@@ -727,8 +813,8 @@ class SimilaritySpec extends SparkSpec {
       !new java.io.File(localRoot.getPath + "/._VALID.crc").exists,
       "raw-FS unwrap: metadata writes must not grow checksum sidecars")
     val (_, _, nFull) = IvfPq.ivfPqAppend(rest, root)
-    def topk() = IvfPq.ivfPqTopK(spark, root, emb, cents, books,
-        queryVecId = 1L, k = 10, nprobe = 16, corpusSize = nFull)
+    def topk() = IvfPq.ivfPqTopKBatch(spark, root, emb, cents, books,
+        Seq(1L), k = 10, nprobe = 16, corpusSize = nFull)
       .collect().map(_.toString).toSeq
     val want = topk()
     IvfPq.ivfPqCompact(spark, root)
