@@ -9,14 +9,15 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH (shingle → minhash → band → bucket join), SimHash
-  * (+ banded Hamming search), and exact n-gram Jaccard as the verification
-  * baseline.
+  * (+ banded Hamming search), the exact shingle-Jaccard set-similarity
+  * join, and the 8-gram contamination family.
   *
   * Scale design: every approximate method is shuffle-bounded by LSH
   * bucketing — candidate generation is groupBy(bucket) + within-bucket
-  * pairing, never an all-pairs join. The exact Jaccard query is the
-  * *baseline oracle* and is deliberately restricted to within-source
-  * pairs; at 100 TB you run the LSH variants and verify only candidates.
+  * pairing, never an all-pairs join. The exact similarity join is
+  * lossless without an all-pairs scan (posting counts or a prefix
+  * filter, [[similarityJoin]]), and each of its operators takes the
+  * posting frame a standing index holds ([[shinglePostings]]).
   */
 object Dedup {
 
@@ -242,10 +243,8 @@ object Dedup {
            countDistinct(md5(col("text"))).as("n_distinct"))
       .orderBy("lang")
 
-  /** Exact n-gram Jaccard near-dup baseline: top-20 pairs within blocks.
-    * Blocking key = (source, lang, length-bucket): near-dups share all
-    * three, and blocks bound the pair count — at sf0.1 this is ~3M pairs
-    * instead of the 62M of source-only blocking. int/int → double division
+  /** Exact shingle-Jaccard near-dups: the top-20 of [[nearDupPairs]]
+    * (every pair at Jaccard ≥ 1/20) by score. int/int → double division
     * keeps the score bitwise cross-engine. */
   def qNgramJaccard(spark: SparkSession, d: String): DataFrame =
     nearDupPairs(spark, d)
@@ -254,100 +253,23 @@ object Dedup {
 
   /** The shared near-dup pair generator behind q31 (top-20), q73
     * (cluster graph) and q81 (edit-distance verify): ALL pairs with
-    * shingle Jaccard ≥ 0.05, via the lossless prefix-filter join
-    * ([[similarityJoin]]). Replaced the blocked [[jaccardPairs]] in
-    * round 6 for two measured reasons: (1) the fixed-cardinality
+    * shingle Jaccard ≥ 0.05, via the lossless [[similarityJoin]]. It
+    * replaced a blocked join (block keys source, lang and `n_chars div
+    * 100`) in round 6 for two measured reasons: (1) the fixed-cardinality
     * blocking keys make block sizes grow with the corpus — the blocked
     * join went quadratic at sf1 (33× time for 10× docs) where this join
     * stays sub-linear per pair (2.9 s → 6.0 s for 10× docs / 10× pairs);
-    * (2) blocking on `n_chars div 100` is LOSSY for near-dups of
-    * different lengths — at sf0.1 it surfaced 6 of the 590 true τ ≥ 0.05
-    * pairs. DedupSpec pins the subset relation. */
+    * (2) length-bucket blocking is LOSSY for near-dups of different
+    * lengths — at sf0.1 it surfaced 6 of the 590 true τ ≥ 0.05 pairs.
+    * DedupSpec pins [[similarityJoin]] against exact all-pairs, and
+    * q31's oracle is all-pairs SQL. */
   def nearDupPairs(spark: SparkSession, d: String): DataFrame =
     similarityJoin(Tables.documents(spark, d), tauNum = 1, tauDen = 20)
 
-  /** All within-block Jaccard pairs (doc_a, doc_b, jaccard) — the
-    * BLOCKED teaching baseline (block keys: source, lang, length
-    * bucket). Kept as the classic blocking+verify shape and as the
-    * bounded-cost twin, NOT as the production pair generator: its block
-    * count is fixed, so blocks grow linearly with the corpus and the
-    * within-block join quadratically (measured 33× at a 10× scale-up),
-    * and length-bucket blocking misses cross-bucket near-dups (6 of 590
-    * true pairs at sf0.1). [[nearDupPairs]] is the lossless replacement. */
-  def jaccardPairs(spark: SparkSession, d: String): DataFrame = {
-    // Shingle sets are sorted 64-bit hash arrays built by one kernel call
-    // (Gram3SetSorted); pairwise |A∩B| is one linear merge
-    // (SortedIntersectCount). Composing the same pipeline from interpreted
-    // higher-order functions (transform/filter lambdas are never
-    // codegen'd) re-ran the tokenizer once per array ACCESS after Catalyst
-    // inlined the alias — 24s at sf0.1 vs 0.7s for this shape.
-    val sh = Tables.documents(spark, d)
-      .withColumn("toks", Text.tokens)
-      .filter(size(col("toks")) >= 3)
-      .withColumn("len_bucket", expr("n_chars div 100"))
-      .select(col("doc_id"), col("source"), col("lang"), col("len_bucket"),
-        graft.functions.exprs.gram3SetSorted(col("toks")).as("hs"))
-      // Materialization barrier on the blocking keys: without it,
-      // whole-stage codegen defers the shingle/hash projection into the
-      // join and re-evaluates it per *pair* (measured 24s → 0.7s at
-      // sf0.1). The exchange also co-partitions both sides of the
-      // self-join (one ReusedExchange, no broadcast dependency) — the
-      // shape that survives a corpus too big to broadcast.
-      .repartition(col("source"), col("lang"), col("len_bucket"))
-    sh.as("a").join(sh.as("b"),
-        col("a.source") === col("b.source") &&
-        col("a.lang") === col("b.lang") &&
-        col("a.len_bucket") === col("b.len_bucket") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .withColumn("inter",
-        graft.functions.exprs.sortedIntersectCount(col("a.hs"), col("b.hs")))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (col("inter").cast("double") /
-          (size(col("a.hs")) + size(col("b.hs")) - col("inter"))).as("jaccard"))
-  }
-
-  /** Exact set-similarity self-join via PREFIX FILTERING (Chaudhuri et al.
-    * ICDE'06 / Xiao et al. PPJoin, WWW'08) — ALL pairs with shingle-set
-    * Jaccard ≥ τ, with no blocking assumption and no all-pairs scan:
-    *
-    *   1. order every doc's shingles by global rarity (document frequency
-    *      asc, hash tiebreak);
-    *   2. a doc of set size n keeps only its first n − ceil(τ·n) + 1
-    *      shingles as its *prefix* — any pair with J ≥ τ must share a
-    *      shingle in BOTH prefixes (pigeonhole: J ≥ τ ⇒ overlap ≥ τ·n for
-    *      both sides, and the skipped suffix has only ceil(τ·n) − 1 < τ·n
-    *      elements);
-    *   3. candidates = equi-join on prefix shingles (+ the size-ratio
-    *      prune: J ≥ τ ⇒ τ·|larger| ≤ |smaller|);
-    *   4. exact verify on the full sorted-hash sets (one linear merge per
-    *      candidate, [[graft.functions.SortedIntersectCount]]).
-    *
-    * Why it scales: the join key is a *rare-first prefix* shingle — hot
-    * shingles (huge df) sort to the end of every doc's order and rarely
-    * enter a prefix, so candidate fan-out per key stays small by
-    * construction; the rest is hash joins and one window. This is the
-    * lossless complement to MinHash LSH ([[lshCandidates]]): same
-    * candidate-then-verify shape, but exact (zero false negatives), which
-    * is what "guarantee no τ-duplicates survive" requires at 100 TB.
-    *
-    * The result is order-invariant — ANY global shingle order is correct,
-    * so the hash-based order here and the oracle's exact-string all-pairs
-    * SQL agree exactly (modulo 64-bit shingle-hash collisions, the q31
-    * precedent).
-    *
-    * τ arrives as a RATIONAL tauNum/tauDen and every threshold comparison
-    * runs in integer math (the q107 winsorized-stats discipline):
-    * `ceil(τ·n)` as `(num·n + den − 1) div den`, the size-ratio prune as
-    * `den·|a| ≥ num·|b|`, the final verify as `den·inter ≥ num·(union)`.
-    * Double arithmetic here is a CORRECTNESS hazard, not a style point:
-    * for τ not representable in binary (0.05, 0.1, …), `ceil(τ·n)` in
-    * doubles rounds UP at exact multiples of 1/τ, silently shortening the
-    * prefix and dropping true pairs — violating the lossless contract
-    * (DedupSpec pins τ = 1/20 against exact all-pairs). */
-  /** High-τ dispatch threshold: the largest pair-rows-per-posting ratio
-    * (Σ_g df·(df−1)/2 over Σ_g df — the posting join's EXACT output size
-    * per input row) at which the posting-count plan is still preferred.
+  /** [[similarityJoin]]'s dispatch threshold: the largest
+    * pair-rows-per-posting ratio (Σ_g df·(df−1)/2 over Σ_g df — the
+    * posting join's EXACT output size per input row) at which the
+    * posting-count plan is still preferred.
     * Bracketed by the round-7 measurements (BENCHMARKS.md "τ-dispatch
     * crossover"): every GenScale corpus sits at ratio 0.5–4.9 and there
     * posting-count beats prefix+verify at EVERY τ ≤ 1/2 probed (sf1:
@@ -357,34 +279,13 @@ object Dedup {
     * already at 5k docs, diverging as df² vs linear thereafter. */
   val PostingMaxPairRowsPerPosting: Double = graft.Tuning.PostingMaxPairRowsPerPosting
 
-  /** One cheap scan answering "how heavy is the gram-df tail?" — the
-    * runtime statistic the high-τ [[similarityJoin]] dispatch keys on.
-    * Tokenize + shingle + one aggregation; no join, nothing data-sized
-    * collected. Callers that track corpus statistics skip it via the
-    * hint parameter. */
-  def probePairRowsPerPosting(docs: DataFrame): Double = {
-    val r = docs
-      .withColumn("toks", Text.tokens)
-      .filter(size(col("toks")) >= 3)
-      .select(explode(graft.functions.exprs.gram3SetSorted(col("toks"))).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
-        sum(col("df")).as("postings"))
-      .head
-    if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-    else r.getDouble(0) / r.getLong(1)
-  }
-
-  /** [[probePairRowsPerPosting]] from a prepped shingle frame — same
-    * statistic (Σ df·(df−1)/2 per posting), computed off the index
-    * instead of re-tokenizing text. */
-  def probePairRowsPerPostingFromShingles(sets: DataFrame): Double =
-    probePairRowsPerPostingFromPostings(shinglePostings(sets))
-
-  /** The same probe off a POSTING frame ([[shinglePostings]] or the
-    * bucketed standing table) — over a bucketed table the groupBy(g)
-    * plans exchange-free. */
-  def probePairRowsPerPostingFromPostings(posting: DataFrame): Double = {
+  /** One cheap aggregation answering "how heavy is the gram-df tail?" —
+    * the runtime statistic the [[similarityJoin]] dispatch keys on:
+    * Σ df·(df−1)/2 per posting, over a frame with one row per (doc,
+    * distinct gram) in column `g` ([[shinglePostings]] or the bucketed
+    * standing table, where the groupBy(g) plans exchange-free). No join,
+    * nothing data-sized collected. */
+  def probePairRowsPerPosting(posting: DataFrame): Double = {
     val r = posting
       .groupBy("g").agg(count(lit(1)).as("df"))
       .agg(sum(col("df") * (col("df") - 1) / 2).as("pair_rows"),
@@ -394,73 +295,100 @@ object Dedup {
     else r.getDouble(0) / r.getLong(1)
   }
 
-  /** [[similarityJoin]]'s regime dispatcher over a prepped/persisted
-    * shingle frame — same two-step dispatch, with the df-tail probe
-    * running off the index. */
-  def similarityJoinFromShingles(sets: DataFrame, tauNum: Long, tauDen: Long,
-                                 pairRowsPerPostingHint: Option[Double] = None)
-      : DataFrame =
-    similarityJoinFromPostings(shinglePostings(sets), sets, tauNum, tauDen,
-      pairRowsPerPostingHint)
-
-  /** The dispatcher over the index's POSTING + SETS halves — the entry
-    * point for the BUCKETED standing index ([[shingleIndexIngestBucketed]]):
-    * everything g-keyed (the df-tail probe, the posting-count self-join,
-    * the prefix regime's df window input) reads `posting` and, when that
-    * frame is the bucketed table, plans WITHOUT an exchange on g
-    * (PlanAuditSpec pins it); only the prefix regime's verify step reads
-    * the doc-keyed `sets` sidecar for its hash arrays. */
-  def similarityJoinFromPostings(posting: DataFrame, sets: DataFrame,
-                                 tauNum: Long, tauDen: Long,
-                                 pairRowsPerPostingHint: Option[Double] = None)
-      : DataFrame = {
-    require(tauNum > 0 && tauDen >= tauNum,
-      s"similarityJoin: tau must be in (0, 1], got $tauNum/$tauDen")
-    val ratio = pairRowsPerPostingHint
-      .getOrElse(probePairRowsPerPostingFromPostings(posting))
-    if (ratio <= PostingMaxPairRowsPerPosting)
-      similarityJoinPostingCountFromPostings(posting, tauNum, tauDen)
-    else similarityJoinPrefixVerifyFromPostings(posting, sets, tauNum, tauDen)
+  /** Exact set-similarity self-join: ALL pairs with shingle-set Jaccard
+    * ≥ τ, with no blocking assumption and no all-pairs scan. Two exact
+    * regimes return the identical pair set (DedupSpec pins each against
+    * brute force AND against each other at every probed τ):
+    * [[similarityJoinPostingCount]] counts shared postings, and
+    * [[similarityJoinPrefixVerify]] filters on a rare-first PREFIX
+    * (Chaudhuri et al. ICDE'06 / Xiao et al. PPJoin, WWW'08) and
+    * verifies candidates on the full sets. This is the lossless
+    * complement to MinHash LSH ([[lshCandidates]]): same
+    * candidate-then-verify shape, but exact (zero false negatives),
+    * which is what "guarantee no τ-duplicates survive" requires at
+    * 100 TB.
+    *
+    * The result is order-invariant — ANY global shingle order is
+    * correct, so the hash-based order here and the oracle's exact-string
+    * all-pairs SQL agree exactly (modulo 64-bit shingle-hash collisions,
+    * the q31 precedent).
+    *
+    * τ arrives as a RATIONAL tauNum/tauDen and every threshold comparison
+    * runs in integer math (the q107 winsorized-stats discipline):
+    * `ceil(τ·n)` as `(num·n + den − 1) div den`, the size-ratio prune as
+    * `den·|a| ≥ num·|b|`, the final verify as `den·inter ≥ num·(union)`.
+    * Double arithmetic here is a CORRECTNESS hazard, not a style point:
+    * for τ not representable in binary (0.05, 0.1, …), `ceil(τ·n)` in
+    * doubles rounds UP at exact multiples of 1/τ, silently shortening the
+    * prefix and dropping true pairs — violating the lossless contract
+    * (DedupSpec pins τ = 1/20 against exact all-pairs).
+    *
+    * This entry takes raw documents; its df-tail probe reads the grams
+    * BEFORE [[shingleSets]]' doc_id exchange, which would otherwise ship
+    * every hash array once more just to count grams. */
+  def similarityJoin(docs: DataFrame, tauNum: Long, tauDen: Long): DataFrame = {
+    val sets = shingleSets(docs)
+    dispatch(probePairRowsPerPosting(docs
+        .withColumn("toks", Text.tokens)
+        .filter(size(col("toks")) >= 3)
+        .select(explode(graft.functions.exprs.gram3SetSorted(col("toks")))
+          .as("g"))),
+      shinglePostings(sets), sets, tauNum, tauDen)
   }
 
-  def similarityJoin(docs: DataFrame, tauNum: Long, tauDen: Long,
-                     pairRowsPerPostingHint: Option[Double] = None): DataFrame = {
+  /** [[similarityJoin]] over a standing index's two halves — the POSTING
+    * frame ([[shinglePostings]] of [[shingleIndex]], or the BUCKETED
+    * table [[shinglePostingsBucketed]]) and the doc-keyed SETS
+    * ([[shingleIndex]] or [[shingleSetsSidecar]]). Everything g-keyed
+    * (the df-tail probe, the posting-count self-join, the prefix regime's
+    * df window input) reads `posting` and, over the bucketed table, plans
+    * WITHOUT an exchange on g (PlanAuditSpec pins it); only the prefix
+    * regime's verify step reads `sets` for its hash arrays. */
+  def similarityJoin(posting: DataFrame, sets: DataFrame, tauNum: Long,
+                     tauDen: Long): DataFrame =
+    dispatch(probePairRowsPerPosting(posting), posting, sets, tauNum, tauDen)
+
+  /** The one regime dispatch, on the MEASURED gram-df tail at EVERY τ
+    * (the Percentiles.grouped precedent: one cheap probe picks the
+    * physical regime). The posting join's cost is exactly
+    * Σ_g df·(df−1)/2 pair rows REGARDLESS of τ; prefix filtering sorts
+    * hot grams (huge df) to the end of every doc's rare-first order so
+    * they never enter a prefix. The evidence on both sides of the
+    * threshold:
+    *
+    *  - Bounded-df corpus (every GenScale sf: ratio ≈ 0.5–4.9) →
+    *    POSTING-COUNT. At low τ the prefix is nearly the whole set
+    *    ((1−τ)·n + 1 grams), so the prefix plan degenerates into the
+    *    posting join PLUS a df window, a rarity sort, and an
+    *    array-shipping verify — measured at the sf1→sf10 decade: the
+    *    verify grew shuffle write 158× (88 MB → 13.9 GB) with 50 GB of
+    *    SMJ spill, wall 5.5 → 160 s, while the posting plan shuffles
+    *    16-byte pair rows (Vernica et al., SIGMOD'10). At high τ
+    *    posting still wins 1.5–3× wall on this corpus shape.
+    *  - Heavy df tail (ratio 51.5 in the planted corpus-wide-gram
+    *    probe) → PREFIX+VERIFY at every τ. One gram shared by the
+    *    whole corpus makes the posting join QUADRATIC in the corpus:
+    *    measured at sf1, τ=1/20 — posting-count 218 s with 250 GB of
+    *    aggregate spill vs prefix+verify 10.1 s, zero spill (r11; the
+    *    pre-r11 dispatcher sent τ ≤ 1/4 to posting UNCONDITIONALLY and
+    *    rode straight into that cliff). The probe costs one g-keyed
+    *    aggregation — the cheapest insurance in this file.
+    *
+    * `ratio` is by-name so a bad τ fails before the probe runs. */
+  private def dispatch(ratio: => Double, posting: DataFrame, sets: DataFrame,
+                       tauNum: Long, tauDen: Long): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum,
       s"similarityJoin: tau must be in (0, 1], got $tauNum/$tauDen")
-    // Two exact regimes (both return the identical pair set — DedupSpec
-    // pins each against brute force AND against each other at every
-    // probed τ), dispatched on the MEASURED gram-df tail at EVERY τ (the
-    // Percentiles.grouped precedent: one cheap probe picks the physical
-    // regime). The posting join's cost is exactly Σ_g df·(df−1)/2 pair
-    // rows REGARDLESS of τ; prefix filtering sorts hot grams (huge df)
-    // to the end of every doc's rare-first order so they never enter a
-    // prefix. The evidence on both sides of the threshold:
-    //
-    //  - Bounded-df corpus (every GenScale sf: ratio ≈ 0.5–4.9) →
-    //    POSTING-COUNT. At low τ the prefix is nearly the whole set
-    //    ((1−τ)·n + 1 grams), so the prefix plan degenerates into the
-    //    posting join PLUS a df window, a rarity sort, and an
-    //    array-shipping verify — measured at the sf1→sf10 decade: the
-    //    verify grew shuffle write 158× (88 MB → 13.9 GB) with 50 GB of
-    //    SMJ spill, wall 5.5 → 160 s, while the posting plan shuffles
-    //    16-byte pair rows (Vernica et al., SIGMOD'10). At high τ
-    //    posting still wins 1.5–3× wall on this corpus shape.
-    //  - Heavy df tail (ratio 51.5 in the planted corpus-wide-gram
-    //    probe) → PREFIX+VERIFY at every τ. One gram shared by the
-    //    whole corpus makes the posting join QUADRATIC in the corpus:
-    //    measured at sf1, τ=1/20 — posting-count 218 s with 250 GB of
-    //    aggregate spill vs prefix+verify 10.1 s, zero spill (r11; the
-    //    pre-r11 dispatcher sent τ ≤ 1/4 to posting UNCONDITIONALLY and
-    //    rode straight into that cliff). The probe costs one g-keyed
-    //    aggregation — the cheapest insurance in this file.
-    val ratio = pairRowsPerPostingHint.getOrElse(probePairRowsPerPosting(docs))
     if (ratio <= PostingMaxPairRowsPerPosting)
-      similarityJoinPostingCount(docs, tauNum, tauDen)
-    else similarityJoinPrefixVerify(docs, tauNum, tauDen)
+      similarityJoinPostingCount(posting, tauNum, tauDen)
+    else similarityJoinPrefixVerify(posting, sets, tauNum, tauDen)
   }
 
-  /** Shared shingle-set prep for both [[similarityJoin]] regimes. */
-  private def shingleSets(docs: DataFrame): DataFrame = docs
+  /** Shingle-set prep for documents: (doc_id, hs, n), the doc-keyed sets
+    * a standing shingle index persists. Document callers of the
+    * similarity operators build their frames here, then
+    * [[shinglePostings]]. */
+  def shingleSets(docs: DataFrame): DataFrame = docs
     .withColumn("toks", Text.tokens)
     .filter(size(col("toks")) >= 3)
     .select(col("doc_id"),
@@ -700,18 +628,6 @@ object Dedup {
       .collect { case n if n.startsWith("batch=") =>
         n.stripPrefix("batch=").toLong }
 
-  /** [[similarityJoin]]'s LOW-τ regime, public so the crossover stays
-    * measurable per-round (each regime forced at each τ: BENCHMARKS.md
-    * "τ-dispatch crossover, measured (round 7)"): |A∩B|
-    * is the COUNT of posting rows the pair shares — one posting self-join
-    * + one partial-agg'd groupBy over 16-byte pair rows (Vernica et al.,
-    * SIGMOD'10 shape); J = inter / (n_a + n_b − inter) needs only the
-    * carried set sizes, so no hash array is ever shuffled after the
-    * explode. Work is Σ_g df(g)² pair rows regardless of τ. */
-  def similarityJoinPostingCount(docs: DataFrame, tauNum: Long,
-                                 tauDen: Long): DataFrame =
-    similarityJoinPostingCountFromShingles(shingleSets(docs), tauNum, tauDen)
-
   /** POSTING form of a shingle frame: one row per (doc, distinct shingle
     * hash) with the set size carried — the join currency of both
     * similarity regimes, and the layout the BUCKETED standing index
@@ -740,17 +656,19 @@ object Dedup {
   val ShinglePostingSchema: StructType = new StructType()
     .add("doc_id", LongType).add("n", IntegerType).add("g", LongType)
 
-  /** [[similarityJoinPostingCount]] over a prepped/persisted shingle
-    * frame ([[shingleSets]] or [[shingleIndex]]). */
-  def similarityJoinPostingCountFromShingles(sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame =
-    similarityJoinPostingCountFromPostings(shinglePostings(sets), tauNum, tauDen)
-
-  /** [[similarityJoinPostingCount]] over the POSTING half of the standing
-    * index — on the bucketed table the g-keyed self-join below starts
-    * from HashPartitioning(g, buckets) and plans with no exchange on g. */
-  def similarityJoinPostingCountFromPostings(posting: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame = {
+  /** [[similarityJoin]]'s posting-count regime over a (doc_id, n, g)
+    * posting frame, public so the crossover stays measurable per-round
+    * (each regime forced at each τ: BENCHMARKS.md "τ-dispatch crossover,
+    * measured (round 7)"): |A∩B| is the COUNT of posting rows the pair
+    * shares — one posting self-join + one partial-agg'd groupBy over
+    * 16-byte pair rows (Vernica et al., SIGMOD'10 shape); J = inter /
+    * (n_a + n_b − inter) needs only the carried set sizes, so no hash
+    * array is ever shuffled after the explode. Work is Σ_g df(g)² pair
+    * rows regardless of τ. On the bucketed table the g-keyed self-join
+    * starts from HashPartitioning(g, buckets) and plans with no exchange
+    * on g. */
+  def similarityJoinPostingCount(posting: DataFrame, tauNum: Long,
+                                 tauDen: Long): DataFrame = {
     posting.as("a").join(posting.as("b"),
         col("a.g") === col("b.g") &&
         col("a.doc_id") < col("b.doc_id") &&
@@ -779,27 +697,29 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** [[similarityJoin]]'s HIGH-τ regime (prefix filter + sorted-merge
-    * verify — the PPJoin shape documented on [[similarityJoin]]), public
-    * so the crossover stays measurable per-round. */
-  def similarityJoinPrefixVerify(docs: DataFrame, tauNum: Long,
-                                 tauDen: Long): DataFrame =
-    similarityJoinPrefixVerifyFromShingles(shingleSets(docs), tauNum, tauDen)
-
-  /** [[similarityJoinPrefixVerify]] over a prepped/persisted shingle
-    * frame. */
-  def similarityJoinPrefixVerifyFromShingles(sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame =
-    similarityJoinPrefixVerifyFromPostings(shinglePostings(sets), sets,
-      tauNum, tauDen)
-
-  /** [[similarityJoinPrefixVerify]] over the index's two halves: the
-    * g-keyed stages (df aggregation, prefix candidate join) read
-    * `posting`; the verify step reads the doc-keyed `sets` for its hash
-    * arrays. */
-  def similarityJoinPrefixVerifyFromPostings(posting: DataFrame,
-                                             sets: DataFrame, tauNum: Long,
-                                             tauDen: Long): DataFrame = {
+  /** [[similarityJoin]]'s prefix+verify regime over an index's two
+    * halves, public so the crossover stays measurable per-round:
+    *
+    *   1. order every doc's shingles by global rarity (document frequency
+    *      asc, hash tiebreak);
+    *   2. a doc of set size n keeps only its first n − ceil(τ·n) + 1
+    *      shingles as its *prefix* — any pair with J ≥ τ must share a
+    *      shingle in BOTH prefixes (pigeonhole: J ≥ τ ⇒ overlap ≥ τ·n for
+    *      both sides, and the skipped suffix has only ceil(τ·n) − 1 < τ·n
+    *      elements);
+    *   3. candidates = equi-join on prefix shingles (+ the size-ratio
+    *      prune: J ≥ τ ⇒ τ·|larger| ≤ |smaller|);
+    *   4. exact verify on the full sorted-hash sets (one linear merge per
+    *      candidate, [[graft.functions.SortedIntersectCount]]).
+    *
+    * Why it scales: the join key is a *rare-first prefix* shingle — hot
+    * shingles (huge df) sort to the end of every doc's order and rarely
+    * enter a prefix, so candidate fan-out per key stays small by
+    * construction; the rest is hash joins and one window. The g-keyed
+    * stages (df aggregation, prefix candidate join) read `posting`; the
+    * verify step reads the doc-keyed `sets` for its hash arrays. */
+  def similarityJoinPrefixVerify(posting: DataFrame, sets: DataFrame,
+                                 tauNum: Long, tauDen: Long): DataFrame = {
     val dfreq = posting.groupBy("g").agg(count(lit(1)).as("df"))
     // (No positional filter on the candidates either — same measured
     // dead end as the count plan, see [[shinglePostings]]: df-order
@@ -860,25 +780,27 @@ object Dedup {
     * (cap−1)/2 · |postings| — LINEAR in the corpus with a cap-sized
     * constant, versus the uncapped plan's df² blowup on heavy-tailed
     * corpora (measured on a planted corpus-wide gram: BENCHMARKS.md
-    * "Rare-gram join + the low-τ dispatch cliff (round 11)"). Costs
-    * beyond the capped pair join are all linear and keyed: one df
-    * aggregation (g), one semi join (g — exchange-free off the bucketed
-    * index), one size recount + attach (doc_id). `dfCap ≥ max df`
-    * degenerates to exactly [[similarityJoinPostingCount]]'s result
-    * (DedupSpec pins it). */
-  def similarityJoinRareGrams(docs: DataFrame, tauNum: Long, tauDen: Long,
-                              dfCap: Long): DataFrame =
-    similarityJoinRareGramsFromPostings(
-      shinglePostings(shingleSets(docs)), tauNum, tauDen, dfCap)
-
-  /** [[similarityJoinRareGrams]] over the POSTING half of a standing
-    * index (plain or bucketed — on the bucketed table the df aggregation
-    * and semi join plan without an exchange on g). */
-  def similarityJoinRareGramsFromPostings(posting: DataFrame, tauNum: Long,
-                                          tauDen: Long,
-                                          dfCap: Long): DataFrame = {
+    * "Rare-gram join + the low-τ dispatch cliff (round 11)"). The capped
+    * join IS [[similarityJoinPostingCount]] over the restricted posting
+    * frame; the other costs are linear and keyed: one df aggregation (g),
+    * one semi join (g — exchange-free off the bucketed index), one size
+    * recount + attach (doc_id). `dfCap ≥ max df` degenerates to exactly
+    * [[similarityJoinPostingCount]]'s result (DedupSpec pins it).
+    *
+    * `dfCap < 0` DERIVES the cap from the corpus ([[deriveRareGramCap]]).
+    * The cap defines the similarity's sub-universe, so it stays part of
+    * the output contract: it rides the plan as the `rare_cap` in-plan
+    * observation (the bench-artifact discipline), and callers who need it
+    * programmatically call [[deriveRareGramCap]] and pass it. */
+  def similarityJoinRareGrams(posting: DataFrame, tauNum: Long, tauDen: Long,
+                              dfCap: Long = -1L): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum,
       s"similarityJoinRareGrams: tau must be in (0, 1], got $tauNum/$tauDen")
+    if (dfCap < 0) {
+      val cap = deriveRareGramCap(posting)
+      return similarityJoinRareGrams(posting, tauNum, tauDen, cap)
+        .observe("rare_cap", max(lit(cap)).as("derived_df_cap"))
+    }
     require(dfCap >= 1, s"similarityJoinRareGrams: dfCap must be ≥ 1")
     val rare = posting.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select("g")
@@ -886,21 +808,7 @@ object Dedup {
       .join(rare, Seq("g"), "left_semi")
     // sizes over the SUB-universe (n changes with the cap — the contract)
     val sizes = rp.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val p = rp.join(sizes, "doc_id")
-    p.as("a").join(p.as("b"),
-        col("a.g") === col("b.g") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") * lit(tauDen) >= col("b.n") * lit(tauNum) &&
-        col("b.n") * lit(tauDen) >= col("a.n") * lit(tauNum))
-      // s-slimmed pair aggregation, as in the uncapped plan
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (col("a.n") + col("b.n")).as("s"))
-      .agg(count(lit(1)).as("inter"))
-      .filter(col("inter") * lit(tauDen) >=
-        (col("s") - col("inter")) * lit(tauNum))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("s") - col("inter")))
-      .select("doc_a", "doc_b", "jaccard")
+    similarityJoinPostingCount(rp.join(sizes, "doc_id"), tauNum, tauDen)
   }
 
   /** DERIVE the rare-gram df cap from the corpus's own df tail (r11
@@ -922,8 +830,7 @@ object Dedup {
     * index) collapsed to a df HISTOGRAM (one row per distinct df value —
     * model-sized by construction; a 10¹¹-posting corpus has at most
     * thousands of distinct df values) scanned on the driver. */
-  def deriveRareGramCap(posting: DataFrame,
-      pairRowsPerPostingBudget: Double = PostingMaxPairRowsPerPosting): Long = {
+  def deriveRareGramCap(posting: DataFrame): Long = {
     val hist = posting.groupBy("g").agg(count(lit(1)).as("df"))
       .groupBy("df").agg(count(lit(1)).as("n_grams"))
       .orderBy("df").collect()
@@ -935,45 +842,19 @@ object Dedup {
       val n = r.getLong(1).toDouble
       val p = cumPairs + n * df * (df - 1) / 2
       val q = cumPost + n * df
-      if (p <= pairRowsPerPostingBudget * q) {
+      if (p <= PostingMaxPairRowsPerPosting * q) {
         cap = df; cumPairs = p; cumPost = q
       } else return cap // monotone marginal: every larger df also breaches
     }
     cap
   }
 
-  /** The (doc_id, n, g) posting table of a document frame — the
-    * from-scratch twin of a standing index's posting half, public so cap
-    * derivation and specs can probe the same statistics the dispatcher
-    * sees. */
-  def shinglePostingsOf(docs: DataFrame): DataFrame =
-    shinglePostings(shingleSets(docs))
-
-  /** [[similarityJoinRareGrams]] with the cap DERIVED from the corpus
-    * ([[deriveRareGramCap]]). The cap defines the similarity's
-    * sub-universe, so it stays part of the output contract: it rides the
-    * plan as the `rare_cap` in-plan observation (the bench-artifact
-    * discipline), and callers who need it programmatically call
-    * [[deriveRareGramCap]] themselves and use the explicit-cap form. */
-  def similarityJoinRareGrams(docs: DataFrame, tauNum: Long,
-                              tauDen: Long): DataFrame = {
-    val posting = shinglePostings(shingleSets(docs))
-    similarityJoinRareGramsFromPostings(posting, tauNum, tauDen)
-  }
-
-  /** The derived-cap form over a standing index's posting half. */
-  def similarityJoinRareGramsFromPostings(posting: DataFrame, tauNum: Long,
-                                          tauDen: Long): DataFrame = {
-    val cap = deriveRareGramCap(posting)
-    similarityJoinRareGramsFromPostings(posting, tauNum, tauDen, cap)
-      .observe("rare_cap", max(lit(cap)).as("derived_df_cap"))
-  }
-
   /** q132: the rare-gram join on the harness corpus at the near-dup
     * τ=1/20 with the contamination family's cap — full pair set, both
     * scores exact within the declared sub-universe. */
   def qSimJoinRareCap(spark: SparkSession, d: String): DataFrame =
-    similarityJoinRareGrams(Tables.documents(spark, d),
+    similarityJoinRareGrams(
+        shinglePostings(shingleSets(Tables.documents(spark, d))),
         tauNum = 1, tauDen = 20, dfCap = 20)
       .orderBy("doc_a", "doc_b")
 
@@ -1009,7 +890,7 @@ object Dedup {
     * stricter signal a dedup pipeline applies before destructive removal
     * (token-set similarity is order-blind; edit distance is not).
     * Levenshtein is O(len²) per pair, which is exactly why it runs on
-    * CANDIDATES (bounded by the blocked pair generator), never the
+    * CANDIDATES (the top pairs of [[nearDupPairs]]), never the
     * corpus. */
   def qEditDistance(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d).select("doc_id", "text")
@@ -1213,27 +1094,36 @@ object Dedup {
   }
 
   /** Eval-set contamination detection: find training documents sharing
-    * ≥ minShared distinct 8-grams with any "eval" document (here: eval =
-    * source src0, train = the rest). Ultra-common grams (train df >
-    * dfCap) are dropped first — standard practice, and what bounds the
-    * gram join at scale (a stopword-ish 8-gram would otherwise fan out
-    * quadratically). One explode-join-aggregate; no pairwise scan. */
+    * ≥ 3 distinct 8-grams with any "eval" document (eval = source src0,
+    * train = the rest). Ultra-common grams (train df > 20) are dropped
+    * first — standard practice, and what bounds the gram join at scale (a
+    * stopword-ish 8-gram would otherwise fan out quadratically). One
+    * explode-join-aggregate; no pairwise scan. */
   def qContamination(spark: SparkSession, d: String): DataFrame =
-    contaminationPairs(Tables.documents(spark, d))
+    contaminationPairs(gramPostings(Tables.documents(spark, d)))
       .orderBy(col("shared_grams").desc, col("eval_doc"), col("train_doc"))
       .limit(20)
 
-  /** Distinct n-gram POSTINGS per document: (doc_id, source, g), one row
+  /** The gram family's fixed rule, the one every oracle hard-codes:
+    * 8-token grams; a train gram is rare at df ≤ 20; a pair is
+    * contaminated at ≥ 3 shared rare grams; the eval set is source src0. */
+  private val GramN = 8
+  private val ContaminationDfCap = 20
+  private val ContaminationMinShared = 3
+  private val EvalSource = "src0"
+
+  /** Distinct 8-gram POSTINGS per document: (doc_id, source, g), one row
     * per (doc, distinct gram). This is the single tokenize+shingle
     * definition every gram consumer in the family builds on —
     * contamination report (q62), decontamination (q119), dup coverage
     * (q87), and the persisted index (q125) — so the gram rule cannot
-    * drift between them. Docs under n tokens carry no postings. */
-  def gramPostings(docs: DataFrame, n: Int = 8): DataFrame =
+    * drift between them. Docs under 8 tokens carry no postings. */
+  def gramPostings(docs: DataFrame): DataFrame =
     docs.withColumn("toks", Text.tokens)
-      .filter(size(col("toks")) >= n)
+      .filter(size(col("toks")) >= GramN)
       .select(col("doc_id"), col("source"),
-        explode(graft.functions.exprs.gramNSetSorted(col("toks"), n)).as("g"))
+        explode(graft.functions.exprs.gramNSetSorted(col("toks"), GramN))
+          .as("g"))
 
   /** INGEST half of the standing gram index (the q122 ingest/scan
     * discipline applied to the gram-join family): tokenize + shingle the
@@ -1247,8 +1137,8 @@ object Dedup {
     * grams) — ingest-volume counters observed on the write itself (zero
     * extra pass; distinct grams via the HLL sketch, since CollectMetrics
     * cannot host a DISTINCT aggregate). */
-  def gramIndexIngest(docs: DataFrame, root: String, n: Int = 8): (Long, Long) = {
-    val obs = gramPostings(docs, n).observe("gram_ingest",
+  def gramIndexIngest(docs: DataFrame, root: String): (Long, Long) = {
+    val obs = gramPostings(docs).observe("gram_ingest",
       count(lit(1)).as("postings"),
       approx_count_distinct(col("g")).as("grams"))
     // a write executes its own QE, not obs.queryExecution — harvest the
@@ -1311,7 +1201,7 @@ object Dedup {
     * unused id ([[graft.ops.Standing.claimBatchId]]: two concurrent
     * auto-id appenders never share one). Overwrite-on-replay is reserved
     * for callers that DO name their batches (foreachBatch's batchId). */
-  def gramIndexAppend(newDocs: DataFrame, root: String, n: Int = 8,
+  def gramIndexAppend(newDocs: DataFrame, root: String,
                       batchId: Long = -1L): Unit = {
     val side = root + "_df"
     val id = if (batchId >= 0) batchId
@@ -1320,7 +1210,7 @@ object Dedup {
       id <= graft.ops.Standing.compactedThrough(side) // absorbed by compaction
     if (graft.ops.Standing.committed(root, id) && dfDone)
       return // committed: replay no-op
-    val p = gramPostings(newDocs, n).persist() // one tokenize pass, two sinks
+    val p = gramPostings(newDocs).persist() // one tokenize pass, two sinks
     try {
       p.write.mode("overwrite").parquet(graft.ops.Standing.batchDir(root, id))
       if (!dfDone) // never re-emit a partial compaction already merged
@@ -1363,39 +1253,29 @@ object Dedup {
     graft.ops.Standing.compact(root + "_df", root)(
       gramIndexDf(spark, root).select(col("g"), col("df").as("df_part")))
 
-  /** [[contaminationPairs]] over an existing postings frame (from
-    * [[gramPostings]] or the persisted [[gramIndex]]). */
-  def contaminationPairsFrom(postings: DataFrame, dfCap: Int = 20,
-                             minShared: Int = 3,
-                             evalSource: String = "src0"): DataFrame = {
-    val evalG = postings.filter(col("source") === evalSource)
+  /** The single gram pipeline behind contamination detection — the REPORT
+    * (q62), the ACTION (q119 / [[decontaminate]]) and the index consumer
+    * (q125) are all views over this one definition, so the rule cannot
+    * drift between them. Takes a postings frame ([[gramPostings]] or the
+    * persisted [[gramIndex]]) and returns (eval_doc, train_doc,
+    * shared_grams) for every train doc sharing ≥ 3 rare (train-df ≤ 20)
+    * distinct 8-grams with some src0 eval doc. */
+  def contaminationPairs(postings: DataFrame): DataFrame = {
+    val evalG = postings.filter(col("source") === EvalSource)
       .select(col("doc_id").as("eval_doc"), col("g"))
-    val trainG = postings.filter(col("source") =!= evalSource)
+    val trainG = postings.filter(col("source") =!= EvalSource)
       .select(col("doc_id").as("train_doc"), col("g"))
     val rare = trainG.groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap).select("g")
+      .filter(col("df") <= ContaminationDfCap).select("g")
     evalG.join(trainG.join(rare, Seq("g"), "left_semi"), "g")
       .groupBy("eval_doc", "train_doc")
       .agg(count(lit(1)).as("shared_grams"))
-      .filter(col("shared_grams") >= minShared)
+      .filter(col("shared_grams") >= ContaminationMinShared)
   }
 
-  /** The single gram pipeline behind contamination detection — the REPORT
-    * (q62) and the ACTION (q119 / [[decontaminate]]) are both views over
-    * this one definition, so the rule cannot drift between them. Returns
-    * (eval_doc, train_doc, shared_grams) for every train doc sharing ≥
-    * `minShared` rare (train-df ≤ `dfCap`) distinct `n`-grams with some
-    * eval doc. */
-  def contaminationPairs(docs: DataFrame, n: Int = 8, dfCap: Int = 20,
-                         minShared: Int = 3,
-                         evalSource: String = "src0"): DataFrame =
-    contaminationPairsFrom(gramPostings(docs, n), dfCap, minShared, evalSource)
-
-  /** Training-doc ids flagged as contaminated by [[contaminationPairs]]. */
-  def contaminatedTrainIds(docs: DataFrame, n: Int = 8, dfCap: Int = 20,
-                           minShared: Int = 3,
-                           evalSource: String = "src0"): DataFrame =
-    contaminationPairs(docs, n, dfCap, minShared, evalSource)
+  /** Training-doc ids of `docs` flagged by [[contaminationPairs]]. */
+  def contaminatedTrainIds(docs: DataFrame): DataFrame =
+    contaminationPairs(gramPostings(docs))
       .select(col("train_doc").as("doc_id")).distinct()
 
   /** Eval-set DECONTAMINATION — the action [[qContamination]] only
@@ -1409,14 +1289,11 @@ object Dedup {
     * the train-gram explode and one df aggregation (both also needed by
     * q62/q87 and shareable); the final step is an anti join against a
     * doc-id set bounded by |contaminated| ≪ |train| — broadcastable,
-    * never pairwise. Train docs with < n tokens carry no n-grams and are
+    * never pairwise. Train docs with < 8 tokens carry no 8-grams and are
     * structurally kept, matching the oracle's semantics. */
-  def decontaminate(docs: DataFrame, n: Int = 8, dfCap: Int = 20,
-                    minShared: Int = 3,
-                    evalSource: String = "src0"): DataFrame =
-    docs.filter(col("source") =!= evalSource)
-      .join(broadcast(contaminatedTrainIds(docs, n, dfCap, minShared, evalSource)),
-        Seq("doc_id"), "left_anti")
+  def decontaminate(docs: DataFrame): DataFrame =
+    docs.filter(col("source") =!= EvalSource)
+      .join(broadcast(contaminatedTrainIds(docs)), Seq("doc_id"), "left_anti")
 
   /** q119: per-source retention report of [[decontaminate]] — kept/dropped
     * counts plus the exact BIGINT sum of kept doc ids, which pins kept-set
@@ -1492,9 +1369,9 @@ object Dedup {
     * at least one OTHER document. One gram explode, one df aggregation,
     * one join back — the same bounded explode-join-aggregate shape as
     * [[qContamination]]; never pairwise. dup_frac derives from two exact
-    * BIGINTs with a single rounded division, so the oracle is exact. */
-  /** [[dupCoverage]] over an existing postings frame. */
-  def dupCoverageFrom(postings: DataFrame): DataFrame = {
+    * BIGINTs with a single rounded division, so the oracle is exact.
+    * Takes a postings frame ([[gramPostings]] or [[gramIndex]]). */
+  def dupCoverage(postings: DataFrame): DataFrame = {
     val df = postings.groupBy("g").agg(count(lit(1)).as("df"))
     postings.join(df, "g")
       .groupBy("source")
@@ -1505,11 +1382,8 @@ object Dedup {
       .orderBy("source")
   }
 
-  def dupCoverage(docs: DataFrame, n: Int = 8): DataFrame =
-    dupCoverageFrom(gramPostings(docs, n))
-
   def qDupCoverage(spark: SparkSession, d: String): DataFrame =
-    dupCoverage(Tables.documents(spark, d))
+    dupCoverage(gramPostings(Tables.documents(spark, d)))
 
   /** ENSURE the standing gram index for dataset `d` (the q125 index):
     * build + mark if absent or stale, reuse otherwise. Returns
@@ -1562,9 +1436,9 @@ object Dedup {
   def qGramIndex(spark: SparkSession, d: String): DataFrame = {
     val (root, (nPostings, nGrams)) = ensureGramIndex(spark, d)
     val postings = gramIndex(spark, root)
-    val cov = dupCoverageFrom(postings)
+    val cov = dupCoverage(postings)
     val docSource = postings.select(col("doc_id"), col("source")).distinct()
-    val contaminated = contaminationPairsFrom(postings)
+    val contaminated = contaminationPairs(postings)
       .select(col("train_doc").as("doc_id")).distinct()
       .join(docSource, "doc_id")
       .groupBy("source").agg(count(lit(1)).as("n_contaminated"))
@@ -1589,19 +1463,9 @@ object Dedup {
     * cycle feeding every similarity query, with joins reading 8-byte
     * hashes instead of document bytes. */
   def qShingleIndex(spark: SparkSession, d: String): DataFrame = {
-    val (root, (nDocs, nPostings)) = ensureShingleIndex(spark, d)
+    val (root, counters) = ensureShingleIndex(spark, d)
     val sets = shingleIndex(spark, root)
-    val low = similarityJoinFromShingles(sets, 1, 20)
-      .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(20)
-      .select(lit("tau_1_20_top20").as("consumer"),
-        col("doc_a"), col("doc_b"), col("jaccard"))
-    val high = similarityJoinFromShingles(sets, 1, 2)
-      .select(lit("tau_1_2").as("consumer"),
-        col("doc_a"), col("doc_b"), col("jaccard"))
-    low.unionByName(high).orderBy("consumer", "doc_a", "doc_b")
-      // ingest volume as plan literals (the q125 counter discipline)
-      .observe("ix", max(lit(nDocs)).as("index_docs"),
-        max(lit(nPostings)).as("index_postings"))
+    shingleIndexConsumers(shinglePostings(sets), sets, counters)
   }
 
   /** q128: q127's consumers answered from the BUCKETED standing shingle
@@ -1613,19 +1477,26 @@ object Dedup {
     * reduction at sf10 (BENCHMARKS.md "Bucketed index measured"), and
     * BENCHMARKS.md "Bucketed shingle index" records this family's own A/B. */
   def qShingleBucketed(spark: SparkSession, d: String): DataFrame = {
-    val (table, (nDocs, nPostings)) = ensureShingleBucketed(spark, d)
-    val posting = shinglePostingsBucketed(spark, table)
-    val sets = shingleSetsSidecar(spark, table)
-    val low = similarityJoinFromPostings(posting, sets, 1, 20)
+    val (table, counters) = ensureShingleBucketed(spark, d)
+    shingleIndexConsumers(shinglePostingsBucketed(spark, table),
+      shingleSetsSidecar(spark, table), counters)
+  }
+
+  /** q127's and q128's consumers over an index's (posting, sets): the
+    * τ=1/20 top-20 and the τ=1/2 pair set, the ingest counters (nDocs,
+    * nPostings) riding the plan as literals (the q125 discipline). */
+  private def shingleIndexConsumers(posting: DataFrame, sets: DataFrame,
+                                    counters: (Long, Long)): DataFrame = {
+    val low = similarityJoin(posting, sets, 1, 20)
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(20)
       .select(lit("tau_1_20_top20").as("consumer"),
         col("doc_a"), col("doc_b"), col("jaccard"))
-    val high = similarityJoinFromPostings(posting, sets, 1, 2)
+    val high = similarityJoin(posting, sets, 1, 2)
       .select(lit("tau_1_2").as("consumer"),
         col("doc_a"), col("doc_b"), col("jaccard"))
     low.unionByName(high).orderBy("consumer", "doc_a", "doc_b")
-      .observe("ix", max(lit(nDocs)).as("index_docs"),
-        max(lit(nPostings)).as("index_postings"))
+      .observe("ix", max(lit(counters._1)).as("index_docs"),
+        max(lit(counters._2)).as("index_postings"))
   }
 
   private lazy val shingleIndexOracle: String = s"""

@@ -484,7 +484,7 @@ object IvfPq {
       // convention the contract's exact side follows)
       .filter(element_at(qIdsLit, col("qi") + 1) =!= col("vec_id"))
       .select("vec_id", "qi", "adc_dist")
-    Pq.batchShortlistRerank(pairs, emb, qIds, k, refine2,
+    Pq.batchShortlistRerank(pairs, emb, qIds, qVecs, k, refine2,
       observeName + "_pq")
   }
 

@@ -265,7 +265,7 @@ object Pq {
     val qVecs = collectQueryVecs(emb, qIds)
     val pairs = adcPairs(codes, books, qIds, qVecs)
       .select("vec_id", "qi", "adc_dist")
-    batchShortlistRerank(pairs, emb, qIds, k, refine2, observeName)
+    batchShortlistRerank(pairs, emb, qIds, qVecs, k, refine2, observeName)
   }
 
   /** The Q query vectors: a model-sized driver pull (the query BATCH is
@@ -370,12 +370,16 @@ object Pq {
     * O(Q × k·refine) TopKByScore buffer rows — never the N×Q scored
     * pairs (a window row_number here would sort all of them: the
     * knnJoin anti-pattern note); the re-rank touches float vectors for
-    * the shortlist rows only, shortlist and query vectors broadcast.
-    * Returns (q_id, rk, vec_id, cos_sim). */
+    * the shortlist rows only, the shortlist broadcast. The query side is
+    * the Q vectors the caller already pulled ([[collectQueryVecs]]),
+    * looked up by qi in a plan literal: no second corpus scan and no
+    * second broadcast job (a broadcast of even a local frame collects it
+    * through a Spark job). Returns (q_id, rk, vec_id, cos_sim). */
   private[similarity] def batchShortlistRerank(pairs: DataFrame,
                                                emb: DataFrame,
-                                               qIds: Seq[Long], k: Int,
-                                               refine2: Int,
+                                               qIds: Seq[Long],
+                                               qVecs: Map[Long, Array[Float]],
+                                               k: Int, refine2: Int,
                                                observeName: String): DataFrame = {
     val qIdsLit = typedlit(qIds)
     val shortTopK = udaf(new graft.functions.TopKByScore(k * refine2))
@@ -384,22 +388,19 @@ object Pq {
       // negated distance: TopKByScore keeps (score desc, id asc) ==
       // (adc_dist asc, vec_id asc), the shortlist order
       .agg(shortTopK(-col("adc_dist"), col("vec_id")).as("top"))
-      .select(element_at(qIdsLit, col("qi") + 1).as("q_id"),
-        explode(col("top")).as("entry"))
-      .select(col("q_id"), col("entry._2").as("vec_id"))
+      .select(col("qi"), explode(col("top")).as("entry"))
+      .select(col("qi"), col("entry._2").as("vec_id"))
       // zero-extra-pass volume counter (the q104/q122 discipline): total
       // shortlist pairs across the batch = Q × k·refine when healthy;
       // the name is chunk-indexed when the batch is split (observation
       // names must be unique within one plan)
       .observe(observeName, count(lit(1)).as("shortlist_pairs"))
-    val qSide = emb.filter(col("vec_id").isInCollection(qIds))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
+    val qEmb = element_at(typedlit(qIds.map(id => qVecs(id).toSeq)),
+      col("qi") + 1)
     val finalTopK = udaf(new graft.functions.TopKByScore(k))
     emb.join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qSide), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(Similarity.cosCol(col("embedding"), col("q_embedding")), 6)
-          .as("cos_sim"))
+      .select(element_at(qIdsLit, col("qi") + 1).as("q_id"), col("vec_id"),
+        round(Similarity.cosCol(col("embedding"), qEmb), 6).as("cos_sim"))
       .groupBy("q_id")
       .agg(finalTopK(col("cos_sim"), col("vec_id")).as("top"))
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "entry")))

@@ -496,7 +496,7 @@ object Similarity {
       .select("vec_id", "sig", "micro", "dself")
 
   /** The planes dial as a FUNCTION of corpus size — the derived-cap
-    * treatment (q132's `deriveRareGramCap`) applied to semantic dedup's
+    * treatment (`Dedup.deriveRareGramCap`) applied to semantic dedup's
     * one scale knob. Candidate pairs grow ~n²/2^planes, so holding them
     * ~linear in n needs planes to rise with log₂(n); this formula
     * reproduces the MEASURED ladder exactly (BENCHMARKS.md

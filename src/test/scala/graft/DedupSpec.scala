@@ -17,21 +17,6 @@ class DedupSpec extends SparkSpec {
     (103L, "unrelated musings on alpine hiking trails and mountain weather patterns"))
     .toDF("doc_id", "text")
 
-  test("blocked jaccardPairs baseline ⊆ lossless nearDupPairs on real data") {
-    // the round-6 finding pinned: length-bucket blocking is LOSSY (a
-    // near-dup pair spanning two n_chars buckets never meets), so the
-    // blocked baseline must be a strict subset of the prefix-filter join
-    // on any corpus where such pairs exist; never a superset anywhere
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val blocked = pairs(Dedup.jaccardPairs(spark, sf).filter(col("jaccard") >= 0.05))
-    val lossless = pairs(Dedup.nearDupPairs(spark, sf))
-    assert(blocked.subsetOf(lossless),
-      s"blocked baseline produced pairs the lossless join missed: ${blocked -- lossless}")
-    assert(lossless.nonEmpty, "corpus should contain near-dup pairs")
-  }
-
   test("minhash LSH recalls planted near-duplicates") {
     val cands = Dedup.lshCandidates(Dedup.minhashSignatures(planted))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -145,7 +130,7 @@ class DedupSpec extends SparkSpec {
       (2L, "srcA", "one two three four five six seven eight nine ten"),
       (3L, "srcB", "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "source", "text")
-    val out = Dedup.dupCoverage(docs).collect()
+    val out = Dedup.dupCoverage(Dedup.gramPostings(docs)).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
     assert(out("srcA") == ((6L, 6L, 1.0)), s"srcA: ${out("srcA")}") // 3 grams/doc × 2 docs
@@ -233,10 +218,11 @@ class DedupSpec extends SparkSpec {
     // sub-n doc has no postings
     assert(idx.filter(col("doc_id") === 203L).count() == 0)
     // both consumers: index-derived == from-scratch
-    assert(rows(Dedup.dupCoverageFrom(idx)) == rows(Dedup.dupCoverage(docs)))
-    assert(rows(Dedup.contaminationPairsFrom(idx)) ==
-      rows(Dedup.contaminationPairs(docs)))
-    assert(Dedup.contaminationPairsFrom(idx)
+    val fresh = Dedup.gramPostings(docs)
+    assert(rows(Dedup.dupCoverage(idx)) == rows(Dedup.dupCoverage(fresh)))
+    assert(rows(Dedup.contaminationPairs(idx)) ==
+      rows(Dedup.contaminationPairs(fresh)))
+    assert(Dedup.contaminationPairs(idx)
       .select("train_doc").as[Long].collect().toSet == Set(201L))
   }
 
@@ -259,8 +245,8 @@ class DedupSpec extends SparkSpec {
     Dedup.gramIndexIngest(docsB, rootB)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(spark, rootA))) ==
-      rows(Dedup.dupCoverage(docsA)),
+    assert(rows(Dedup.dupCoverage(Dedup.gramIndex(spark, rootA))) ==
+      rows(Dedup.dupCoverage(Dedup.gramPostings(docsA))),
       "interleaved ingest corrupted the standing index")
   }
 
@@ -306,8 +292,8 @@ class DedupSpec extends SparkSpec {
       rows(Dedup.gramPostings(docs).groupBy("g")
         .agg(sum(lit(1L)).as("df"))))
     // consumers unchanged over the appended index
-    assert(rows(Dedup.dupCoverageFrom(Dedup.gramIndex(spark, root))) ==
-      rows(Dedup.dupCoverage(docs)))
+    assert(rows(Dedup.dupCoverage(Dedup.gramIndex(spark, root))) ==
+      rows(Dedup.dupCoverage(Dedup.gramPostings(docs))))
   }
 
   test("gram index append is idempotent per batch id: replays and " +
@@ -465,15 +451,19 @@ class DedupSpec extends SparkSpec {
       .createTempDirectory("shingle_index_spec").toString + "/shingles"
     Dedup.shingleIndexIngest(docs, root)
     val sets = Dedup.shingleIndex(spark, root)
+    val posting = Dedup.shinglePostings(sets)
+    // from scratch: the same frames built from the documents
+    val freshSets = Dedup.shingleSets(docs)
+    val freshPosting = Dedup.shinglePostings(freshSets)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinPostingCountFromShingles(sets, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)))
-    assert(pairs(Dedup.similarityJoinPrefixVerifyFromShingles(sets, 1, 2)) ==
-      pairs(Dedup.similarityJoinPrefixVerify(docs, 1, 2)))
+    assert(pairs(Dedup.similarityJoinPostingCount(posting, 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(freshPosting, 1, 20)))
+    assert(pairs(Dedup.similarityJoinPrefixVerify(posting, sets, 1, 2)) ==
+      pairs(Dedup.similarityJoinPrefixVerify(freshPosting, freshSets, 1, 2)))
     // the probe statistic off the index equals the from-text probe
-    assert(Dedup.probePairRowsPerPostingFromShingles(sets) ==
-      Dedup.probePairRowsPerPosting(docs))
+    assert(Dedup.probePairRowsPerPosting(posting) ==
+      Dedup.probePairRowsPerPosting(freshPosting))
   }
 
   test("bucketed shingle index: posting table + sets sidecar answer both " +
@@ -488,14 +478,16 @@ class DedupSpec extends SparkSpec {
     assert(nPostings == posting.count(), "observed postings != posting rows")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinPostingCountFromPostings(posting, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)))
-    assert(pairs(Dedup.similarityJoinPrefixVerifyFromPostings(posting, sets, 1, 2)) ==
-      pairs(Dedup.similarityJoinPrefixVerify(docs, 1, 2)))
-    assert(Dedup.probePairRowsPerPostingFromPostings(posting) ==
-      Dedup.probePairRowsPerPosting(docs))
+    val freshSets = Dedup.shingleSets(docs)
+    val freshPosting = Dedup.shinglePostings(freshSets)
+    assert(pairs(Dedup.similarityJoinPostingCount(posting, 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(freshPosting, 1, 20)))
+    assert(pairs(Dedup.similarityJoinPrefixVerify(posting, sets, 1, 2)) ==
+      pairs(Dedup.similarityJoinPrefixVerify(freshPosting, freshSets, 1, 2)))
+    assert(Dedup.probePairRowsPerPosting(posting) ==
+      Dedup.probePairRowsPerPosting(freshPosting))
     // and the full dispatcher routed over the index == the from-text one
-    assert(pairs(Dedup.similarityJoinFromPostings(posting, sets, 1, 2)) ==
+    assert(pairs(Dedup.similarityJoin(posting, sets, 1, 2)) ==
       pairs(Dedup.similarityJoin(docs, 1, 2)))
   }
 
@@ -530,7 +522,7 @@ class DedupSpec extends SparkSpec {
     // and the similarity consumers answer identically off the appended form
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinFromPostings(
+    assert(pairs(Dedup.similarityJoin(
         Dedup.shinglePostingsBucketed(spark, stbl),
         Dedup.shingleSetsSidecar(spark, stbl), 1, 2)) ==
       pairs(Dedup.similarityJoin(docs, 1, 2)))
@@ -600,15 +592,16 @@ class DedupSpec extends SparkSpec {
 
   test("rare-gram similarity join: cap ≥ max df degenerates to the exact " +
        "join; a corpus-wide hot gram is excluded by contract") {
-    val docs = Tables.documents(spark, sf)
+    val posting = Dedup.shinglePostings(
+      Dedup.shingleSets(Tables.documents(spark, sf)))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // degenerate cap: the sub-universe is the full universe, so the
     // result equals the exact posting-count join bit-for-bit
     for ((tn, td) <- Seq((1L, 20L), (1L, 2L)))
-      assert(pairs(Dedup.similarityJoinRareGrams(docs, tn, td,
+      assert(pairs(Dedup.similarityJoinRareGrams(posting, tn, td,
           dfCap = Long.MaxValue)) ==
-        pairs(Dedup.similarityJoinPostingCount(docs, tn, td)),
+        pairs(Dedup.similarityJoinPostingCount(posting, tn, td)),
         s"cap=∞ must equal the exact join at tau=$tn/$td")
     // planted contract check: d1/d2 share ONLY the corpus-wide hot
     // phrase → excluded under the cap (no rare co-occurrence), while the
@@ -621,9 +614,10 @@ class DedupSpec extends SparkSpec {
       (3L, s"$hot lorem ipsum dolor sit amet consectetur"),
       (4L, s"$hot lorem ipsum dolor sit amet consectetuz"))
       .toDF("doc_id", "text")
-    val capped = pairs(Dedup.similarityJoinRareGrams(planted, 1, 20,
+    val plantedPosting = Dedup.shinglePostings(Dedup.shingleSets(planted))
+    val capped = pairs(Dedup.similarityJoinRareGrams(plantedPosting, 1, 20,
       dfCap = 2)).map(p => (p._1, p._2))
-    val exact = pairs(Dedup.similarityJoinPostingCount(planted, 1, 20))
+    val exact = pairs(Dedup.similarityJoinPostingCount(plantedPosting, 1, 20))
       .map(p => (p._1, p._2))
     assert(exact.contains((1L, 2L)),
       "exact join must report the boilerplate-only pair")
@@ -636,8 +630,8 @@ class DedupSpec extends SparkSpec {
   test("derived rare-gram cap: equals the brute-force largest in-budget " +
        "cap, degenerates to max df on a bounded-df corpus, excludes a " +
        "dominant hot gram") {
-    val docs = Tables.documents(spark, sf)
-    val posting = Dedup.shinglePostingsOf(docs)
+    val posting = Dedup.shinglePostings(
+      Dedup.shingleSets(Tables.documents(spark, sf)))
     // brute-force reference: largest df whose cumulative sub-universe
     // stays within pair-rows-per-posting budget, from the same histogram
     def bruteCap(p: org.apache.spark.sql.DataFrame, budget: Double): Long = {
@@ -669,8 +663,8 @@ class DedupSpec extends SparkSpec {
     assert(cap == maxDf, s"bounded-df corpus: derived cap $cap == max df $maxDf")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pairs(Dedup.similarityJoinRareGrams(docs, 1, 20)) ==
-      pairs(Dedup.similarityJoinPostingCount(docs, 1, 20)),
+    assert(pairs(Dedup.similarityJoinRareGrams(posting, 1, 20)) ==
+      pairs(Dedup.similarityJoinPostingCount(posting, 1, 20)),
       "derived-cap join must equal the exact join on a bounded-df corpus")
     // a DOMINANT hot gram (df=100 over a 300-posting corpus: 4950 pair
     // rows > 16 × 300 postings) breaches the cumulative budget, so the
@@ -679,15 +673,15 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val hotDocs = (1 to 100).map(i =>
       (i.toLong, s"hotx hoty hotz u${i}a u${i}b")).toDF("doc_id", "text")
-    val hotPosting = Dedup.shinglePostingsOf(hotDocs)
+    val hotPosting = Dedup.shinglePostings(Dedup.shingleSets(hotDocs))
     val hotCap = Dedup.deriveRareGramCap(hotPosting)
     assert(hotCap < 100L,
       s"dominant hot gram must be excluded by the derived cap, got $hotCap")
     assert(hotCap == bruteCap(hotPosting, Dedup.PostingMaxPairRowsPerPosting),
       "derived cap must match brute force on the hot corpus too")
     // and the derived-cap join over that corpus matches the explicit form
-    assert(pairs(Dedup.similarityJoinRareGrams(hotDocs, 1, 20)) ==
-      pairs(Dedup.similarityJoinRareGrams(hotDocs, 1, 20, hotCap)),
+    assert(pairs(Dedup.similarityJoinRareGrams(hotPosting, 1, 20)) ==
+      pairs(Dedup.similarityJoinRareGrams(hotPosting, 1, 20, hotCap)),
       "derived-cap join == explicit join at the derived cap")
   }
 
@@ -804,12 +798,13 @@ class DedupSpec extends SparkSpec {
     // the tau-dispatch constant is a PHYSICAL choice only: both regimes
     // must return the identical pair set (same jaccard values) at every
     // tau the round-7 crossover sweep probes, on either side of 1/4
-    val docs = Tables.documents(spark, sf)
+    val sets = Dedup.shingleSets(Tables.documents(spark, sf))
+    val posting = Dedup.shinglePostings(sets)
     for ((tn, td) <- Seq((1L, 5L), (1L, 4L), (1L, 3L), (2L, 5L))) {
       def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pc = pairs(Dedup.similarityJoinPostingCount(docs, tn, td))
-      val pv = pairs(Dedup.similarityJoinPrefixVerify(docs, tn, td))
+      val pc = pairs(Dedup.similarityJoinPostingCount(posting, tn, td))
+      val pv = pairs(Dedup.similarityJoinPrefixVerify(posting, sets, tn, td))
       assert(pc == pv, s"regimes disagree at tau=$tn/$td: " +
         s"${(pc diff pv).take(3)} only-posting, ${(pv diff pc).take(3)} only-prefix")
       // guard against vacuous agreement: the most permissive probed tau
@@ -820,35 +815,30 @@ class DedupSpec extends SparkSpec {
 
   test("high-tau similarityJoin dispatches on the measured gram-df tail") {
     val docs = Tables.documents(spark, sf)
+    def probe(d: org.apache.spark.sql.DataFrame) =
+      Dedup.probePairRowsPerPosting(Dedup.shinglePostings(Dedup.shingleSets(d)))
+    def prefixPlan(d: org.apache.spark.sql.DataFrame, tn: Long, td: Long) =
+      Dedup.similarityJoin(d, tn, td)
+        .queryExecution.executedPlan.toString.contains("row_number")
     // bounded-df corpus (every GenScale sf sits at ratio ~0.5-4.9): the
-    // probe stays under the threshold and tau=1/2 takes the posting plan
-    // (no df-rank window in it)
-    assert(Dedup.probePairRowsPerPosting(docs) <=
-      Dedup.PostingMaxPairRowsPerPosting)
-    assert(!Dedup.similarityJoin(docs, 1, 2)
-      .queryExecution.executedPlan.toString.contains("row_number"))
+    // probe stays under the threshold and both taus take the posting
+    // plan (no df-rank window in it)
+    assert(probe(docs) <= Dedup.PostingMaxPairRowsPerPosting)
     // a corpus-wide hot gram (df = corpus size) drives the ratio over the
     // threshold: replicate the corpus 12x and prepend one fixed phrase
     val hot = (0 until 12).map(i => docs
         .withColumn("doc_id", col("doc_id") + lit(i * 1000000L))
         .withColumn("text", concat(lit("aqa bqb cqc "), col("text"))))
       .reduce(_.unionAll(_))
-    assert(Dedup.probePairRowsPerPosting(hot) >
-      Dedup.PostingMaxPairRowsPerPosting)
-    // the hint bypasses the probe and forces the regime either way; the
-    // heavy-tail route is the prefix plan (df-rank window present)
-    assert(Dedup.similarityJoin(docs, 1, 2, Some(17.0))
-      .queryExecution.executedPlan.toString.contains("row_number"))
-    assert(!Dedup.similarityJoin(docs, 1, 2, Some(1.0))
-      .queryExecution.executedPlan.toString.contains("row_number"))
+    assert(probe(hot) > Dedup.PostingMaxPairRowsPerPosting)
     // r11: LOW tau dispatches on the tail too — the planted-hot-gram
     // measurement (TauProbe hotgram, sf1, tau=1/20: posting-count 218 s
     // with 250 GB spill vs prefix 10.1 s) killed the old "low tau never
     // probes" rule; a heavy tail routes to prefix at every tau now
-    assert(Dedup.similarityJoin(docs, 1, 20, Some(1e9))
-      .queryExecution.executedPlan.toString.contains("row_number"))
-    assert(!Dedup.similarityJoin(docs, 1, 20, Some(1.0))
-      .queryExecution.executedPlan.toString.contains("row_number"))
+    for ((tn, td) <- Seq((1L, 2L), (1L, 20L))) {
+      assert(!prefixPlan(docs, tn, td), s"bounded corpus at tau=$tn/$td")
+      assert(prefixPlan(hot, tn, td), s"hot corpus at tau=$tn/$td")
+    }
   }
 
   test("contract precondition: pair producers emit distinct (doc_a, doc_b)") {

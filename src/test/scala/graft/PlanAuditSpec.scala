@@ -323,7 +323,7 @@ class PlanAuditSpec extends SparkSpec {
       // full posting-count consumer: bucketed scan → SMJ on g (no
       // exchange) → pair groupBy (the one NECESSARY shuffle, keyed by
       // doc pair, not g)
-      val joined = Dedup.similarityJoinPostingCountFromPostings(posting, 1, 2)
+      val joined = Dedup.similarityJoinPostingCount(posting, 1, 2)
       joined.collect()
       assert(Scale.countExchanges(joined) == 1,
         s"bucketed posting-count join must shuffle only at the pair " +
@@ -331,7 +331,7 @@ class PlanAuditSpec extends SparkSpec {
       // the plain-index twin of the same consumer pays the g-keyed
       // exchanges the bucketed table removed
       val sets = Dedup.shingleSetsSidecar(spark, tbl)
-      val plainJoined = Dedup.similarityJoinPostingCountFromPostings(
+      val plainJoined = Dedup.similarityJoinPostingCount(
         Dedup.shinglePostings(sets), 1, 2)
       plainJoined.collect()
       assert(Scale.countExchanges(plainJoined) > 1,

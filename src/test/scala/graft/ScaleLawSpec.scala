@@ -119,8 +119,9 @@ class ScaleLawSpec extends SparkSpec {
     // df of a salted gram equals the base gram's df (copies are disjoint),
     // so the dfCap filter selects the same grams per copy and the pair set
     // replicates exactly
-    val base = graft.dedup.Dedup.contaminationPairs(Tables.documents(spark, sf)).collect()
-    val scaled = graft.dedup.Dedup.contaminationPairs(Tables.documents(spark, scaledDir)).collect()
+    import graft.dedup.Dedup.{contaminationPairs, gramPostings}
+    val base = contaminationPairs(gramPostings(Tables.documents(spark, sf))).collect()
+    val scaled = contaminationPairs(gramPostings(Tables.documents(spark, scaledDir))).collect()
     assert(base.nonEmpty, "base must produce contamination pairs")
     assert(scaled.length == factor * base.length)
     val scaledSet = scaled.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
