@@ -15,14 +15,14 @@ object Bench {
     * a handful of rows) so the metrics land on the acted-on QueryExecution
     * synchronously — `count()` plans a separate QE (Observed scaladoc). */
   private val observes: Map[String, DataFrame => DataFrame] = Map(
-    "q01_pricing_summary" -> (df => graft.ops.Observed.withCounters(df,
-      "obs", count(lit(1)).as("out_rows"),
+    "q01_pricing_summary" -> (df => df.observe("obs",
+      count(lit(1)).as("out_rows"),
       sum(col("count_order")).as("lineitems_aggregated"))),
-    "q82_regional_revenue" -> (df => graft.ops.Observed.withCounters(df,
-      "obs", count(lit(1)).as("out_rows"),
+    "q82_regional_revenue" -> (df => df.observe("obs",
+      count(lit(1)).as("out_rows"),
       sum(col("n_items")).as("joined_items"))),
-    "q96_dataset_build" -> (df => graft.ops.Observed.withCounters(df,
-      "obs", count(lit(1)).as("out_rows"),
+    "q96_dataset_build" -> (df => df.observe("obs",
+      count(lit(1)).as("out_rows"),
       sum(col("n_chunks")).as("chunks"),
       sum(col("chunk_tokens")).as("chunk_tokens"))))
 

@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Each result is
+  * `collect()`ed first, so the checked rows come from the plan a caller's
+  * action runs (root rules such as `SmallSort` fire there, not under a
+  * write's insert command); those rows are then written with the query's
+  * schema. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -12,8 +16,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try {
+        val df = fn(spark, sfDir)
+        spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
+            df.schema)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

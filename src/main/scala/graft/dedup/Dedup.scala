@@ -409,14 +409,19 @@ object Dedup {
     * (indexed docs, posting rows) — ingest-volume counters observed on
     * the write itself (zero extra pass), the first numbers a regression
     * hunt over an index query wants (r9 task). */
-  def shingleIndexIngest(docs: DataFrame, root: String): (Long, Long) = {
-    val obs = shingleSets(docs).observe("shingle_ingest",
-      count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
-    // a write executes its own QE, not obs.queryExecution — harvest the
-    // counters through the listener bridge (GraftBridge scaladoc)
+  def shingleIndexIngest(docs: DataFrame, root: String): (Long, Long) =
+    writeCounted(shingleSets(docs), root)
+
+  /** Overwrite `dir` with shingle-set rows, returning the (docs, posting
+    * rows) counters observed on that write. A write executes its own QE,
+    * not the observed frame's, so the counters come through the listener
+    * bridge (GraftBridge scaladoc). */
+  private def writeCounted(sets: DataFrame, dir: String): (Long, Long) = {
     val m = org.apache.spark.sql.GraftBridge.observedFromAction(
-      docs.sparkSession, "shingle_ingest") {
-      obs.write.mode("overwrite").parquet(root)
+      sets.sparkSession, "shingle_ingest") {
+      sets.observe("shingle_ingest", count(lit(1)).as("docs"),
+        sum(col("n").cast("long")).as("postings"))
+        .write.mode("overwrite").parquet(dir)
     }
     (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
   }
@@ -437,18 +442,17 @@ object Dedup {
   /** Incremental maintenance of the standing shingle index: one batch's
     * (doc_id, hs, n) rows land in their own `batch_<id>` subdirectory,
     * written with OVERWRITE — idempotent per `batchId` exactly like
-    * [[gramIndexAppend]] (single sink here: no df sidecar, so a replayed
-    * micro-batch simply rewrites its directory). `batchId < 0`
-    * auto-assigns max-existing + 1. Appending to an empty root
+    * [[gramIndexAppend]] (single sink here: no df sidecar; a committed
+    * replay is skipped by [[graft.ops.Standing.appendBatch]]). `batchId
+    * < 0` auto-claims an unused id. Appending to an empty root
     * bootstraps; consumers ([[shingleIndex]] and everything downstream
     * of it) are unchanged. */
   def shingleIndexAppend(newDocs: DataFrame, root: String,
                          batchId: Long = -1L): Unit = {
     val id = if (batchId >= 0) batchId
       else graft.ops.Standing.claimBatchId(root)
-    if (graft.ops.Standing.committed(root, id)) return // committed: no-op
-    shingleSets(newDocs).write.mode("overwrite")
-      .parquet(graft.ops.Standing.batchDir(root, id))
+    graft.ops.Standing.appendBatch(id, shingleSets(newDocs))(
+      root -> graft.ops.Standing.writeBatch(root, id))
   }
 
   /** BUCKETED ingest of the standing shingle index — the q125 bucketBy
@@ -461,34 +465,24 @@ object Dedup {
     * and plan with NO exchange on g (PlanAuditSpec pins it) — plus the
     * doc-keyed SETS sidecar (doc_id, hs, n) the prefix-verify step reads
     * for its hash arrays. Key `table` by [[graft.ops.Scratch.bucketedTable]].
-    * Returns (indexed docs, posting rows) — ingest-volume counters read
-    * from the write itself (zero extra pass, ops.Observed). */
+    * Returns (indexed docs, posting rows) — ingest-volume counters
+    * observed on the sidecar write (zero extra pass, ops.Observed). */
   def shingleIndexIngestBucketed(docs: DataFrame, table: String,
                                  buckets: Int = 32): (Long, Long) = {
-    val spark = docs.sparkSession
-    val setsRoot = shingleSetsRoot(table)
     // a fresh build: drop the catalog entry and wipe the table, its meta
     // sibling (claims, manifest) and the sidecar (compaction mark), so
     // ingest means "rebuild from this corpus", never "append to whatever
     // was there"
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    docs.sparkSession.sql(s"DROP TABLE IF EXISTS `$table`")
     graft.ops.IndexFs.delete(graft.ops.Scale.bucketPath(table))
     graft.ops.IndexFs.delete(bucketedMeta(table))
-    graft.ops.IndexFs.delete(setsRoot)
-    val sets = shingleSets(docs).persist()
-    try {
-      val obs = sets.observe("shingle_ingest",
-        count(lit(1)).as("docs"), sum(col("n").cast("long")).as("postings"))
-      val m = org.apache.spark.sql.GraftBridge.observedFromAction(
-        spark, "shingle_ingest") {
-        // batch 0: ingest == first append, so the sidecar layout is
-        // uniform under later appends/compaction
-        obs.write.mode("overwrite")
-          .parquet(graft.ops.Standing.batchDir(setsRoot, 0L))
-      }
-      writeBucketedBatch(shinglePostings(sets), table, 0L, buckets)
-      (m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
-    } finally { sets.unpersist(); () }
+    graft.ops.IndexFs.delete(shingleSetsRoot(table))
+    // batch 0: ingest == first append, so the sidecar layout is uniform
+    // under later appends/compaction
+    var counters = (0L, 0L)
+    appendBucketed(shingleSets(docs), table, 0L, buckets,
+      (sets, dir) => counters = writeCounted(sets, dir))
+    counters
   }
 
   /** The bucketed POSTING half (metastore table, bucket-aware scan). The
@@ -509,25 +503,33 @@ object Dedup {
     * sibling (ops.Standing). Appending to a missing table bootstraps it.
     * Consumers stay exchange-free on g: each bucket id spans files across
     * partitions and Spark's bucketed scan still reports
-    * HashPartitioning(g, buckets) (DedupSpec pins it). */
+    * HashPartitioning(g, buckets) (DedupSpec pins it). A sink that
+    * committed or absorbed the batch is skipped, so a replay of a
+    * committed batch is a no-op. */
   def shingleIndexAppendBucketed(newDocs: DataFrame, table: String,
                                  buckets: Int = 32,
                                  batchId: Long = -1L): Unit = {
-    val setsRoot = shingleSetsRoot(table)
-    val meta = bucketedMeta(table)
     val id = if (batchId >= 0) batchId
-      else graft.ops.Standing.claimBatchId(meta, bucketedBatchIds(table))
-    if (id <= graft.ops.Standing.compactedThrough(setsRoot))
-      return // absorbed: replay no-op
-    if (graft.ops.Standing.committed(setsRoot, id) &&
-        graft.ops.Standing.committed(meta, id))
-      return // committed: replay no-op
-    val sets = shingleSets(newDocs).persist() // one tokenize, two sinks
-    try {
-      sets.write.mode("overwrite")
-        .parquet(graft.ops.Standing.batchDir(setsRoot, id))
-      writeBucketedBatch(shinglePostings(sets), table, id, buckets)
-    } finally { sets.unpersist(); () }
+      else graft.ops.Standing.claimBatchId(bucketedMeta(table),
+        bucketedBatchIds(table))
+    appendBucketed(shingleSets(newDocs), table, id, buckets,
+      (sets, dir) => sets.write.mode("overwrite").parquet(dir))
+  }
+
+  /** Batch `id` of the bucketed index through
+    * [[graft.ops.Standing.appendBatch]]: the sets sidecar first
+    * (`writeSets` into the batch's dir), then the table partition and its
+    * manifest commit. An absorbed id is skipped by both sinks: the
+    * sidecar holds the compaction mark, and the manifest, which
+    * compaction never touches, still holds the batch's commit. */
+  private def appendBucketed(sets: DataFrame, table: String, id: Long,
+                             buckets: Int,
+                             writeSets: (DataFrame, String) => Unit): Unit = {
+    val setsRoot = shingleSetsRoot(table)
+    graft.ops.Standing.appendBatch(id, sets)(
+      setsRoot -> (r => writeSets(r, graft.ops.Standing.batchDir(setsRoot, id))),
+      bucketedMeta(table) ->
+        (r => writeBucketedBatch(shinglePostings(r), table, id, buckets)))
   }
 
   /** COMPACTION of the bucketed shingle index: the sets sidecar's batch
@@ -1188,35 +1190,22 @@ object Dedup {
     * Consumers are unchanged: [[gramIndex]] reads the union of appended
     * batches; [[gramIndexDf]] merges the sidecar partials by sum.
     *
-    * IDEMPOTENT per `batchId` (the r9 ADVICE fix): each batch lands in
-    * its own `batch_<id>` subdirectory of both sinks, written with
-    * OVERWRITE — a replayed micro-batch (streamingGramIngest recovering
-    * from its checkpoint) rewrites the same two directories instead of
-    * double-appending, and a crash BETWEEN the two writes leaves a batch
-    * whose replay repairs it, so exactly-once holds at every crash
-    * point. A batch already committed to both sinks (`_SUCCESS` markers
-    * present, or a df partial absorbed by [[gramIndexCompact]] — the
-    * sidecar's `_COMPACTED` high-water mark) is skipped outright.
-    * `batchId < 0` (batch callers without a replay log) auto-claims an
-    * unused id ([[graft.ops.Standing.claimBatchId]]: two concurrent
-    * auto-id appenders never share one). Overwrite-on-replay is reserved
-    * for callers that DO name their batches (foreachBatch's batchId). */
+    * EXACTLY-ONCE per `batchId` (the r9 ADVICE fix): each batch lands in
+    * its own `batch_<id>` dir of both sinks, written with OVERWRITE, and
+    * a replay (streamingGramIngest recovering from its checkpoint) skips
+    * each sink that committed the batch or whose compaction absorbed it
+    * ([[graft.ops.Standing.appendBatch]]), so a crash between the two
+    * writes is repaired by the replay. `batchId < 0` (batch callers
+    * without a replay log) auto-claims an unused id
+    * ([[graft.ops.Standing.claimBatchId]]). */
   def gramIndexAppend(newDocs: DataFrame, root: String,
                       batchId: Long = -1L): Unit = {
     val side = root + "_df"
     val id = if (batchId >= 0) batchId
       else graft.ops.Standing.claimBatchId(root)
-    val dfDone = graft.ops.Standing.committed(side, id) ||
-      id <= graft.ops.Standing.compactedThrough(side) // absorbed by compaction
-    if (graft.ops.Standing.committed(root, id) && dfDone)
-      return // committed: replay no-op
-    val p = gramPostings(newDocs).persist() // one tokenize pass, two sinks
-    try {
-      p.write.mode("overwrite").parquet(graft.ops.Standing.batchDir(root, id))
-      if (!dfDone) // never re-emit a partial compaction already merged
-        gramDfState(p).write.mode("overwrite")
-          .parquet(graft.ops.Standing.batchDir(side, id))
-    } finally { p.unpersist(); () }
+    graft.ops.Standing.appendBatch(id, gramPostings(newDocs))(
+      root -> graft.ops.Standing.writeBatch(root, id),
+      side -> (p => graft.ops.Standing.writeBatch(side, id)(gramDfState(p))))
   }
 
   /** The maintained df aggregate: merge the appended partials by sum —
@@ -1235,20 +1224,14 @@ object Dedup {
     * discipline applied to its own state), so the property
     * `compact(any prefix of appends) then more appends == from-scratch`
     * holds trivially: a merged prefix is itself a valid partial
-    * (associativity). The merged partial keeps the HIGHEST existing
-    * batch id, so auto-assigned ids of later appends (derived from the
-    * postings root, which holds the same max) stay ahead, and a
-    * `_COMPACTED` high-water marker records which partials were
-    * absorbed — a REPLAYED pre-compaction batch then skips its df write
-    * instead of double-counting (the r10 review find; DedupSpec pins
-    * replay-after-compact == from-scratch). It refuses while a postings
-    * batch lacks its df partial (a crash between the append's two
-    * writes — replay that batch first). The swap, the mark and the guard
-    * are [[graft.ops.Standing.compact]]'s. Not atomic — a crash
-    * mid-compact can lose the sidecar — but the sidecar is DERIVED
-    * state, rebuildable from the postings root
-    * (`gramDfState(gramIndex(root))`); run compaction in the maintenance
-    * window, not the serving path. */
+    * (associativity). The merge, its `_COMPACTED` mark (a REPLAYED
+    * pre-compaction batch then skips its df write instead of
+    * double-counting — the r10 review find; DedupSpec pins
+    * replay-after-compact == from-scratch), the guard against a postings
+    * batch without its df partial and the swap are
+    * [[graft.ops.Standing.compact]]'s. The sidecar is DERIVED state,
+    * rebuildable from the postings root (`gramDfState(gramIndex(root))`);
+    * run compaction in the maintenance window, not the serving path. */
   def gramIndexCompact(spark: SparkSession, root: String): Unit =
     graft.ops.Standing.compact(root + "_df", root)(
       gramIndexDf(spark, root).select(col("g"), col("df").as("df_part")))
@@ -1396,9 +1379,19 @@ object Dedup {
   def ensureGramIndex(spark: SparkSession,
                       d: String): (String, (Long, Long)) = {
     val root = graft.ops.Scratch.root(spark, d, "gram_index")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    (root, graft.ops.Standing.ensureCounters(root, fp)(
+    (root, ensureDocsIndex(d, root)(
       gramIndexIngest(Tables.documents(spark, d), root)))
+  }
+
+  /** [[graft.ops.Standing.ensure]] for an index of dataset `d`'s
+    * documents whose payload is its two ingest counters. */
+  private def ensureDocsIndex(d: String, root: String)
+                             (build: => (Long, Long)): (Long, Long) = {
+    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
+    val c = graft.ops.Standing.ensure(root, fp) {
+      val (a, b) = build; s"$a $b"
+    }.split(" ")
+    (c(0).toLong, c(1).toLong)
   }
 
   /** ENSURE the standing shingle index (q127) — the [[ensureGramIndex]]
@@ -1407,8 +1400,7 @@ object Dedup {
   def ensureShingleIndex(spark: SparkSession,
                          d: String): (String, (Long, Long)) = {
     val root = graft.ops.Scratch.root(spark, d, "shingle_index")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    (root, graft.ops.Standing.ensureCounters(root, fp)(
+    (root, ensureDocsIndex(d, root)(
       shingleIndexIngest(Tables.documents(spark, d), root)))
   }
 
@@ -1417,9 +1409,7 @@ object Dedup {
   def ensureShingleBucketed(spark: SparkSession,
                             d: String): (String, (Long, Long)) = {
     val table = graft.ops.Scratch.bucketedTable(spark, d, "shingle_ix")
-    val fp = graft.ops.Standing.fingerprint(s"$d/documents.parquet")
-    val tablePath = graft.ops.Scale.bucketPath(table)
-    (table, graft.ops.Standing.ensureCounters(tablePath, fp)(
+    (table, ensureDocsIndex(d, graft.ops.Scale.bucketPath(table))(
       shingleIndexIngestBucketed(Tables.documents(spark, d), table)))
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Zero-extra-pass pipeline counters via `Dataset.observe`: data-quality
@@ -17,17 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Observed {
 
-  /** Attach named counters to a frame; read them back with [[metrics]]
-    * after an action. Counters must be aggregate expressions. */
-  def withCounters(df: DataFrame, name: String, first: Column,
-                   rest: Column*): DataFrame =
-    df.observe(name, first, rest: _*)
-
   /** The standard ingest-audit counter set over documents-shaped data:
     * rows, null/empty texts, and byte volume — the "did the upstream feed
     * break" dashboard row. */
   def withIngestAudit(docs: DataFrame, name: String = "ingest"): DataFrame =
-    withCounters(docs, name,
+    docs.observe(name,
       count(lit(1)).as("rows"),
       sum(when(col("text").isNull || length(col("text")) === 0, 1L)
         .otherwise(0L)).as("empty_texts"),

@@ -2,49 +2,34 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Content-addressed validity markers for standing indexes (r9 verdict
-  * item: "make the standing indexes actually stand").
+/** The one engine under every standing index (gram, shingle, bucketed
+  * shingle, semantic dedup, PQ, IVF-PQ): its validity marker, its batch
+  * protocol and its lifecycle decisions, one definition each.
   *
-  * Every registry query is a pure function of (spark, sfDir) — the right
-  * contract — but through round 9 that purity was implemented by
-  * REBUILDING each standing index (PQ codes, gram postings, shingle
-  * sets) on every call: q122+q126 paid `pqIngest` twice per bench run,
-  * q125/q127 re-tokenized the corpus per call, so the measured 63%/1000×
-  * ingest amortization existed only in tools benches. The fix: after a
-  * completed build, write a `_GRAFT_VALID` marker into the index root
-  * holding a FINGERPRINT of the source data (file-stat based: name,
-  * size, mtime of every input file — zero Spark jobs, invalidated by any
-  * rewrite of the inputs) plus a small payload (ingest counters, corpus
-  * size). A later call with the same fingerprint REUSES the completed
-  * index; any change to the inputs — or a different (dataset, app)
-  * Scratch root — rebuilds. The underscore name keeps the marker
-  * invisible to Spark's file index, so readers of the root never see it.
-  *
-  * The marker is written AFTER the build completes (the `_SUCCESS`
-  * discipline, one level up): a crash mid-build leaves no marker, so the
-  * next call rebuilds — never serves a half-written index.
-  *
-  * All I/O goes through [[IndexFs]] (Hadoop `FileSystem` API, r12), so
-  * index roots and source paths may live on any Hadoop-supported store
-  * (local, HDFS, object stores) — see IndexFs's declared atomicity
-  * scope. The marker itself needs no atomicity: it is written once,
-  * after the build, and a torn read of a half-written marker fails the
-  * fingerprint compare and rebuilds — safe, not wrong.
-  *
-  * The BATCH PROTOCOL of every appendable index (gram postings and their
-  * df sidecar, shingle sets, the bucketed shingle form's sets sidecar and
-  * manifest, the semantic-dedup index) lives here too, one definition
-  * each:
+  *  - marker: after a completed build, `_GRAFT_VALID` in the index root
+  *    holds a FINGERPRINT of the source (file stats of every input file
+  *    — no Spark job; any rewrite of the inputs changes it) plus a small
+  *    payload (ingest counters, model). It is written AFTER the build, so
+  *    a crash mid-build leaves none and the next call rebuilds; a torn
+  *    read fails the compare and rebuilds too. The underscore keeps it
+  *    out of Spark's file index.
+  *  - build or reuse: [[ensure]].
   *  - layout: batch `id` of a root is the subdirectory `batch_<id>`
   *    ([[batchDir]], [[batchIds]]), read back by recursive lookup;
   *  - commit: a batch dir holding `_SUCCESS` ([[committed]]) — Spark's
   *    parquet writer drops it at job commit, and [[commit]] writes it for
   *    a manifest root whose batch data lives elsewhere;
+  *  - append: which sinks of a batch still need writing ([[appendBatch]]);
   *  - auto ids: durable claims under `_claims` ([[claimBatchId]]);
-  *  - compaction: the tmp → delete → rename swap that merges a root's
-  *    batches into one ([[compact]]), the `_COMPACTED` high-water mark
-  *    it leaves ([[compactedThrough]]), and the guard that refuses while
-  *    a batch is committed in one sink of an index but not the other.
+  *  - compaction: the merge of a root's batches into one ([[compact]]),
+  *    the `_COMPACTED` high-water mark it leaves ([[compactedThrough]]),
+  *    the guard that refuses while a batch is committed in one sink of an
+  *    index but not the other, and the directory [[swap]] every
+  *    compaction ends in.
+  *
+  * All I/O goes through [[IndexFs]] (Hadoop `FileSystem` API), so roots
+  * and sources may live on any Hadoop-supported store, within IndexFs's
+  * declared atomicity scope.
   */
 object Standing {
 
@@ -65,55 +50,44 @@ object Standing {
 
   private def marker(root: String) = s"$root/_GRAFT_VALID"
 
-  /** The payload stored by [[markValid]], iff `root` holds a completed
-    * build for exactly this fingerprint; None → caller must (re)build. */
-  def validPayload(root: String, fp: String): Option[String] =
-    IndexFs.readStringOpt(marker(root)).flatMap { text =>
-      val lines = text.split("\n", 2)
-      if (lines.head == fp) Some(if (lines.length > 1) lines(1) else "")
-      else None
-    }
-
   /** The marker's (fingerprint, payload) regardless of fingerprint — for
     * MAINTENANCE operations (incremental appends) that must read the
     * standing model and rewrite its payload under the SAME fingerprint:
     * an append changes the index contents but not the source the
-    * fingerprint guards, so the guard survives and a SOURCE rewrite
-    * still forces the full rebuild. */
+    * fingerprint guards, so a SOURCE rewrite still forces the full
+    * rebuild. */
   def current(root: String): Option[(String, String)] =
     IndexFs.readStringOpt(marker(root)).map { text =>
       val lines = text.split("\n", 2)
       (lines.head, if (lines.length > 1) lines(1) else "")
     }
 
-  /** Remove the validity marker, if any — the first step of a REBUILD
-    * that must also clean derived state (stale append batches): dropping
-    * the marker before deleting anything guarantees no crash window in
-    * which a marker still claims a half-cleaned index valid. */
-  def invalidate(root: String): Unit =
-    IndexFs.delete(marker(root))
-
   /** Record a completed build of `root` for source fingerprint `fp`,
-    * with an optional payload (ingest counters, model sizes) the reuse
-    * path hands back without recomputation. Call ONLY after every sink
-    * of the build is fully written. */
-  def markValid(root: String, fp: String, payload: String = ""): Unit =
+    * with the payload the reuse path hands back. Call ONLY after every
+    * sink of the build is fully written. */
+  def markValid(root: String, fp: String, payload: String): Unit =
     IndexFs.writeString(marker(root), fp + "\n" + payload)
 
-  /** The reuse-or-build scaffold for indexes whose payload is two
-    * counters — one definition instead of a copy per index (r12 review
-    * find: the gram/shingle/bucketed ensures were three identical
-    * match blocks). Runs `build` (which must fully write the index)
-    * only when no valid marker exists, then records its counters. */
-  def ensureCounters(root: String, fp: String)
-                    (build: => (Long, Long)): (Long, Long) =
-    validPayload(root, fp) match {
-      case Some(p) =>
-        val a = p.trim.split(" "); (a(0).toLong, a(1).toLong)
-      case None =>
-        val c = build
-        markValid(root, fp, s"${c._1} ${c._2}")
-        c
+  /** BUILD OR REUSE, the one definition every standing index calls.
+    * When `root`'s marker matches `fp`, returns the stored payload and
+    * runs nothing. Otherwise it drops the marker FIRST (a crash mid-clean
+    * then never leaves one blessing a half-cleaned root), then every
+    * stale batch dir and the claims (appends made under an older source
+    * or model must not survive into the new build), runs `build`, which
+    * must fully write the index and return its payload, and records that
+    * payload. Callers parse the returned payload on both branches, so a
+    * build hands back exactly what a later reuse will. The cleanup lists
+    * one root that is absent or about to be overwritten and starts no
+    * Spark job. */
+  def ensure(root: String, fp: String)(build: => String): String =
+    current(root).collect { case (`fp`, payload) => payload }.getOrElse {
+      IndexFs.delete(marker(root))
+      IndexFs.childNames(root, dirsOnly = true)
+        .filter(n => n.startsWith("batch_") || n == "_claims")
+        .foreach(n => IndexFs.delete(s"$root/$n"))
+      val payload = build
+      markValid(root, fp, payload)
+      payload
     }
 
   // ---- the batch protocol ----
@@ -141,13 +115,29 @@ object Standing {
       .collect { case n if n.startsWith("batch_") =>
         n.stripPrefix("batch_").toLong }
 
-  /** Delete every batch dir and the claims namespace under `root` — the
-    * cleanup a REBUILD owes before it blesses a fresh base (stale appends
-    * must not survive into the new index). Other children stay. */
-  def dropBatches(root: String): Unit =
-    IndexFs.childNames(root, dirsOnly = true)
-      .filter(n => n.startsWith("batch_") || n == "_claims")
-      .foreach(n => IndexFs.delete(s"$root/$n"))
+  /** APPEND batch `id` of an index to those of its `sinks` (each a root
+    * and the write of the batch's rows into it) that still need it — the
+    * one replay rule of every batch-dir index. A sink is skipped when it
+    * already committed `id` ([[committed]]), or when its compaction
+    * absorbed `id` (`id <= compactedThrough(root)`: re-emitting the rows
+    * would count them twice). Each write must be idempotent per id (an
+    * overwrite of the batch's own dir or partition), so a replay after a
+    * crash between two sinks repairs exactly the missing one. `rows` is
+    * persisted once, and only when more than one sink will read it. */
+  def appendBatch(id: Long, rows: DataFrame)
+                 (sinks: (String, DataFrame => Unit)*): Unit = {
+    val todo = sinks.filterNot { case (root, _) =>
+      committed(root, id) || id <= compactedThrough(root) }
+    val shared = todo.size > 1
+    val r = if (shared) rows.persist() else rows
+    try todo.foreach { case (_, write) => write(r) }
+    finally if (shared) { r.unpersist(); () }
+  }
+
+  /** The write of a plain batch sink: `rows` overwrite batch `id`'s dir
+    * under `root`. */
+  def writeBatch(root: String, id: Long): DataFrame => Unit =
+    _.write.mode("overwrite").parquet(batchDir(root, id))
 
   /** Claim the next unused auto batch id of `root` by ATOMIC
     * create-if-absent of a DURABLE marker file under `root/_claims` — a
@@ -189,10 +179,10 @@ object Standing {
       .map(_.trim.toLong).getOrElse(-1L)
 
   /** COMPACTION of `root`: rewrite its batches as ONE batch dir named
-    * after the highest id, then record that id as the `_COMPACTED` mark.
-    * `merged` must read the whole of `root`; it is written to a tmp dir
-    * first, then the root is deleted, recreated and the tmp renamed in.
-    * Keeping the highest id keeps later auto ids ahead.
+    * after the highest id, with that id recorded as the `_COMPACTED`
+    * mark, and [[swap]] it in. `merged` must read the whole of `root`.
+    * Keeping the highest id keeps later auto ids ahead. Nothing else in
+    * `root` survives (its claims never live in a compacted root).
     *
     * `partner` is the index's other sink (or its commit manifest), which
     * every append commits together with `root`. Compaction REFUSES while a
@@ -201,12 +191,8 @@ object Standing {
     * would raise the mark over its id, and the replay's skip would then
     * leave that batch's rows missing from `root` forever. Ids at or below
     * the mark were all absorbed complete, so only ids above it can be
-    * such orphans. A root of ≤ 1 batch is left as it is.
-    *
-    * Not atomic: a crash mid-swap can lose `root`, which is DERIVED state
-    * rebuildable from its source; run compaction in the maintenance
-    * window, never the serving path, and never concurrently with
-    * appends. */
+    * such orphans. A root of ≤ 1 batch is left as it is. Maintenance
+    * window only, never concurrently with appends. */
   def compact(root: String, partner: String)(merged: => DataFrame): Unit = {
     val mark = compactedThrough(root)
     def done(r: String) =
@@ -220,12 +206,28 @@ object Standing {
         " before compacting")
     val ids = batchIds(root)
     if (ids.size <= 1) return
-    val tmp = root + "_compact_tmp"
+    swap(root) { tmp =>
+      merged.write.mode("overwrite").parquet(batchDir(tmp, ids.max))
+      IndexFs.writeString(s"$tmp/_COMPACTED", ids.max.toString)
+    }
+  }
+
+  /** The one directory SWAP every compaction ends in: `write` fills a
+    * fresh tmp dir (reading `root` as it likes), then `root` is renamed
+    * aside, the tmp renamed in, and the old root deleted. Each rename is
+    * atomic on local and HDFS roots (IndexFs's declared scope), so a
+    * crash leaves either the old root or the new one in place, except
+    * between the two renames, where it leaves NO root: safe, not lossy,
+    * because every index is DERIVED state and the next ensure finds no
+    * marker and rebuilds from its source. */
+  def swap(root: String)(write: String => Unit): Unit = {
+    val (tmp, old) = (root + "_compact_tmp", root + "_replaced")
     Scratch.track(tmp)
-    merged.write.mode("overwrite").parquet(tmp)
-    IndexFs.delete(root)
-    IndexFs.mkdirs(root)
-    IndexFs.rename(tmp, batchDir(root, ids.max))
-    IndexFs.writeString(s"$root/_COMPACTED", ids.max.toString)
+    IndexFs.delete(tmp)
+    IndexFs.delete(old)
+    write(tmp)
+    IndexFs.rename(root, old)
+    IndexFs.rename(tmp, root)
+    IndexFs.delete(old)
   }
 }

@@ -127,32 +127,27 @@ object IvfPq {
     // mode is the full configuration surface of this ingest.
     val fp = graft.ops.Standing.fingerprint(s"$d/embeddings.parquet") +
       s":k=$nClusters" + (if (residual) ":res" else "")
-    graft.ops.Standing.validPayload(root, fp) match {
-      case Some(p) =>
-        val (cents, books, n, _, _) = parse(p)
-        (cents, books, n, root)
-      case None =>
-        val emb = Tables.embeddings(spark, d)
-        val n = emb.count()
-        val par = spark.sparkContext.defaultParallelism
-        val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
-        val cents = Similarity.trainCentroids(emb, nClusters)
-        val embP = if (fanout > 0) emb.repartition(fanout) else emb
-        val assigned = Similarity.assignClusters(embP, cents)
-        // residual mode (classic IVFADC, Jégou et al. §V): codebooks
-        // train on and codes quantize r = x − centroid(cluster(x)) — the
-        // residual's dynamic range shrinks with cluster tightness, which
-        // is exactly when the same M bytes buy more recall
-        val toCode = if (residual) residualized(assigned, cents) else assigned
-        val books = Pq.trainCodebooks(
-          if (residual) toCode else emb, fanout = fanout)
-        Pq.encode(toCode, books)
-          .select("vec_id", "cluster", "codes")
-          .write.partitionBy("cluster").mode("overwrite").parquet(root)
-        graft.ops.Standing.markValid(root, fp,
-          payload(cents, books, n, residual, trainedN = n))
-        (cents, books, n, root)
-    }
+    val (cents, books, n, _, _) = parse(graft.ops.Standing.ensure(root, fp) {
+      val emb = Tables.embeddings(spark, d)
+      val n = emb.count()
+      val par = spark.sparkContext.defaultParallelism
+      val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
+      val cents = Similarity.trainCentroids(emb, nClusters)
+      val embP = if (fanout > 0) emb.repartition(fanout) else emb
+      val assigned = Similarity.assignClusters(embP, cents)
+      // residual mode (classic IVFADC, Jégou et al. §V): codebooks train
+      // on and codes quantize r = x − centroid(cluster(x)) — the
+      // residual's dynamic range shrinks with cluster tightness, which is
+      // exactly when the same M bytes buy more recall
+      val toCode = if (residual) residualized(assigned, cents) else assigned
+      val books = Pq.trainCodebooks(
+        if (residual) toCode else emb, fanout = fanout)
+      Pq.encode(toCode, books)
+        .select("vec_id", "cluster", "codes")
+        .write.partitionBy("cluster").mode("overwrite").parquet(root)
+      payload(cents, books, n, residual, trainedN = n)
+    })
+    (cents, books, n, root)
   }
 
   /** The standing codes table's schema as [[ivfPqIngest]] and
@@ -180,115 +175,71 @@ object IvfPq {
         (x, c) => x - c))
   }
 
-  /** INCREMENTAL append — the parity the gram/shingle indexes already
-    * have (r10 verdict item): encode NEW vectors with the STANDING model
-    * (centroids + codebooks read from the validity marker's payload — no
-    * retrain, no job over the existing corpus) and append their codes
-    * into the same cluster-partitioned layout. Every consumer
-    * ([[ivfPqTopKBatch]], the partition pruning) is
-    * unchanged, and a rebuild with the SAME model over the grown corpus
-    * produces the identical codes table (SimilaritySpec pins the
-    * multiset). The marker payload is rewritten with the grown corpus
-    * size — shortlist sizing tracks appends — under the SAME source
-    * fingerprint, so a rewrite of the source embeddings still forces a
-    * full retrain on the next ingest (the source of truth wins).
+  /** INCREMENTAL append (r10 verdict item): encode NEW vectors with the
+    * STANDING model (centroids + codebooks from the marker's payload — no
+    * retrain) and append their codes into the same cluster-partitioned
+    * layout; consumers are unchanged, and the result equals a rebuild
+    * with the same model over the grown corpus (SimilaritySpec pins the
+    * multiset). The payload is re-marked with the grown corpus size under
+    * the SAME source fingerprint, so a source rewrite still forces a full
+    * retrain on the next ingest.
     *
-    * MODEL DRIFT, the honest limit (Jégou et al. §V; FAISS operational
-    * practice): the model quantizes the distribution it was trained on.
-    * Appends from that distribution cost nothing — ADC error and
-    * cluster balance are distribution properties, not corpus-size
-    * properties. Drifted appends degrade two WATCHED metrics: cluster
-    * imbalance (probe scans grow past n·nprobe/k — the in-plan
-    * scanned_rows counter) and ADC recall (the q126/q129 contract
-    * floors). Retrain via a fresh [[ivfPqIngest]] when appended mass
-    * exceeds ~25% of the corpus or either metric leaves its band.
-    * NOT replay-idempotent: the partitionBy(cluster) layout has no
-    * per-batch subdirectory (one would break partition discovery), so a
-    * replaying caller (streaming) must dedupe upstream by vec_id. */
+    * REPLAY-SAFE by presence, not arrival order (r11 verdict task #4):
+    * `partitionBy(cluster)` leaves no per-batch dir to commit (one would
+    * break partition discovery), and codes are order-independent, so only
+    * batch rows whose `vec_id` is not already standing are appended (an
+    * anti join against the vec_id column, inside the write's job). A
+    * committed append's rows anti-join away, a crashed job's re-append
+    * whole, and a torn job commit (the v1 committer moves task dirs one
+    * by one) re-appends exactly the missing rows. The payload's corpus
+    * count is recomputed from data, so a replay also heals a count left
+    * stale by a crash between a data commit and its marker update.
+    * `vec_id` is the row's identity: two vectors under one id are
+    * upstream corruption.
+    *
+    * MODEL DRIFT (Jégou et al. §V; FAISS practice): appends from the
+    * trained distribution cost nothing, drifted ones degrade cluster
+    * balance (the scanned_rows counter) and ADC recall (the q126/q129
+    * floors). An append that takes the appended mass past
+    * [[graft.Tuning.IvfPqRetrainFraction]] warns on stderr; retrain via a
+    * fresh [[ivfPqIngest]]. Returns (centroids, codebooks, corpus size). */
   def ivfPqAppend(newEmb: DataFrame, root: String)
       : (Array[Array[Float]], Pq.Codebooks, Long) = {
+    val spark = newEmb.sparkSession
     val (fp, p) = graft.ops.Standing.current(root).getOrElse(sys.error(
       s"ivfPqAppend: no standing IVF-PQ index at $root — run ivfPqIngest" +
         " first (appends extend a trained model; they never train one)"))
     val (cents, books, n, residual, trainedN) = parse(p)
-    val delta = newEmb.count()
-    val assigned = Similarity.assignClusters(newEmb, cents)
+    // the standing size straight from data; a count reads no column, so
+    // its scan touches row-group metadata, not the codes
+    val standingN = ivfPqCodes(spark, root).count()
+    val missing = newEmb
+      .join(ivfPqCodes(spark, root).select("vec_id"), Seq("vec_id"),
+        "left_anti")
+      .observe("ivfpq_append", count(lit(1)).as("rows"))
+    val assigned = Similarity.assignClusters(missing, cents)
     // encode exactly as the standing index does — mode from the payload
     val toCode = if (residual) residualized(assigned, cents) else assigned
-    Pq.encode(toCode, books)
-      .select("vec_id", "cluster", "codes")
-      .write.partitionBy("cluster").mode("append").parquet(root)
-    graft.ops.Standing.markValid(root, fp,
-      payload(cents, books, n + delta, residual, trainedN))
-    // the drift contract, checked where drift is CREATED: warn loudly
-    // at the crossing so unattended append pipelines surface the
-    // retrain need without a metrics scrape ([[ivfPqDrift]] is the
-    // programmatic twin for callers automating the retrain)
-    val frac =
-      if (trainedN <= 0) 0.0 else (n + delta - trainedN).toDouble / trainedN
-    if (frac > graft.Tuning.IvfPqRetrainFraction)
-      System.err.println(f"WARN ivfPqAppend: appended mass $frac%.2f of " +
-        f"the trained corpus exceeds ${graft.Tuning.IvfPqRetrainFraction}" +
-        f" — the PQ/IVF model quantizes a drifted distribution; retrain" +
-        f" via ivfPqIngest (root=$root)")
-    (cents, books, n + delta)
-  }
-
-  /** REPLAY-SAFE append — the streaming twin's building block (r11
-    * verdict task #4). [[ivfPqAppend]] is NOT replay-idempotent: the
-    * `partitionBy(cluster)` layout has no per-batch subdirectory (one
-    * would break partition discovery), so a replayed micro-batch would
-    * double-append its codes. Codes are ORDER-INDEPENDENT, so the exact
-    * dedup mechanism is presence, not arrival order: append only the
-    * batch rows whose `vec_id` is not already in the standing index
-    * (anti join against the codes table's pruned vec_id column — 8
-    * bytes × corpus, the batch side broadcast-small). Every crash point
-    * replays to exactly-once: a committed append's rows anti-join away;
-    * a crashed job's rows are invisible (task output moves at job
-    * commit) and re-append whole; even a torn job commit (the v1
-    * committer moves task dirs sequentially — a crash mid-commit can
-    * expose SOME tasks' files) re-appends exactly the missing rows.
-    * A replay that reaches the no-op path also self-heals the payload's
-    * corpus count if a crash landed between a data commit and its
-    * marker update (the semDeDup "stats recomputed from data"
-    * discipline). The upstream contract is the same as every index
-    * here: `vec_id` is the row's identity — two different vectors under
-    * one id are upstream corruption no dedup can repair.
-    * Returns the updated (centroids, codebooks, corpus size). */
-  def ivfPqAppendDedup(newEmb: DataFrame, root: String)
-      : (Array[Array[Float]], Pq.Codebooks, Long) = {
-    val spark = newEmb.sparkSession
-    val (fp, p) = graft.ops.Standing.current(root).getOrElse(sys.error(
-      s"ivfPqAppendDedup: no standing IVF-PQ index at $root — run" +
-        " ivfPqIngest first (appends extend a trained model)"))
-    val (cents, books, n, residual, trainedN) = parse(p)
-    // True standing size, straight from data — but NOT as its own
-    // count() scan: at the documented 10^11-vector target that second
-    // O(corpus) pass per trigger doubles the maintenance read volume
-    // (r12 advisor find). The anti join below already streams every
-    // standing vec_id through its build side exactly once, so an
-    // in-plan observe node rides that same pass for free; the metric
-    // lands when `missing.count()` executes the join.
-    val obs = new org.apache.spark.sql.Observation()
-    val standingIds = ivfPqCodes(spark, root).select("vec_id")
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("standing_n"))
-    val missing = newEmb.join(standingIds, Seq("vec_id"), "left_anti")
-      .persist() // read by the append's count AND its encode+write
-    try {
-      val missN = missing.count()
-      val actual = obs.get("standing_n").asInstanceOf[Long]
-      val trueN = actual + missN
-      if (missN > 0L) ivfPqAppend(missing, root)
-      // the payload count is recomputed FROM DATA, never trusted from
-      // arithmetic over the prior payload (which goes stale if a crash
-      // landed between a data commit and its markValid): re-mark
-      // whenever the healed total differs from what the marker now says
-      if (trueN != (if (missN > 0L) n + missN else n))
-        graft.ops.Standing.markValid(root, fp,
-          payload(cents, books, trueN, residual, trainedN))
-      (cents, books, trueN)
-    } finally { missing.unpersist(); () }
+    // the appended count rides the write, above the anti join: Spark may
+    // drop the join (and an observation under it) when no standing id
+    // can match
+    val missN = org.apache.spark.sql.GraftBridge.observedFromAction(
+      spark, "ivfpq_append") {
+      Pq.encode(toCode, books).select("vec_id", "cluster", "codes")
+        .write.partitionBy("cluster").mode("append").parquet(root)
+    }.getLong(0)
+    val trueN = standingN + missN
+    if (trueN != n) // grown, or a stale count healed
+      graft.ops.Standing.markValid(root, fp,
+        payload(cents, books, trueN, residual, trainedN))
+    // the drift contract, checked where drift is CREATED
+    val (frac, over) = ivfPqDrift(root)
+    if (missN > 0L && over)
+      System.err.println(f"WARN ivfPqAppend: appended mass $frac%.2f of" +
+        s" the trained corpus exceeds ${graft.Tuning.IvfPqRetrainFraction}" +
+        " — the PQ/IVF model quantizes a drifted distribution; retrain" +
+        s" via ivfPqIngest (root=$root)")
+    (cents, books, trueN)
   }
 
   /** MAINTENANCE: rewrite the codes table to one file per cluster
@@ -304,31 +255,18 @@ object IvfPq {
     * fingerprint + payload — the model, corpus size, and code mode are
     * untouched; this is a file-layout operation, invisible to every
     * query (SimilaritySpec pins post-compact top-k row-identical and
-    * the per-cluster file count at 1).
-    *
-    * Crash window: the old root is moved aside before the rewrite moves
-    * in, so a crash between the two renames leaves NO standing index —
-    * which is safe, not lossy: the codes are DERIVED state, and the
-    * next `ivfPqIngest` call sees no validity marker and rebuilds from
-    * the source embeddings. Maintenance-window only, like every compact
-    * in this library (single writer; appends must not race it). */
+    * the per-cluster file count at 1). The directory swap and its crash
+    * window are [[graft.ops.Standing.swap]]'s (on object stores prefer
+    * rebuilding over compacting). Maintenance-window only, like every
+    * compact in this library (single writer; appends must not race it). */
   def ivfPqCompact(spark: SparkSession, root: String): Unit = {
     val (fp, p) = graft.ops.Standing.current(root).getOrElse(sys.error(
       s"ivfPqCompact: no standing IVF-PQ index at $root — nothing to" +
         " compact (run ivfPqIngest first)"))
     val (cents, _, _, _, _) = parse(p)
-    val tmp = root + "_compact_tmp"
-    val old = root + "_compact_old"
-    graft.ops.IndexFs.delete(tmp)
-    graft.ops.IndexFs.delete(old)
-    ivfPqCodes(spark, root)
+    graft.ops.Standing.swap(root)(tmp => ivfPqCodes(spark, root)
       .repartition(cents.length, col("cluster"))
-      .write.partitionBy("cluster").mode("overwrite").parquet(tmp)
-    // two renames (atomic on local/HDFS — IndexFs's declared scope; on
-    // object stores prefer rebuilding over compacting)
-    graft.ops.IndexFs.rename(root, old)
-    graft.ops.IndexFs.rename(tmp, root)
-    graft.ops.IndexFs.delete(old)
+      .write.partitionBy("cluster").mode("overwrite").parquet(tmp))
     graft.ops.Standing.markValid(root, fp, p)
   }
 
@@ -356,9 +294,9 @@ object IvfPq {
     * rides in (SimilaritySpec pins batch == each query run as a batch of
     * one, row-for-row). The scan reads nprobe/k of the codes per query —
     * at 10^11 vectors that ratio times M bytes is the whole query cost.
-    * `corpusSize < 0` resolves from the FULL index (never the pruned
-    * scan's count), so the default shortlist matches the explicit-size
-    * plan. Shuffle
+    * `corpusSize < 0` resolves once, from the FULL index (never the
+    * pruned scan's count), so the default shortlist matches the
+    * explicit-size plan. Shuffle
     * after the scan is O(Q × k·refine) TopKByScore buffers; the exact
     * re-rank touches only shortlist vectors. Chunked at
     * [[graft.Tuning.IvfPqBatchMaxQ]] (its OWN ceiling since r12: the
@@ -384,25 +322,27 @@ object IvfPq {
                      residual: Boolean = false): DataFrame = {
     require(queryIds.nonEmpty, "ivfPqTopKBatch: empty query batch")
     require(maxChunk > 0, "ivfPqTopKBatch: maxChunk must be positive")
+    val refine2 =
+      if (refine > 0) refine
+      else Pq.proportionalShortlist(
+        if (corpusSize >= 0L) corpusSize
+        else ivfPqCodes(spark, root).count())
     if (queryIds.distinct.size > maxChunk) {
       val qIds = queryIds.distinct.sorted
-      val n = if (corpusSize >= 0L) corpusSize
-        else ivfPqCodes(spark, root).count()
       val qVecs = Pq.collectQueryVecs(emb, qIds)
       val probes = qIds.map(id =>
         id -> probeClusters(cents, qVecs(id), nprobe)).toMap
       return chunkByProbeOverlap(qIds, probes, maxChunk).zipWithIndex
         .map { case (chunk, i) =>
           ivfPqBatchOne(spark, root, emb, cents, books, chunk, k, nprobe,
-            n, refine, observeName = s"ivfpq_batch_c$i", qVecs0 = qVecs,
+            refine2, observeName = s"ivfpq_batch_c$i", qVecs0 = qVecs,
             residual = residual)
         }
         .reduce(_ unionByName _)
         .orderBy("q_id", "rk")
     }
     ivfPqBatchOne(spark, root, emb, cents, books, queryIds, k, nprobe,
-      corpusSize, refine, observeName = "ivfpq_batch",
-      residual = residual)
+      refine2, observeName = "ivfpq_batch", residual = residual)
   }
 
   /** Greedy min-union chunking: seed each chunk with the lowest
@@ -436,8 +376,8 @@ object IvfPq {
   private def ivfPqBatchOne(spark: SparkSession, root: String,
                             emb: DataFrame, cents: Array[Array[Float]],
                             books: Pq.Codebooks, queryIds: Seq[Long],
-                            k: Int, nprobe: Int, corpusSize: Long,
-                            refine: Int, observeName: String,
+                            k: Int, nprobe: Int, refine2: Int,
+                            observeName: String,
                             qVecs0: Map[Long, Array[Float]] = null,
                             residual: Boolean = false): DataFrame = {
     val qIds = queryIds.distinct.sorted
@@ -445,11 +385,6 @@ object IvfPq {
     val probes: Seq[Seq[Int]] =
       qIds.map(id => probeClusters(cents, qVecs(id), nprobe))
     val unionClusters = probes.flatten.distinct.sorted
-    val refine2 =
-      if (refine > 0) refine
-      else Pq.proportionalShortlist(
-        if (corpusSize >= 0L) corpusSize
-        else ivfPqCodes(spark, root).count())
     val scanned = ivfPqCodes(spark, root)
       .filter(col("cluster").isInCollection(unionClusters))
       .select("vec_id", "cluster", "codes")

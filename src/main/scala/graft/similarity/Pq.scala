@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
   *
   *   - split each d-dim vector into M subvectors of d/M dims;
   *   - learn an independent K-centroid codebook per subspace (sampled
-  *     Lloyd's iterations, the [[Similarity.trainCentroids]] discipline);
+  *     Lloyd's iterations in floating point, [[trainCodebooks]]);
   *   - store each vector as M small codes (here M=16, K=16 → 16 nibbles vs
   *     64 float32s: a 32× compression of the scan payload);
   *   - answer queries by ADC (asymmetric distance computation): a query
@@ -456,22 +456,18 @@ object Pq {
     val root =
       if (root0 != null) root0 else graft.ops.Scratch.root(spark, d, "pq_codes")
     val fp = graft.ops.Standing.fingerprint(s"$d/embeddings.parquet")
-    graft.ops.Standing.validPayload(root, fp) match {
-      case Some(payload) =>
-        val (books, n) = parseModel(payload)
-        (books, n, root)
-      case None =>
-        val emb = Tables.embeddings(spark, d)
-        val n = emb.count()
-        val par = emb.sparkSession.sparkContext.defaultParallelism
-        val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
-        val books = trainCodebooks(emb, fanout = fanout)
-        val embP = if (fanout > 0) emb.repartition(fanout) else emb
-        encode(embP, books).select("vec_id", "codes")
-          .write.mode("overwrite").parquet(root)
-        graft.ops.Standing.markValid(root, fp, modelPayload(books, n))
-        (books, n, root)
-    }
+    val (books, n) = parseModel(graft.ops.Standing.ensure(root, fp) {
+      val emb = Tables.embeddings(spark, d)
+      val n = emb.count()
+      val par = emb.sparkSession.sparkContext.defaultParallelism
+      val fanout = if (n >= graft.Tuning.PqFanoutGateVectors) par else 0
+      val books = trainCodebooks(emb, fanout = fanout)
+      val embP = if (fanout > 0) emb.repartition(fanout) else emb
+      encode(embP, books).select("vec_id", "codes")
+        .write.mode("overwrite").parquet(root)
+      modelPayload(books, n)
+    })
+    (books, n, root)
   }
 
   /** The standing codes table's schema as [[pqIngest]] writes it and

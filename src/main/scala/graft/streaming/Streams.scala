@@ -389,7 +389,7 @@ object Streams {
     * never more than one trigger stale. The codes layout has no
     * per-batch subdirectory (it would break partition-discovery
     * pruning), so exactly-once under checkpoint replay comes from
-    * [[graft.similarity.IvfPq.ivfPqAppendDedup]]'s presence dedup
+    * [[graft.similarity.IvfPq.ivfPqAppend]]'s presence dedup
     * instead of the batch-dir protocol: only rows whose vec_id is not
     * already standing are appended, which replays every crash point —
     * including a torn job commit — to the one-shot result.
@@ -401,7 +401,7 @@ object Streams {
     emb.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.IvfPq.ivfPqAppendDedup(batch, root)
+        graft.similarity.IvfPq.ivfPqAppend(batch, root)
         ()
       }
       .start()

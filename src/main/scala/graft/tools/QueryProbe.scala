@@ -9,11 +9,15 @@ import org.apache.spark.sql.GraftBridge
   * once warm + once timed, printing per-query seconds PLUS the task-metric
   * totals that actually pin a query's scale behavior — shuffle read/write
   * bytes, spill, and input bytes — and one wall/cpu/gc/tasks line per
-  * stage. Wall time on a shared box swings ±2.5×
-  * (BENCHMARKS.md), but shuffle BYTES are deterministic for a fixed plan
-  * and dataset, so "does work grow linearly in sf?" is answered here, not
-  * by the clock. The rig for isolating one query's regression or scaling
-  * law without paying a full Bench pass.
+  * stage. Wall time on a shared box swings ±2.5× (BENCHMARKS.md); shuffle
+  * bytes and task counts move far less, so "does work grow linearly in
+  * sf?" is answered here, not by the clock. They are NOT exactly
+  * deterministic for every plan: at sf0.1, 4 cores, three probe JVMs of
+  * one commit read q128's warm shuffle write as 25,561,718 / 25,562,928 /
+  * 25,565,508 bytes with 143/141/143 tasks, and q73's as 2,700,369 /
+  * 2,700,249 / 2,700,242 bytes, so compare them with a tolerance. The
+  * rig for isolating one query's regression or scaling law without
+  * paying a full Bench pass.
   *
   * Usage: runMain graft.tools.QueryProbe <sfDir> q108_bpe_train[,q112...] [reps]
   */

@@ -256,10 +256,10 @@ class DedupSpec extends SparkSpec {
     val before = Scratch.root(spark, sf, "gen_spec")
     val fp = Standing.fingerprint(s"$sf/documents.parquet")
     var builds = 0
-    assert(Standing.ensureCounters(before, fp) { builds += 1; (1L, 2L) } ==
-      ((1L, 2L)) && builds == 1, "first ensure must build")
-    assert(Standing.ensureCounters(before, fp) { builds += 1; (9L, 9L) } ==
-      ((1L, 2L)) && builds == 1, "same root + fp must reuse, not rebuild")
+    assert(Standing.ensure(before, fp) { builds += 1; "1 2" } == "1 2" &&
+      builds == 1, "first ensure must build")
+    assert(Standing.ensure(before, fp) { builds += 1; "9 9" } == "1 2" &&
+      builds == 1, "same root + fp must reuse, not rebuild")
     Scratch.bumpGeneration()
     val after = Scratch.root(spark, sf, "gen_spec")
     assert(after != before,
@@ -267,8 +267,8 @@ class DedupSpec extends SparkSpec {
         "would time the marker reuse no-op, not the build)")
     assert(after == Scratch.root(spark, sf, "gen_spec"),
       "the new generation's root must itself be stable")
-    assert(Standing.ensureCounters(after, fp) { builds += 1; (3L, 4L) } ==
-      ((3L, 4L)) && builds == 2,
+    assert(Standing.ensure(after, fp) { builds += 1; "3 4" } == "3 4" &&
+      builds == 2,
       "the fresh-generation root must REBUILD (no marker there)")
   }
 

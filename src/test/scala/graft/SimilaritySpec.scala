@@ -442,7 +442,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF-PQ standing marker covers the model hyperparameters: a " +
        "different nClusters rebuilds instead of reusing a stale index; " +
        "default corpusSize matches the explicit-size plan") {
-    import graft.similarity.IvfPq
+    import graft.similarity.{IvfPq, Pq}
     val root = java.nio.file.Files.createTempDirectory("ivfpq_fp_spec")
       .toString + "/idx"
     val (c16, _, n, _) = IvfPq.ivfPqIngest(spark, sf, root, nClusters = 16)
@@ -459,13 +459,24 @@ class SimilaritySpec extends SparkSpec {
     assert(c8b.flatten.map(java.lang.Float.floatToRawIntBits).toSeq ==
       c8.flatten.map(java.lang.Float.floatToRawIntBits).toSeq)
     // default corpusSize resolves to the FULL index size (not the pruned
-    // scan's count): the default-args plan must equal the explicit-size
-    // one row-for-row
+    // scan's count). The shortlist is flat below 20,000 vectors, so grow
+    // the index past 40,000 with id-shifted copies: there the full index
+    // and a 4-of-8-cluster probe size different shortlists
     val emb = Tables.embeddings(spark, sf)
-    def got(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val explicit = got(IvfPq.ivfPqTopKBatch(spark, root, emb, c8, b8,
-      Seq(0L), k = 10, nprobe = 4, corpusSize = n8))
-    val defaulted = got(IvfPq.ivfPqTopKBatch(spark, root, emb, c8, b8,
+    val shift = emb.agg(org.apache.spark.sql.functions.max("vec_id"))
+      .head.getLong(0) + 1L
+    val grown = emb.crossJoin(spark.range(1L, 40000L / n8 + 2L).toDF("c"))
+      .withColumn("vec_id", col("vec_id") + col("c") * shift).drop("c")
+    val (_, _, nGrown) = IvfPq.ivfPqAppend(grown, root)
+    assert(nGrown > 40000L)
+    val all = emb.unionByName(grown)
+    // the rows and the shortlist size the plan observed
+    def got(df: org.apache.spark.sql.DataFrame) = (df.collect().toSeq,
+      df.queryExecution.observedMetrics("ivfpq_batch_pq").getLong(0))
+    val explicit = got(IvfPq.ivfPqTopKBatch(spark, root, all, c8, b8,
+      Seq(0L), k = 10, nprobe = 4, corpusSize = nGrown))
+    assert(explicit._2 == 10L * Pq.proportionalShortlist(nGrown))
+    val defaulted = got(IvfPq.ivfPqTopKBatch(spark, root, all, c8, b8,
       Seq(0L), k = 10, nprobe = 4))
     assert(defaulted == explicit,
       "default corpusSize must size the shortlist from the full corpus")
@@ -1017,7 +1028,7 @@ class SimilaritySpec extends SparkSpec {
       "≤base corpus must resolve the derived dial to the portable floor")
   }
 
-  test("ivfPqAppendDedup: presence-keyed exactly-once — a torn batch " +
+  test("ivfPqAppend: presence-keyed exactly-once — a torn batch " +
        "re-appends only its missing rows, a replay no-ops, the payload " +
        "count heals from data") {
     val emb = Tables.embeddings(spark, sf)
@@ -1036,14 +1047,14 @@ class SimilaritySpec extends SparkSpec {
     IvfPq.ivfPqAppend(batch.filter(col("vec_id") < q3), root)
     // the replay delivers the WHOLE batch — presence dedup must append
     // exactly the missing tail, landing on the twin row-for-row
-    val (_, _, n1) = IvfPq.ivfPqAppendDedup(batch, root)
+    val (_, _, n1) = IvfPq.ivfPqAppend(batch, root)
     def codes(r: String) = spark.read.parquet(r)
       .collect().map(_.toString).sorted.toSeq
     assert(codes(root) == codes(rootRef),
       "torn-batch replay must re-append exactly the missing rows")
     assert(n1 == ids.length.toLong, "healed corpus count")
     // a second full replay is a pure no-op
-    val (_, _, n2) = IvfPq.ivfPqAppendDedup(batch, root)
+    val (_, _, n2) = IvfPq.ivfPqAppend(batch, root)
     assert(n2 == n1 && codes(root) == codes(rootRef), "replay no-op")
     // payload heal: corrupt the count (a crash between a data commit and
     // its markValid leaves exactly this), then a no-op replay repairs it
@@ -1051,7 +1062,7 @@ class SimilaritySpec extends SparkSpec {
     val lines = p.split("\n")
     graft.ops.Standing.markValid(root, fp,
       (Seq("1") ++ lines.tail).mkString("\n"))
-    val (_, _, n3) = IvfPq.ivfPqAppendDedup(batch, root)
+    val (_, _, n3) = IvfPq.ivfPqAppend(batch, root)
     assert(n3 == ids.length.toLong,
       "stale payload count must heal from the data")
     assert(graft.ops.Standing.current(root).get._2.split("\n")(0).toLong ==

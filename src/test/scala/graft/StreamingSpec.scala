@@ -865,8 +865,8 @@ class StreamingSpec extends SparkSpec {
       "stream-built codes must equal the batch-append twin row-for-row")
     // replay: a fresh stream over the SAME files and checkpoint has no
     // new data; and even a forced re-delivery appends nothing, because
-    // the dedup append is presence-keyed
-    val (_, _, nBefore) = IvfPq.ivfPqAppendDedup(rest, rootS)
+    // the append is presence-keyed
+    val (_, _, nBefore) = IvfPq.ivfPqAppend(rest, rootS)
     assert(codes(rootS) == codes(rootB) && nBefore == ids.length.toLong,
       "re-delivered batch must be a no-op (presence dedup)")
   }
